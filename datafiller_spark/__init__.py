@@ -8,8 +8,8 @@ Architecture (Spark-first, not a port):
   pre-tokenized sequence table ``(doc_id, tokens, n_tok, source)``.
 - ``operators`` — DataFrame-level operators: time bucketing, tier rollup
   cascade (raw→1m→1h→1d), grid regularization, Spark-native gap fill
-  (ffill/bfill/linear/small-gap), grouped ridge imputation via
-  ``applyInPandas``, Gorilla/delta-of-delta codecs, dedup, similarity,
+  (ffill/bfill/linear/small-gap), per-series ridge imputation on one
+  ``mapInPandas`` runner, Gorilla/delta-of-delta codecs, dedup, similarity,
   text analysis.
 - ``kernels``   — pure-NumPy/pandas ports of the reference imputation
   math (FastRidge, lag matrices, optimask, multivariate/time-series

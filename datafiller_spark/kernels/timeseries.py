@@ -14,8 +14,8 @@ Pure NumPy/pandas re-expression of the reference's numeric path
    ``before``/``after`` time predicates;
 6. project back to the original column layout.
 
-This kernel is what runs per (series-group) inside the engine's
-``applyInPandas`` gap-fill operator.
+This kernel is what runs once per series inside the engine's gap-fill
+operators (the per-series runner, ``operators/_series.py``).
 """
 
 from __future__ import annotations

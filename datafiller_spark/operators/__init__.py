@@ -1,7 +1,7 @@
 from .rollup import rollup, cascade, TIERS, tier_interval
 from .bucket import time_bucket, regular_grid
 from .gapfill import forward_fill, backward_fill, linear_fill, fill_small_gaps, spline_fill
-from .impute import model_gapfill, model_gapfill_encode, cascade_gapfill_encode_all, gapfill_metrics
+from .impute import model_gapfill, cascade_gapfill_encode_all, gapfill_metrics
 from .encode import encode_tier, decode_tier
 from .text import tokenize_counts, quality_score, lang_id, fingerprint, token_count
 from .dedup import (
@@ -40,7 +40,6 @@ __all__ = [
     "fill_small_gaps",
     "spline_fill",
     "model_gapfill",
-    "model_gapfill_encode",
     "cascade_gapfill_encode_all",
     "gapfill_metrics",
     "encode_tier",

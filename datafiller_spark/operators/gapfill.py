@@ -133,15 +133,16 @@ def spline_fill(
 
     Unlike the window-function fills above, a spline needs the whole
     series (the tridiagonal solve couples every observed point), so it
-    runs as one ``applyInPandas`` kernel per key group — same shape and
-    determinism guarantees as the ridge fill in ``impute.py`` (rows
-    sorted by bucket inside the kernel). ``max_gap`` restricts filling
-    to NaN runs of at most that many buckets.
+    runs on the per-series runner (``_series._per_series``) — same shape
+    and determinism guarantees as the ridge fill in ``impute.py`` (every
+    series arrives whole and sorted by bucket). ``max_gap`` restricts
+    filling to NaN runs of at most that many buckets.
     """
     import pandas as pd
     from pyspark.sql.types import StructType
 
     from ..kernels.spline import spline_interpolate
+    from ._series import _per_series
 
     keys = list(key_cols)
     out_name = out_col or value_col
@@ -151,15 +152,10 @@ def spline_fill(
     out_schema.add(df.schema[bucket_col])
     out_schema.add(out_name, "double")
 
-    def fill_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(bucket_col)
-        filled = spline_interpolate(
-            pdf[value_col].astype("float64").reset_index(drop=True), max_gap=max_gap
-        )
-        out = pdf[[*keys, bucket_col]].reset_index(drop=True)
-        out[out_name] = filled
-        return out
+    def fill_series(key_values: dict, series: pd.DataFrame) -> pd.DataFrame:
+        filled = spline_interpolate(series[value_col].astype("float64"), max_gap=max_gap)
+        return series[[*keys, bucket_col]].assign(**{out_name: filled})
 
-    return df.select(*keys, bucket_col, value_col).groupBy(*keys).applyInPandas(
-        fill_group, schema=out_schema
+    return _per_series(
+        df.select(*keys, bucket_col, value_col), keys, bucket_col, fill_series, out_schema
     )

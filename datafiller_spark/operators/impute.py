@@ -2,27 +2,32 @@
 
 ``model_gapfill`` runs the full TimeSeriesImputer recipe (grid
 regularization → small-gap linear interpolation → lag/calendar ridge
-imputation → mean fallback) per series group via ``applyInPandas`` —
-one Arrow batch per key group, NumPy math inside, no per-row Python.
+imputation → mean fallback) once per series on the per-series runner
+(``_series._per_series``) — partition-sized Arrow batches, NumPy math
+inside, no per-row Python.
 
-Determinism at scale: rows are sorted by bucket *inside* the kernel, so
-the result is independent of Spark partitioning and Arrow batch order;
-all order-sensitive float math happens on that sorted frame. This is
-the property that keeps tiers reproducible when the same job runs at N
-and 4N executors.
+Determinism at scale: the runner hands every series over whole and
+sorted by bucket, so the result is independent of Spark partitioning
+and Arrow batch order; all order-sensitive float math happens on that
+sorted frame. This is the property that keeps tiers reproducible when
+the same job runs at N and 4N executors.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..exceptions import EngineError
-from ..kernels.timeseries import TimeSeriesImputer
+from ._series import _impute, _per_series
+from .encode import _encode_chunks
+
+
+def _series_frame(series: pd.DataFrame, bucket_col: str, values: list[str]) -> pd.DataFrame:
+    return series[[bucket_col] + values].set_index(bucket_col).astype("float64")
 
 
 def model_gapfill(
@@ -59,15 +64,10 @@ def model_gapfill(
 
     lags_list = [int(x) for x in lags]
 
-    def fill_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key_values = {k: pdf[k].iloc[0] for k in keys}
-        frame = (
-            pdf[[bucket_col] + values]
-            .sort_values(bucket_col)
-            .set_index(bucket_col)
-            .astype("float64")
-        )
-        imputer = TimeSeriesImputer(
+    def fill_series(key_values: dict, series: pd.DataFrame) -> pd.DataFrame:
+        filled, _ = _impute(
+            _series_frame(series, bucket_col, values),
+            n_nearest_features=n_nearest_features,
             lags=lags_list,
             regressor=regressor_factory() if regressor_factory is not None else None,
             min_samples_train=min_samples_train,
@@ -75,21 +75,11 @@ def model_gapfill(
             add_time_features=add_time_features,
             use_gram=use_gram,
         )
-        try:
-            filled = imputer(frame, n_nearest_features=n_nearest_features)
-        except EngineError:
-            # A group too short for frequency inference (or a single row)
-            # passes through unfilled rather than failing the stage.
-            # Only the engine's own validation errors are expected here;
-            # anything else is a genuine kernel bug and must propagate.
-            filled = frame
-        out = filled.reset_index().rename(columns={"index": bucket_col})
-        for k, v in key_values.items():
-            out[k] = v
-        return out[[*keys, bucket_col, *values]]
+        out = filled.rename_axis(bucket_col).reset_index()
+        return out.assign(**key_values)
 
-    return df.select(*keys, bucket_col, *values).groupBy(*keys).applyInPandas(
-        fill_group, schema=out_schema
+    return _per_series(
+        df.select(*keys, bucket_col, *values), keys, bucket_col, fill_series, out_schema
     )
 
 
@@ -117,140 +107,45 @@ def gapfill_metrics(
 
     lags_list = [int(x) for x in lags]
 
-    def stats_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key_values = {k: [pdf[k].iloc[0]] for k in keys}
-        frame = (
-            pdf[[bucket_col, value_col]]
-            .sort_values(bucket_col)
-            .set_index(bucket_col)
-            .astype("float64")
-        )
-        imputer = TimeSeriesImputer(
+    def stats_series(key_values: dict, series: pd.DataFrame) -> pd.DataFrame:
+        filled, counts = _impute(
+            _series_frame(series, bucket_col, [value_col]),
             lags=lags_list,
             min_samples_train=min_samples_train,
             interpolate_gaps_less_than=interpolate_gaps_less_than,
         )
-        try:
-            filled = imputer(frame)
-            counts = imputer.fill_counts_
-            n_grid = len(filled)
-            unfilled = int(filled.isna().sum().sum())
-        except EngineError:
-            counts = {"interp": 0, "model": 0, "fallback": 0}
-            n_grid = len(frame)
-            unfilled = int(frame.isna().sum().sum())
         return pd.DataFrame(
             {
-                **key_values,
-                "n_observed": [len(pdf)],
-                "n_grid": [n_grid],
+                **{k: [v] for k, v in key_values.items()},
+                "n_observed": [len(series)],
+                "n_grid": [len(filled)],
                 "gaps_by_interp": [counts["interp"]],
                 "gaps_by_model": [counts["model"]],
                 "gaps_by_fallback": [counts["fallback"]],
-                "gaps_unfilled": [unfilled],
+                "gaps_unfilled": [int(filled.isna().sum().sum())],
             }
         )
 
-    return df.select(*keys, bucket_col, value_col).groupBy(*keys).applyInPandas(
-        stats_group, schema=out_schema
+    return _per_series(
+        df.select(*keys, bucket_col, value_col), keys, bucket_col, stats_series, out_schema
     )
 
 
-def _chunk_slices(idx, ts_seconds, period_code):
-    """(chunk_start, start, end) slices of a SORTED DatetimeIndex grouped
-    by calendar period, in one O(n) pass. Day periods are pure int64
-    arithmetic (the hot 1m-tier case: the per-chunk ``period == start``
-    mask scans cost ~4 ms per 5760-bucket series); month/year periods
-    (coarse tiers, few rows) go through ``to_period`` once."""
-    import numpy as np
-    import pandas as pd
-
-    n = len(ts_seconds)
-    if not n:
-        return
-    if period_code == "D":
-        trunc = ts_seconds - ts_seconds % 86400
-        cut = np.flatnonzero(np.diff(trunc)) + 1
-        starts = np.concatenate(([0], cut))
-        ends = np.concatenate((cut, [n]))
-        for s, e in zip(starts, ends):
-            yield pd.Timestamp(int(trunc[s]), unit="s"), int(s), int(e)
-    else:
-        period = idx.to_period(period_code).start_time
-        tr = period.view("int64")
-        cut = np.flatnonzero(np.diff(tr)) + 1
-        starts = np.concatenate(([0], cut))
-        ends = np.concatenate((cut, [n]))
-        for s, e in zip(starts, ends):
-            yield period[s], int(s), int(e)
+_STEP_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
+_FREQ = {"1m": "min", "1h": "h", "1d": "D"}
 
 
-def model_gapfill_encode(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    bucket_col: str,
-    value_col: str,
-    tier: str,
-    lags: Sequence[int] = (1, 2, 3, -1, -2, -3),
-    min_samples_train: int = 20,
-    interpolate_gaps_less_than: int | None = None,
-    use_gram: bool | None = None,
-) -> DataFrame:
-    """Fused gap-fill + Gorilla encode: ONE shuffle and ONE Python stage
-    per tier instead of two. The kernel fills the series, then chunks it
-    by the tier's calendar period and emits one binary payload per chunk
-    — identical output to ``encode_tier(model_gapfill(...))``.
-    """
-    from ..kernels.codec import encode_points
-    import numpy as np
-
-    keys = list(key_cols)
-    chunk_unit = {"1m": "D", "1h": "M", "1d": "Y"}[tier]  # pandas period codes
-
-    out_schema = StructType()
-    for k in keys:
-        out_schema.add(df.schema[k])
-    out_schema.add("chunk_start", "timestamp")
-    out_schema.add("tier", "string")
-    out_schema.add("n_points", "integer")
-    out_schema.add("payload", "binary")
-
-    lags_list = [int(x) for x in lags]
-
-    def fill_encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key_values = {k: pdf[k].iloc[0] for k in keys}
-        frame = (
-            pdf[[bucket_col, value_col]]
-            .sort_values(bucket_col)
-            .set_index(bucket_col)
-            .astype("float64")
-        )
-        imputer = TimeSeriesImputer(
-            lags=lags_list,
-            min_samples_train=min_samples_train,
-            interpolate_gaps_less_than=interpolate_gaps_less_than,
-            use_gram=use_gram,
-        )
-        try:
-            filled = imputer(frame)
-        except EngineError:
-            filled = frame
-        idx = filled.index
-        vals = filled[value_col].to_numpy()
-        ts = idx.view("int64") // 10**9
-        rows = []
-        for chunk_start, s, e in _chunk_slices(idx, ts, chunk_unit):
-            payload = encode_points(ts[s:e].astype(np.int64), vals[s:e])
-            row = dict(key_values)
-            row["chunk_start"] = chunk_start
-            row["tier"] = tier
-            row["n_points"] = int(e - s)
-            row["payload"] = payload
-            rows.append(row)
-        return pd.DataFrame(rows, columns=[*keys, "chunk_start", "tier", "n_points", "payload"])
-
-    return df.select(*keys, bucket_col, value_col).groupBy(*keys).applyInPandas(
-        fill_encode_group, schema=out_schema
+def _cascade_sums(ts_sec: np.ndarray, npts: np.ndarray, sv: np.ndarray, step: int):
+    """Re-aggregate SORTED observed buckets to a coarser step in one
+    ``np.add.reduceat`` pass — the output equals pandas
+    ``resample().agg(sum)`` filtered to non-empty buckets (both sum
+    sequentially in time order; only observed buckets are emitted)."""
+    trunc = ts_sec - ts_sec % step
+    starts = np.concatenate(([0], np.flatnonzero(np.diff(trunc)) + 1))
+    return (
+        trunc[starts],
+        np.add.reduceat(npts, starts),
+        np.add.reduceat(sv, starts),
     )
 
 
@@ -261,55 +156,22 @@ def cascade_gapfill_encode_all(
     min_samples_train: int = 20,
     interpolate_gaps_less_than: int | None = None,
     use_gram: bool | None = None,
-    raw_ts_col: str | None = None,
-    raw_value_col: str | None = None,
 ) -> DataFrame:
     """One shuffle for the whole per-series tier chain.
 
     Input: observed 1m tier rows (bucket, n_points, sum_value) per key.
-    The kernel — one call per series — cascades the observed aggregates
-    to 1h and 1d (sum/count compose in time order, deterministically),
-    gap-fills each tier's grid with the ridge kernel, and Gorilla-encodes
-    each tier's chunks. Output: chunk rows for ALL tiers.
+    The kernel — one call per series on the per-series runner — cascades
+    the observed aggregates to 1h and 1d (sum/count compose in time
+    order, deterministically), gap-fills each tier's grid with the ridge
+    kernel, and Gorilla-encodes each tier's chunks. Output: chunk rows
+    for ALL tiers — keys, chunk_start, tier, n_points, payload, plus
+    ``n_observed``, the number of observed buckets in the chunk.
 
-    Versus running the cascade in Spark + one applyInPandas per tier,
+    Versus running the cascade in Spark + one kernel stage per tier,
     this trades three shuffles and three Python stages for one of each;
     at 10^12 scale it also means the 1m tier is shuffled exactly once.
-
-    **from-raw mode** (``raw_ts_col``/``raw_value_col`` set): the input
-    is the RAW event table and the 1m aggregation itself happens inside
-    the kernel (minute-truncate + ``reduceat``), removing the separate
-    rollup shuffle — the whole chain is scan → ONE exchange → sort →
-    kernel. Bit-exact vs the groupBy rollup for integral value columns
-    (the north-rule table's ``n_tok:int32``; integer sums are
-    order-free — float values would pick up last-ulp differences from
-    summation order and should keep the two-exchange path). Choose by
-    key volume: from-raw co-locates ALL raw rows of a key in one task,
-    so it is the right plan when per-key raw volume is bounded (bench
-    shape: ≤6×10^5 rows/key); the two-exchange path's map-side partial
-    aggregation is the right plan when single keys carry unbounded raw
-    volume (10^12-sequence hot sources) — the same bounded-vs-skewed
-    split that picks direct vs salted rollup.
-
-    Execution shape: ``repartition(keys) → sortWithinPartitions(keys,
-    bucket) → mapInPandas`` rather than ``groupBy().applyInPandas``.
-    Same single hash shuffle, but Arrow moves PARTITION-sized batches
-    instead of one tiny frame per series — the per-group fixed cost
-    (Arrow batch framing + pandas construction, ~8 ms) otherwise
-    dominates wall and serializes scaling when groups are thousands of
-    small series (measured: the bare kernel scales 0.98 at 1→4 procs
-    while the applyInPandas stage scaled 0.56). Groups are split with
-    NumPy key-change scans; a series spanning two Arrow batches is
-    carried over, so results are identical to the per-group form
-    (pinned by tests/test_impute_spark.py cross-path equality).
     """
-    import numpy as np
-
-    from ..kernels.codec import encode_points
-
     keys = list(key_cols)
-    chunk_code = {"1m": "D", "1h": "M", "1d": "Y"}
-    freq_code = {"1m": "min", "1h": "h", "1d": "D"}
 
     out_schema = StructType()
     for k in keys:
@@ -318,149 +180,53 @@ def cascade_gapfill_encode_all(
     out_schema.add("tier", "string")
     out_schema.add("n_points", "integer")
     out_schema.add("payload", "binary")
-    out_cols = [*keys, "chunk_start", "tier", "n_points", "payload"]
+    out_schema.add("n_observed", "integer")
+    out_cols = out_schema.fieldNames()
 
-    lags_list = [int(x) for x in lags]
+    params = dict(
+        lags=[int(x) for x in lags],
+        min_samples_train=min_samples_train,
+        interpolate_gaps_less_than=interpolate_gaps_less_than,
+        use_gram=use_gram,
+    )
 
-    def _cascade_sums(ts_sec: np.ndarray, npts: np.ndarray, sv: np.ndarray, step: int):
-        """Re-aggregate SORTED observed buckets to a coarser step in one
-        ``np.add.reduceat`` pass — the output equals pandas
-        ``resample().agg(sum)`` filtered to non-empty buckets (both sum
-        sequentially in time order; only observed buckets are emitted)."""
-        trunc = ts_sec - ts_sec % step
-        starts = np.concatenate(([0], np.flatnonzero(np.diff(trunc)) + 1))
-        return (
-            trunc[starts],
-            np.add.reduceat(npts, starts),
-            np.add.reduceat(sv, starts),
+    def fill_encode(tier: str, t: np.ndarray, n: np.ndarray, s_: np.ndarray) -> list[tuple]:
+        """Fill + encode one tier of one series (sorted observed arrays):
+        (chunk_start, tier, n_points, payload, n_observed) per chunk."""
+        # the full grid directly from epoch-second arithmetic — same rows
+        # as DatetimeIndex(...).asfreq(...) (UTC tiers are fixed-width),
+        # minus its get_indexer/reindex machinery; date_range carries
+        # freq, so the imputer's regularize pass short-circuits too
+        pos = (t - t[0]) // _STEP_SECONDS[tier]
+        vals = np.full(int(pos[-1]) + 1, np.nan)
+        vals[pos] = s_.astype("float64") / n
+        index = pd.date_range(
+            pd.Timestamp(int(t[0]), unit="s"), periods=len(vals), freq=_FREQ[tier]
         )
+        filled, _ = _impute(pd.DataFrame({"avg_value": vals}, index=index), **params)
+        chunks = _encode_chunks(filled.index, filled["avg_value"].to_numpy(), tier)
+        return [
+            (start, tier, e - s, payload, int(np.searchsorted(pos, e) - np.searchsorted(pos, s)))
+            for start, s, e, payload in chunks
+        ]
 
-    def tier_chain_rows(key_values: dict, ts_sec, npts, sv, rows: list) -> None:
-        """Cascade + fill + encode ONE series (sorted arrays); appends
-        chunk rows."""
-
-        step_sec = {"1m": 60, "1h": 3600, "1d": 86400}
-
-        def emit(tier: str, t: np.ndarray, n: np.ndarray, s_: np.ndarray) -> None:
-            avg = s_.astype("float64") / n
-            # the full grid directly from epoch-second arithmetic —
-            # same rows as DatetimeIndex(...).asfreq(...) (UTC tiers are
-            # fixed-width), minus its get_indexer/reindex machinery;
-            # date_range carries freq, so the imputer's regularize pass
-            # short-circuits too
-            step = step_sec[tier]
-            pos = (t - t[0]) // step
-            vals = np.full(int(pos[-1]) + 1, np.nan)
-            vals[pos] = avg
-            index = pd.date_range(
-                pd.Timestamp(int(t[0]), unit="s"), periods=len(vals), freq=freq_code[tier]
-            )
-            frame = pd.DataFrame({"avg_value": vals}, index=index)
-            imputer = TimeSeriesImputer(
-                lags=lags_list,
-                min_samples_train=min_samples_train,
-                interpolate_gaps_less_than=interpolate_gaps_less_than,
-                use_gram=use_gram,
-            )
-            try:
-                filled = imputer(frame)
-            except EngineError:
-                filled = frame
-            idx = filled.index
-            ts = idx.view("int64") // 10**9
-            vals = filled["avg_value"].to_numpy()
-            for chunk_start, s, e in _chunk_slices(idx, ts, chunk_code[tier]):
-                row = dict(key_values)
-                row["chunk_start"] = chunk_start
-                row["tier"] = tier
-                row["n_points"] = int(e - s)
-                row["payload"] = encode_points(ts[s:e].astype(np.int64), vals[s:e])
-                rows.append(row)
-
-        emit("1m", ts_sec, npts, sv)
+    def tier_chain(key_values: dict, series: pd.DataFrame) -> pd.DataFrame:
+        ts_sec = series["bucket"].to_numpy().astype("datetime64[s]").astype(np.int64)
+        npts = series["n_points"].to_numpy()
+        sv = series["sum_value"].to_numpy()
         t1h, n1h, s1h = _cascade_sums(ts_sec, npts, sv, 3600)
-        emit("1h", t1h, n1h, s1h)
-        t1d, n1d, s1d = _cascade_sums(t1h, n1h, s1h, 86400)
-        emit("1d", t1d, n1d, s1d)
+        rows = [
+            *fill_encode("1m", ts_sec, npts, sv),
+            *fill_encode("1h", t1h, n1h, s1h),
+            *fill_encode("1d", *_cascade_sums(t1h, n1h, s1h, 86400)),
+        ]
+        key_row = tuple(key_values.values())
+        return pd.DataFrame([key_row + r for r in rows], columns=out_cols)
 
-    from_raw = raw_ts_col is not None
-
-    def emit_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Run every complete series in ``pdf`` (sorted by keys, time)."""
-        rows: list = []
-        # group boundaries via key-change scan — no pandas groupby machinery
-        change = np.zeros(len(pdf), dtype=bool)
-        change[0] = True
-        for k in keys:
-            kv = pdf[k].to_numpy()
-            change[1:] |= kv[1:] != kv[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        if from_raw:
-            # 1m aggregation inside the kernel: minute-truncate + reduceat
-            # over the (key, ts)-sorted rows — the rollup without its
-            # shuffle. Counts/sums equal the groupBy form exactly for
-            # integral values (order-free sums).
-            ts_raw = pdf[raw_ts_col].to_numpy().astype("datetime64[s]").astype(np.int64)
-            trunc = ts_raw - ts_raw % 60
-            vraw = pdf[raw_value_col].to_numpy()
-            if np.issubdtype(vraw.dtype, np.integer):
-                # Spark's sum() promotes to int64; reduceat would keep
-                # int32 and silently WRAP on >2^31 per-bucket sums
-                vraw = vraw.astype(np.int64)
-            for s, e in zip(starts, ends):
-                key_values = {k: pdf[k].iloc[s] for k in keys}
-                t = trunc[s:e]
-                bstarts = np.concatenate(([0], np.flatnonzero(np.diff(t)) + 1))
-                ts_sec = t[bstarts]
-                npts = np.diff(np.append(bstarts, e - s))
-                sv = np.add.reduceat(vraw[s:e], bstarts)
-                tier_chain_rows(key_values, ts_sec, npts, sv, rows)
-            return pd.DataFrame(rows, columns=out_cols)
-        ts_sec = pdf["bucket"].to_numpy().astype("datetime64[s]").astype(np.int64)
-        npts = pdf["n_points"].to_numpy()
-        sv = pdf["sum_value"].to_numpy()
-        for s, e in zip(starts, ends):
-            key_values = {k: pdf[k].iloc[s] for k in keys}
-            tier_chain_rows(key_values, ts_sec[s:e], npts[s:e], sv[s:e], rows)
-        return pd.DataFrame(rows, columns=out_cols)
-
-    def process_partition(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # hold back the trailing series — it may continue in the
-            # next Arrow batch of this partition
-            tail = np.ones(len(pdf), dtype=bool)
-            for k in keys:
-                kv = pdf[k].to_numpy()
-                tail &= kv == kv[-1]
-            # rows are key-sorted, so the last group is a contiguous tail
-            first_of_last = len(pdf) - int(tail[::-1].argmin()) if not tail.all() else 0
-            carry = pdf.iloc[first_of_last:]
-            head = pdf.iloc[:first_of_last]
-            if len(head):
-                yield emit_chunk(head)
-        if carry is not None and len(carry):
-            yield emit_chunk(carry)
-
-    if from_raw:
-        # count(value)/sum(value) ignore nulls in the groupBy rollup;
-        # match by dropping null-value rows before the kernel (the one
-        # divergence: an all-null bucket yields a null-avg tier row
-        # there, no row here — both gap-fill identically downstream)
-        df_1m = df_1m.where(F.col(raw_value_col).isNotNull())
-        cols = [*keys, raw_ts_col, raw_value_col]
-        sort_cols = [*keys, raw_ts_col]
-    else:
-        cols = [*keys, "bucket", "n_points", "sum_value"]
-        sort_cols = [*keys, "bucket"]
-    return (
-        df_1m.select(*cols)
-        .repartition(*keys)
-        .sortWithinPartitions(*sort_cols)
-        .mapInPandas(process_partition, schema=out_schema)
+    return _per_series(
+        df_1m.select(*keys, "bucket", "n_points", "sum_value"),
+        keys,
+        "bucket",
+        tier_chain,
+        out_schema,
     )

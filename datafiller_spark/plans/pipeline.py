@@ -9,9 +9,10 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   pre-aggregates on (key, bucket, salt) first, bounding any single
   reducer's input to 1/S of the hottest key — this composes exactly
   because the metrics are count/sum/min/max.
-- Gap-fill (pandas ridge kernel) runs per (source) group on tier rows,
-  never raw rows: the expensive Python stage sees orders of magnitude
-  fewer rows than the scan.
+- Cascade, gap-fill (pandas ridge kernel) and encode run as ONE
+  per-series kernel over the observed 1m tier rows, never raw rows: the
+  expensive Python stage sees orders of magnitude fewer rows than the
+  scan, and the 1m tier is shuffled once for all three tiers.
 - Persisted state: ``tier=<t>`` holds the OBSERVED tier rows (the
   mergeable ground truth — count/sum/min/max compose, so (key, bucket)
   replacement is always safe); the gap-filled representation is
@@ -26,8 +27,9 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   per micro-batch). Untouched keys are never read or rewritten.
 - Lineage: one row per (tier, spark partition) recording row counts and
   bucket ranges — enough to re-drive any partition.
-- Metrics: per (source, tier): rows in, grid size, gaps filled by each
-  policy step (observed / interpolated+modeled), bytes out.
+- Metrics: per tier: observed rows in, grid size, gaps filled
+  (grid − observed), bytes out — summed from the kernel's chunk rows by
+  the one stats aggregation, so they cost no extra job.
 """
 
 from __future__ import annotations
@@ -41,8 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..exceptions import EngineValueError
-from ..operators import cascade, encode_tier, model_gapfill, regular_grid, rollup
-from ..operators.impute import cascade_gapfill_encode_all, model_gapfill_encode
+from ..operators import cascade, cascade_gapfill_encode_all, decode_tier, rollup
 from .checkpoint import incremental_filter, read_high_water, write_high_water
 
 TIER_CHAIN = ("1m", "1h", "1d")
@@ -51,9 +52,10 @@ TIER_CHAIN = ("1m", "1h", "1d")
 @dataclass
 class PipelineResult:
     tiers: dict[str, DataFrame]
-    filled: dict[str, DataFrame]
     encoded: dict[str, DataFrame]
+    key_cols: list[str]
     metrics: DataFrame | None = None
+    #: written beside the warehouse; None without ``output_dir``
     lineage: DataFrame | None = None
     points: int = 0
     wall_seconds: float = 0.0
@@ -62,6 +64,16 @@ class PipelineResult:
     #: the 1m rows actually re-aggregated from raw this run (on resume:
     #: only buckets at/past the pinned high-water marks)
     delta: DataFrame | None = None
+
+    @property
+    def filled(self) -> dict[str, DataFrame]:
+        """The gap-filled grid of each tier, decoded from ``encoded``
+        (the codec is lossless); built on access, so a caller that never
+        reads it pays no planning cost."""
+        return {
+            tier: decode_tier(df, self.key_cols, "bucket", "avg_value")
+            for tier, df in self.encoded.items()
+        }
 
 
 def salted_rollup(
@@ -174,6 +186,16 @@ def _check_layout(output_dir: str) -> None:
     """Stamp the layout version on fresh warehouses; refuse to write
     into one written under an older (or unversioned) layout contract."""
     marker = os.path.join(output_dir, "_layout_version")
+    if os.path.exists(os.path.join(output_dir, "chunks")):
+        # the retired fused layout (chunks/tier=<t>): a resume would start
+        # a chunks_tier=<t> directory holding only the delta's keys, and
+        # range reads would silently miss every other key
+        raise EngineValueError(
+            f"warehouse at {output_dir!r} holds chunks/ from the retired "
+            "fused layout; range reads and retention read chunks_tier=<tier>. "
+            "Rebuild the warehouse from raw (a full, non-resume run into a "
+            "fresh output_dir) instead of resuming into it."
+        )
     if os.path.exists(marker):
         with open(marker) as fh:
             found = int(fh.read().strip() or 0)
@@ -302,34 +324,36 @@ def run_pipeline(
     interpolate_gaps_less_than: int | None = 4,
     salt_buckets: int | None = None,
     salt_col: str | None = None,
-    gapfill: bool = True,
-    encode: bool = True,
     resume: bool = False,
     pin_snapshot: str | None = None,
     collect_metrics: bool = True,
     fused: bool = False,
-    fused_from_raw: bool = False,
 ) -> PipelineResult:
     """Run the full tier pipeline; optionally persist + checkpoint.
+
+    Every run takes one shape: the 1m rollup (salted when
+    ``salt_buckets`` and ``salt_col`` are set) → one per-series kernel
+    that cascades to 1h/1d, gap-fills and Gorilla-encodes every tier
+    (``cascade_gapfill_encode_all``) → one stats aggregation, which
+    yields the counters and the metrics rows. With ``output_dir`` the
+    run writes the observed ``tier=<t>`` rows, the ``chunks_tier=<t>``
+    chunks, ``metrics``, ``lineage``, the high-water marks and a
+    snapshot commit. ``filled[tier]`` decodes ``encoded[tier]`` on access
+    (the codec is lossless).
 
     ``resume=True`` anchors the high-water read to a snapshot —
     ``pin_snapshot`` names one explicitly, otherwise the current head is
     pinned at start. A writer committing between the pin and this run's
     commit cannot change which rows this run reprocesses (the pinned
-    per-snapshot marks are immutable)."""
+    per-snapshot marks are immutable).
+
+    ``collect_metrics`` and ``fused`` are accepted for older callers and
+    ignored: metrics are always recorded and there is no other shape."""
     t0 = time.time()
     keys = list(key_cols)
     merging = bool(resume and output_dir)
     if output_dir:
         _check_layout(output_dir)
-    if fused_from_raw and not (fused and gapfill and encode and not collect_metrics):
-        # the in-kernel 1m aggregation only exists inside the fused fast
-        # path; failing loudly beats silently benchmarking the wrong plan
-        raise EngineValueError(
-            "fused_from_raw requires fused=True, gapfill=True, encode=True, "
-            "collect_metrics=False (it is ignored-with-docs only for "
-            "warehouse/salted/resume runs)."
-        )
 
     prior_hw = None
     anchor_id = None
@@ -343,15 +367,14 @@ def run_pipeline(
         t1m_delta = salted_rollup(raw, keys, ts_col, value_col, "1m", salt_buckets, salt_col)
     else:
         t1m_delta = rollup(raw, keys, ts_col, value_col, "1m")
+    t1m = t1m_delta
     if output_dir:
-        # reused by the tier write, the affected-keys probe and the
-        # high-water write; without a warehouse the fused path consumes
-        # it exactly once, and caching would only add a full memory-store
+        # reused by the tier writes, the affected-keys probe and the
+        # high-water write; without a warehouse the kernel consumes it
+        # exactly once, and caching would only add a full memory-store
         # materialization of the tier to the critical path
-        t1m_delta = t1m_delta.cache()
-
-    tier1m_path = os.path.join(output_dir, "tier=1m") if output_dir else None
-    if output_dir:
+        t1m = t1m_delta = t1m_delta.cache()
+        tier1m_path = os.path.join(output_dir, "tier=1m")
         # observed rows are the persisted source of truth; written FIRST
         # so every derived product below can re-derive from the merged
         # tier (resume) and a crash mid-run is heal-by-rerun
@@ -363,236 +386,89 @@ def run_pipeline(
             partition_by=keys[:1],
             merge=merging,
         )
-    if merging:
-        # Derived products (cascades, fills, chunks) must never be built
-        # from the delta alone: a delta-only 1h boundary row or open
-        # chunk would REPLACE its complete prior version on merge. Read
-        # back the merged tier, restricted to the keys the delta touched
-        # — work scales with the affected keys' history, not the table.
-        affected = t1m_delta.select(*keys).distinct()
-        t1m = spark.read.parquet(tier1m_path).join(F.broadcast(affected), keys, "left_semi")
-        t1m = t1m.cache()
-    else:
-        t1m = t1m_delta
-        if not fused:
-            t1m = t1m.cache()  # the staged path reads it for 1h + the fill
+        if merging:
+            # Derived products (cascades, fills, chunks) must never be
+            # built from the delta alone: a delta-only 1h boundary row or
+            # open chunk would REPLACE its complete prior version on
+            # merge. Read back the merged tier, restricted to the keys
+            # the delta touched — work scales with the affected keys'
+            # history, not the table.
+            affected = t1m_delta.select(*keys).distinct()
+            t1m = spark.read.parquet(tier1m_path).join(F.broadcast(affected), keys, "left_semi")
+            t1m = t1m.cache()
 
-    if fused and gapfill and encode and not collect_metrics:
-        # Fast path: the whole cascade + fill + encode collapses into ONE
-        # job — scan → 1m rollup → per-series kernel that cascades,
-        # fills, and encodes all three tiers → stats agg. Per-job
-        # scheduling/UDF-worker fixed costs are paid once, not 6-9 times;
-        # results match the staged path (pinned by tests).
-        tiers = {"1m": t1m, "1h": cascade(t1m, keys, "1h"), "1d": None}
-        tiers["1d"] = cascade(tiers["1h"], keys, "1d")
-        if fused_from_raw and not output_dir and not (salt_buckets and salt_col):
-            # (with a warehouse the rollup runs anyway for the persisted
-            # observed tier, so from-raw would only add a second raw scan)
-            # scan → ONE exchange → sort → kernel: the 1m aggregation
-            # happens inside the per-series kernel, so the rollup's own
-            # shuffle disappears. Only for bounded-volume keys (see
-            # cascade_gapfill_encode_all); resume/salted runs need the
-            # materialized tier and keep the two-exchange form.
-            all_enc = cascade_gapfill_encode_all(
-                raw,
-                keys,
-                lags=lags,
-                min_samples_train=min_samples_train,
-                interpolate_gaps_less_than=interpolate_gaps_less_than,
-                raw_ts_col=ts_col,
-                raw_value_col=value_col,
-            )
-        else:
-            all_enc = cascade_gapfill_encode_all(
-                t1m,
-                keys,
-                lags=lags,
-                min_samples_train=min_samples_train,
-                interpolate_gaps_less_than=interpolate_gaps_less_than,
-            )
-        # chunk rows are small (one per key × calendar period); caching
-        # them means the returned encoded/tiers frames don't re-run the
-        # whole scan→rollup→kernel chain if the caller consumes them
-        all_enc = all_enc.cache()
-        enc = {tier: all_enc.where(F.col("tier") == tier) for tier in TIER_CHAIN}
-        if output_dir:
+    tiers = {"1m": t1m, "1h": cascade(t1m, keys, "1h")}
+    tiers["1d"] = cascade(tiers["1h"], keys, "1d")
+    # chunk rows are small (one per key × calendar period); caching them
+    # means the writes, the stats job and the returned frames don't
+    # re-run the scan→rollup→kernel chain
+    all_enc = cascade_gapfill_encode_all(
+        t1m,
+        keys,
+        lags=lags,
+        min_samples_train=min_samples_train,
+        interpolate_gaps_less_than=interpolate_gaps_less_than,
+    ).cache()
+    chunks = all_enc.drop("n_observed")
+    encoded = {tier: chunks.where(F.col("tier") == tier) for tier in TIER_CHAIN}
+    if output_dir:
+        for tier in TIER_CHAIN[1:]:  # 1m observed rows already persisted above
             _merge_write(
                 spark,
-                all_enc,
-                os.path.join(output_dir, "chunks"),
-                merge_keys=keys + ["tier", "chunk_start"],
-                partition_by=["tier"],
-                merge=merging,
-            )
-        stats = {
-            r["tier"]: r
-            for r in all_enc.groupBy("tier")
-            .agg(F.sum(F.length("payload")).alias("bytes"), F.sum("n_points").alias("pts"))
-            .collect()
-        }
-        counters = {}
-        total_points = 0
-        for tier in TIER_CHAIN:
-            row = stats.get(tier)
-            counters[f"tier_{tier}_bytes"] = int(row["bytes"]) if row else 0
-            counters[f"tier_{tier}_points"] = int(row["pts"]) if row else 0
-            total_points += counters[f"tier_{tier}_points"]
-        if output_dir:
-            write_high_water(t1m_delta, keys, output_dir, prior=prior_hw, snapshot_id=snapshot_id)
-            _commit_snapshot(spark, output_dir, counters, resume, snapshot_id, anchor_id)
-        return PipelineResult(
-            tiers=tiers,
-            filled={},
-            encoded=enc,
-            metrics=None,
-            lineage=None,
-            points=total_points,
-            wall_seconds=time.time() - t0,
-            counters=counters,
-            snapshot_id=snapshot_id,
-            delta=t1m_delta,
-        )
-
-    tiers: dict[str, DataFrame] = {"1m": t1m}
-    tiers["1h"] = cascade(t1m, keys, "1h").cache()
-    tiers["1d"] = cascade(tiers["1h"], keys, "1d").cache()
-
-    filled: dict[str, DataFrame] = {}
-    encoded: dict[str, DataFrame] = {}
-    metrics_rows = []
-    lineage_parts = []
-    counters: dict[str, int] = {}
-    total_points = 0
-
-    for tier in TIER_CHAIN:
-        tdf = tiers[tier]
-        if collect_metrics:
-            n_rows = tdf.count()
-            counters[f"tier_{tier}_rows"] = n_rows
-            total_points += n_rows
-            lineage_parts.append(_lineage(tdf, tier, keys))
-        else:
-            n_rows = -1
-
-        if output_dir and tier != "1m":  # 1m observed rows already persisted above
-            _merge_write(
-                spark,
-                tdf,
+                tiers[tier],
                 os.path.join(output_dir, f"tier={tier}"),
                 merge_keys=keys + ["bucket"],
                 partition_by=keys[:1],
                 merge=merging,
             )
-
-        if fused and gapfill and encode:
-            # one shuffle + one Python stage per tier: fill and encode in
-            # the same kernel (identical output to the two-stage path)
-            t_enc = time.time()
-            edf = model_gapfill_encode(
-                tdf,
-                keys,
-                "bucket",
-                "avg_value",
-                tier,
-                lags=lags,
-                min_samples_train=min_samples_train,
-                interpolate_gaps_less_than=interpolate_gaps_less_than,
-            ).cache()
-            encoded[tier] = edf
-            filled[tier] = tdf
-            stats = edf.agg(
-                F.sum(F.length("payload")).alias("bytes"), F.sum("n_points").alias("pts")
-            ).first()
-            counters[f"tier_{tier}_bytes"] = int(stats["bytes"] or 0)
-            counters[f"tier_{tier}_points"] = int(stats["pts"] or 0)
-            counters[f"tier_{tier}_wall_ms"] = int((time.time() - t_enc) * 1000)
-            if not collect_metrics:
-                total_points += int(stats["pts"] or 0)
-            metrics_rows.append(
-                (tier, n_rows, int(stats["pts"] or 0), 0, int(stats["bytes"] or 0))
+        for tier in TIER_CHAIN:
+            _merge_write(
+                spark,
+                encoded[tier],
+                os.path.join(output_dir, f"chunks_tier={tier}"),
+                merge_keys=keys + ["chunk_start"],
+                merge=merging,
             )
-            if output_dir:
-                _merge_write(
-                    spark,
-                    encoded[tier],
-                    os.path.join(output_dir, f"chunks_tier={tier}"),
-                    merge_keys=keys + ["chunk_start"],
-                    merge=merging,
-                )
-            continue
 
-        if gapfill:
-            fdf = model_gapfill(
-                tdf,
-                keys,
-                "bucket",
-                ["avg_value"],
-                lags=lags,
-                min_samples_train=min_samples_train,
-                interpolate_gaps_less_than=interpolate_gaps_less_than,
-            ).cache()
-            filled[tier] = fdf
-            if collect_metrics:
-                n_filled = fdf.count()
-                counters[f"tier_{tier}_grid_rows"] = n_filled
-                counters[f"tier_{tier}_gaps_filled"] = n_filled - n_rows
-        else:
-            filled[tier] = tdf
-
-        if encode:
-            t_enc = time.time()
-            edf = encode_tier(filled[tier], keys, "bucket", "avg_value", tier).cache()
-            encoded[tier] = edf
-            stats = edf.agg(
-                F.sum(F.length("payload")).alias("bytes"), F.sum("n_points").alias("pts")
-            ).first()
-            counters[f"tier_{tier}_bytes"] = int(stats["bytes"] or 0)
-            counters[f"tier_{tier}_points"] = int(stats["pts"] or 0)
-            counters[f"tier_{tier}_wall_ms"] = int((time.time() - t_enc) * 1000)
-            if not collect_metrics:
-                total_points += int(stats["pts"] or 0)
-            if output_dir:
-                _merge_write(
-                    spark,
-                    encoded[tier],
-                    os.path.join(output_dir, f"chunks_tier={tier}"),
-                    merge_keys=keys + ["chunk_start"],
-                    merge=merging,
-                )
-
-        metrics_rows.append(
-            (
-                tier,
-                n_rows,
-                counters.get(f"tier_{tier}_grid_rows", n_rows),
-                counters.get(f"tier_{tier}_gaps_filled", 0),
-                counters.get(f"tier_{tier}_bytes", 0),
-            )
+    stats = {
+        r["tier"]: (int(r["rows"]), int(r["points"]), int(r["bytes"]))
+        for r in all_enc.groupBy("tier")
+        .agg(
+            F.sum(F.length("payload")).alias("bytes"),
+            F.sum("n_points").alias("points"),
+            F.sum("n_observed").alias("rows"),
         )
-
+        .collect()
+    }
+    counters: dict[str, int] = {}
+    metrics_rows = []
+    for tier in TIER_CHAIN:
+        rows_in, grid, nbytes = stats.get(tier, (0, 0, 0))
+        counters[f"tier_{tier}_rows"] = rows_in
+        counters[f"tier_{tier}_points"] = grid
+        counters[f"tier_{tier}_bytes"] = nbytes
+        metrics_rows.append((tier, rows_in, grid, grid - rows_in, nbytes))
     metrics = spark.createDataFrame(
-        metrics_rows, ["tier", "rows_in", "grid_rows", "gaps_filled", "bytes_out"]
+        metrics_rows, "tier string, rows_in long, grid_rows long, gaps_filled long, bytes_out long"
     )
-    lineage = None
-    if lineage_parts:
-        lineage = lineage_parts[0]
-        for extra in lineage_parts[1:]:
-            lineage = lineage.unionByName(extra)
 
+    lineage = None
     if output_dir:
+        lineage = _lineage(tiers["1m"], "1m", keys)
+        for tier in TIER_CHAIN[1:]:
+            lineage = lineage.unionByName(_lineage(tiers[tier], tier, keys))
         metrics.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "metrics"))
-        if lineage is not None:
-            lineage.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "lineage"))
+        lineage.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "lineage"))
         write_high_water(t1m_delta, keys, output_dir, prior=prior_hw, snapshot_id=snapshot_id)
         _commit_snapshot(spark, output_dir, counters, resume, snapshot_id, anchor_id)
 
     return PipelineResult(
         tiers=tiers,
-        filled=filled,
         encoded=encoded,
+        key_cols=keys,
         metrics=metrics,
         lineage=lineage,
-        points=total_points,
+        points=sum(counters[f"tier_{tier}_points"] for tier in TIER_CHAIN),
         wall_seconds=time.time() - t0,
         counters=counters,
         snapshot_id=snapshot_id,

@@ -42,7 +42,6 @@ def main() -> None:
         default=None,
         help="resume anchored to this snapshot id (default: current head)",
     )
-    ap.add_argument("--fused", action="store_true", default=True)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -65,8 +64,6 @@ def main() -> None:
         salt_col="doc_id",
         resume=args.resume,
         pin_snapshot=args.pin_snapshot,
-        fused=args.fused,
-        collect_metrics=not args.fused,
     )
     print(
         json.dumps(

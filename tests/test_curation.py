@@ -2,6 +2,7 @@
 chunk retention."""
 
 import datetime
+import math
 import os
 
 import numpy as np
@@ -100,27 +101,25 @@ def test_pack_sequences_matches_pandas_reference(spark):
 
 def test_scan_chunks_time_range_read(spark, tmp_path):
     """The chunk read path: a narrow window decodes only intersecting
-    chunk periods and returns exactly the tier rows in range."""
+    chunk periods and returns the gap-filled grid in range — observed
+    buckets bit-exact against the tier rows, no other point NaN."""
     from datafiller_spark.plans import run_pipeline, scan_chunks
     from datafiller_spark.sources import synth_sequences
 
     seqs = synth_sequences(spark, 3000, mean_tokens=16, span_minutes=3 * 1440).cache()
     out = str(tmp_path / "scan")
-    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=True)
+    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
 
     start = datetime.datetime(2024, 1, 2, 6, 0)
     end = datetime.datetime(2024, 1, 2, 18, 0)
-    got = scan_chunks(spark, out, "1m", ["source"], start, end)
+    got = {(r.source, r.bucket): r.avg_value for r in scan_chunks(spark, out, "1m", ["source"], start, end).collect()}
     tier = spark.read.parquet(os.path.join(out, "tier=1m")).where(
         (F.col("bucket") >= F.lit(start)) & (F.col("bucket") < F.lit(end))
     )
-    a = sorted((r.source, r.bucket, round(r.avg_value, 9)) for r in got.collect())
-    b = sorted(
-        (r.source, r.bucket, round(r.avg_value, 9))
-        for r in tier.select("source", "bucket", "avg_value").collect()
-    )
-    assert a == b and len(a) > 0
+    observed = {(r.source, r.bucket): r.avg_value for r in tier.select("source", "bucket", "avg_value").collect()}
+    assert observed and all(got[k] == v for k, v in observed.items())
+    assert all(start <= b < end for _, b in got)
+    assert not any(math.isnan(v) for v in got.values())
 
     # pruning: only day-2 chunks (one period per key) are decoded
     chunks = spark.read.parquet(os.path.join(out, "chunks_tier=1m"))
@@ -133,16 +132,16 @@ def test_scan_chunks_time_range_read(spark, tmp_path):
 
 def test_apply_chunk_retention_boundary_reencode(spark, tmp_path):
     """Whole expired chunks drop by metadata; the boundary chunk is
-    decoded, filtered, re-encoded — decoded survivors must equal the
-    tier rows at/after the cutoff."""
+    decoded, filtered, re-encoded — decoded survivors must start at the
+    cutoff, equal the tier rows at/after it bit-exactly at observed
+    buckets, and hold no NaN anywhere else."""
     from datafiller_spark.operators import decode_tier
     from datafiller_spark.plans import apply_chunk_retention, apply_retention, run_pipeline
     from datafiller_spark.sources import synth_sequences
 
     seqs = synth_sequences(spark, 3000, mean_tokens=16, span_minutes=3 * 1440).cache()
     out = str(tmp_path / "ret")
-    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=True)
+    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
 
     # mid-day cutoff: day-2 chunks of the 1m tier are boundary material
     keep_after = datetime.datetime(2024, 1, 2, 7, 0)
@@ -156,15 +155,14 @@ def test_apply_chunk_retention_boundary_reencode(spark, tmp_path):
 
     apply_retention(spark, out, "1m", keep_after)
     tier = spark.read.parquet(os.path.join(out, "tier=1m"))
-    decoded = decode_tier(chunks, ["source"], "bucket", "avg_value")
-    a = sorted(
-        (r.source, r.bucket, round(r.avg_value, 9)) for r in decoded.collect()
-    )
-    b = sorted(
-        (r.source, r.bucket, round(r.avg_value, 9))
-        for r in tier.select("source", "bucket", "avg_value").collect()
-    )
-    assert a == b
+    decoded = {
+        (r.source, r.bucket): r.avg_value
+        for r in decode_tier(chunks, ["source"], "bucket", "avg_value").collect()
+    }
+    observed = {(r.source, r.bucket): r.avg_value for r in tier.select("source", "bucket", "avg_value").collect()}
+    assert observed and all(decoded[k] == v for k, v in observed.items())
+    assert min(b for _, b in decoded) >= keep_after
+    assert not any(math.isnan(v) for v in decoded.values())
 
 
 def test_dup_clusters_driver_and_distributed_paths_equal(spark):

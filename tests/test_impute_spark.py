@@ -1,4 +1,4 @@
-"""model_gapfill (applyInPandas) vs the kernel run directly — must be identical."""
+"""model_gapfill (per-series runner) vs the kernel run directly — must be identical."""
 
 import datetime
 
@@ -47,20 +47,48 @@ def test_spark_matches_kernel_bitexact(spark):
 
 
 def test_partitioning_invariance(spark):
-    """Same result at 1 and 8 input partitions — partition-order independence."""
-    _, holed = _panel(n=90, gaps=((20, 24),))
-    long = holed.reset_index().rename(columns={"index": "bucket"}).assign(key="k")
+    """Same result at 1 and 8 input partitions, and with Arrow batches of
+    7 rows — every series then spans several batches, so the per-series
+    runner's cross-batch carry is exercised — for every operator on the
+    runner; model_gapfill also equals the kernel run directly."""
+    from datafiller_spark.operators import encode_tier, gapfill_metrics, spline_fill
 
-    results = []
-    for parts in (1, 8):
+    _, holed = _panel(n=90, gaps=((20, 24),))
+    long = holed.reset_index().rename(columns={"index": "bucket"})
+    long = pd.concat([long.assign(key=k) for k in ("a", "b", "c")], ignore_index=True)
+    oracle = TimeSeriesImputer(lags=[1, -1], min_samples_train=10)(holed.astype("float64"))
+
+    def run_all(parts):
         sdf = spark.createDataFrame(long[["key", "bucket", "m1", "m2"]]).repartition(parts)
-        out = (
-            model_gapfill(sdf, ["key"], "bucket", ["m1", "m2"], lags=(1, -1), min_samples_train=10)
-            .orderBy("bucket")
-            .toPandas()
-        )
-        results.append(out[["m1", "m2"]].to_numpy())
-    np.testing.assert_array_equal(results[0], results[1])
+        ops = {
+            "model_gapfill": model_gapfill(
+                sdf, ["key"], "bucket", ["m1", "m2"], lags=(1, -1), min_samples_train=10
+            ),
+            "gapfill_metrics": gapfill_metrics(
+                sdf, ["key"], "bucket", "m1", lags=(1, -1), min_samples_train=10
+            ),
+            "spline_fill": spline_fill(sdf, ["key"], "bucket", "m1"),
+            "encode_tier": encode_tier(sdf, ["key"], "bucket", "m1", "1m"),
+        }
+        out = {}
+        for name, df in ops.items():
+            pdf = df.toPandas()
+            out[name] = pdf.sort_values(list(pdf.columns[:2])).reset_index(drop=True)
+        got = out["model_gapfill"]
+        for k in ("a", "b", "c"):
+            np.testing.assert_array_equal(got.loc[got["key"] == k, ["m1", "m2"]].to_numpy(), oracle.to_numpy())
+        return out
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    baseline = run_all(1)
+    prior = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "7")
+        small_batches = run_all(8)
+    finally:
+        spark.conf.set(conf, prior)
+    for name, got in [*run_all(8).items(), *small_batches.items()]:
+        pd.testing.assert_frame_equal(got, baseline[name], check_exact=True)
 
 
 def test_grid_reinsertion_through_spark(spark):

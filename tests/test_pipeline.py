@@ -46,14 +46,23 @@ def test_pipeline_counters_and_tiers(spark, seqs, tmp_path):
         salt_buckets=8,
         salt_col="doc_id",
     )
+    tiers = ("1m", "1h", "1d")
     assert res.counters["tier_1m_rows"] > res.counters["tier_1h_rows"] > res.counters["tier_1d_rows"]
-    assert res.points == sum(res.counters[f"tier_{t}_rows"] for t in ("1m", "1h", "1d"))
-    for tier in ("1m", "1h", "1d"):
+    # points counts the grid points the kernel emitted, every tier
+    assert res.points == sum(res.counters[f"tier_{t}_points"] for t in tiers)
+    metrics = {r.tier: r for r in res.metrics.collect()}
+    for tier in tiers:
         assert res.counters[f"tier_{tier}_bytes"] > 0
+        assert metrics[tier].rows_in == res.tiers[tier].count() == res.counters[f"tier_{tier}_rows"]
+        assert metrics[tier].grid_rows == res.filled[tier].count() == res.counters[f"tier_{tier}_points"]
+        assert metrics[tier].gaps_filled == metrics[tier].grid_rows - metrics[tier].rows_in
+        assert metrics[tier].bytes_out == res.counters[f"tier_{tier}_bytes"]
         assert res.filled[tier].where(F.col("avg_value").isNull()).count() == 0
     # artifacts written
     out = tmp_path / "out"
-    assert (out / "tier=1m").exists()
+    for tier in tiers:
+        assert (out / f"tier={tier}").exists()
+        assert (out / f"chunks_tier={tier}").exists()
     assert (out / "metrics").exists()
     assert (out / "lineage").exists()
     assert (out / "_checkpoint_high_water").exists()
@@ -66,16 +75,14 @@ def test_resume_is_incremental_and_consistent(spark, tmp_path):
     second = full  # the resume run sees everything, filters via checkpoint
 
     out = str(tmp_path / "ckpt")
-    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False)
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
 
     hw_rows = spark.read.parquet(os.path.join(out, "_checkpoint_high_water")).collect()
     hw_max = max(r.max_bucket for r in hw_rows)
     hw_min = min(r.max_bucket for r in hw_rows)
     assert hw_max < cutoff
 
-    res2 = run_pipeline(spark, second, ["source"], "event_ts", "n_tok", output_dir=out,
-                        gapfill=False, encode=False, resume=True)
+    res2 = run_pipeline(spark, second, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
     incr_1m = res2.delta.select("source", "bucket", "n_points").collect()
     # the raw scan re-aggregated only buckets at/past the checkpoint (the
     # high-water bucket itself is open and reprocessed wholesale); the
@@ -109,10 +116,8 @@ def test_resume_boundary_bucket_and_quiet_keys(spark, tmp_path):
     full = spark.createDataFrame(first_rows + late_rows, schema)
 
     out = str(tmp_path / "bnd")
-    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False)
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False, resume=True)
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
     persisted = {
         (r.source, r.bucket): (r.n_points, r.sum_value)
@@ -134,8 +139,7 @@ def test_resume_boundary_bucket_and_quiet_keys(spark, tmp_path):
 
 def test_retention(spark, seqs, tmp_path):
     out = str(tmp_path / "ret")
-    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False)
+    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
     path = os.path.join(out, "tier=1m")
     before = spark.read.parquet(path).count()
     keep_after = datetime.datetime(2024, 1, 1, 3, 0)
@@ -156,15 +160,13 @@ def test_resume_heals_after_crash_between_write_and_checkpoint(spark, tmp_path):
     first = full.where(F.col("event_ts") < F.lit(cutoff))
     out = str(tmp_path / "crash")
 
-    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False)
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
     committed = ["_checkpoint_high_water", "_hw", "_snapshots"]
     for name in committed:
         shutil.copytree(os.path.join(out, name), str(tmp_path / f"{name}_backup"))
 
     # resume run 2 completes fully...
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False, resume=True)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
     # ...but we simulate the crash by rolling the WHOLE commit state
     # (marks + snapshot chain) back, as if the job died before committing
     for name in committed:
@@ -172,8 +174,7 @@ def test_resume_heals_after_crash_between_write_and_checkpoint(spark, tmp_path):
         shutil.copytree(str(tmp_path / f"{name}_backup"), os.path.join(out, name))
 
     # the healing re-run sees stale marks and reprocesses the increment
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False, resume=True)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
     persisted = spark.read.parquet(os.path.join(out, "tier=1m"))
     single = rollup(full, ["source"], "event_ts", "n_tok", "1m")
@@ -188,18 +189,19 @@ def test_resume_with_gapfill_encode_matches_single_shot(spark, tmp_path):
     merge-write then swapped in over the complete priors. The resume now
     re-derives every derived product from the MERGED tier for affected
     keys, so all three persisted tiers AND the chunk payloads must be
-    byte-identical to a single-shot run over the full data."""
+    byte-identical to a single-shot run over the full data — and the
+    single-shot chunks on disk equal the kernel's in-memory output."""
     full = synth_sequences(spark, 2000, mean_tokens=16, span_minutes=240).cache()
     cutoff = datetime.datetime(2024, 1, 1, 2, 0)
     first = full.where(F.col("event_ts") < F.lit(cutoff))
 
     out = str(tmp_path / "resumed")
     ref = str(tmp_path / "singleshot")
-    kwargs = dict(min_samples_train=10, gapfill=True, encode=True)
+    kwargs = dict(min_samples_train=10)
     run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out, **kwargs)
     run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
                  resume=True, **kwargs)
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref, **kwargs)
+    single = run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref, **kwargs)
 
     for tier in ("1m", "1h", "1d"):
         cols = ["source", "bucket", "n_points", "sum_value"]
@@ -221,31 +223,11 @@ def test_resume_with_gapfill_encode_matches_single_shot(spark, tmp_path):
             .select(*ccols).collect()
         )
         assert ca == cb, f"chunks for tier {tier} diverged after resume"
-
-
-def test_fused_resume_matches_single_shot(spark, tmp_path):
-    """Same invariant through the fused one-kernel path (what bench and
-    the 100 TB design actually run)."""
-    full = synth_sequences(spark, 2000, mean_tokens=16, span_minutes=240).cache()
-    cutoff = datetime.datetime(2024, 1, 1, 2, 0)
-    first = full.where(F.col("event_ts") < F.lit(cutoff))
-
-    out = str(tmp_path / "fused_resumed")
-    ref = str(tmp_path / "fused_singleshot")
-    kwargs = dict(min_samples_train=10, gapfill=True, encode=True,
-                  collect_metrics=False, fused=True)
-    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out, **kwargs)
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                 resume=True, **kwargs)
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref, **kwargs)
-
-    def chunk_set(base):
-        return sorted(
-            (r.source, r.tier, r.chunk_start, r.n_points, bytes(r.payload))
-            for r in spark.read.parquet(os.path.join(base, "chunks")).collect()
+        mem = sorted(
+            (r.source, r.chunk_start, r.n_points, bytes(r.payload))
+            for r in single.encoded[tier].select(*ccols).collect()
         )
-
-    assert chunk_set(out) == chunk_set(ref)
+        assert mem == cb and len(cb) > 0
 
 
 def test_merge_write_heals_crash_mid_swap(spark, tmp_path):
@@ -290,8 +272,7 @@ def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
     first = full.where(F.col("event_ts") < F.lit(cutoff))
 
     out = str(tmp_path / "pin")
-    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False)
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
     s1 = latest_snapshot_id(spark, out)
 
     # racing writer: clobber the mutable head with far-future marks —
@@ -306,7 +287,7 @@ def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
     os.rename(head + "__race", head)
 
     res = run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                       gapfill=False, encode=False, resume=True, pin_snapshot=s1)
+                       resume=True, pin_snapshot=s1)
 
     persisted = spark.read.parquet(os.path.join(out, "tier=1m"))
     single = rollup(full, ["source"], "event_ts", "n_tok", "1m")
@@ -330,10 +311,8 @@ def test_snapshot_log_chains_commits(spark, tmp_path):
     cutoff = datetime.datetime(2024, 1, 1, 1, 0)
     out = str(tmp_path / "snap")
     run_pipeline(spark, full.where(F.col("event_ts") < F.lit(cutoff)),
-                 ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False)
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False, resume=True)
+                 ["source"], "event_ts", "n_tok", output_dir=out)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
     snaps = read_snapshots(spark, out).collect()
     assert len(snaps) == 2
@@ -353,13 +332,11 @@ def test_retention_then_resume_does_not_resurrect_dropped_data(spark, tmp_path):
     first = full.where(F.col("event_ts") < F.lit(cutoff))
 
     out = str(tmp_path / "retres")
-    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False)
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
     keep_after = datetime.datetime(2024, 1, 1, 1, 0)
     apply_retention(spark, out, "1m", keep_after)
 
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False, resume=True)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
     persisted = spark.read.parquet(os.path.join(out, "tier=1m"))
     # expired buckets stay dropped
@@ -383,8 +360,7 @@ def test_layout_version_guard(spark, seqs, tmp_path):
     from datafiller_spark.plans.pipeline import LAYOUT_VERSION
 
     out = str(tmp_path / "lv")
-    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out,
-                 collect_metrics=False, gapfill=False, encode=False)
+    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
     marker = os.path.join(out, "_layout_version")
     assert os.path.exists(marker)
     assert int(open(marker).read()) == LAYOUT_VERSION
@@ -393,16 +369,31 @@ def test_layout_version_guard(spark, seqs, tmp_path):
     os.remove(marker)
     with _pytest.raises(EngineValueError, match="layout"):
         run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out,
-                     resume=True, collect_metrics=False, gapfill=False, encode=False)
+                     resume=True)
     # ... and so does a NON-resume run: stamping v2 onto it would bless
     # leftover v1 artifacts (old chunks, snapshot chain) as v2
     with _pytest.raises(EngineValueError, match="layout"):
-        run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out,
-                     collect_metrics=False, gapfill=False, encode=False)
+        run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
 
     # stale version → any persisted run refuses
     with open(marker, "w") as fh:
         fh.write("1")
     with _pytest.raises(EngineValueError, match="layout v1"):
         run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out,
-                     resume=True, collect_metrics=False, gapfill=False, encode=False)
+                     resume=True)
+
+
+def test_retired_fused_layout_refused(spark, seqs, tmp_path):
+    """A warehouse holding the retired fused layout (chunks/tier=<t>) is
+    refused: resuming into it would start a chunks_tier=<t> directory
+    with only the delta's keys, and range reads would miss the rest."""
+    import pytest as _pytest
+
+    from datafiller_spark.exceptions import EngineValueError
+
+    out = str(tmp_path / "old_fused")
+    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
+    os.makedirs(os.path.join(out, "chunks", "tier=1m"))
+    for resume in (True, False):
+        with _pytest.raises(EngineValueError, match="Rebuild the warehouse from raw"):
+            run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out, resume=resume)

@@ -131,8 +131,7 @@ def test_late_row_beyond_watermark_healed_by_batch_resume(spark, tmp_path):
     # the late row arrives after the stream finalized its window: heal
     # through the batch resume path over the full table
     full = spark.createDataFrame(on_time + late, schema)
-    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
-                 gapfill=False, encode=False, resume=True)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
     persisted = spark.read.parquet(os.path.join(out, "tier=1m"))
     single = rollup(full, ["source"], "event_ts", "n_tok", "1m")

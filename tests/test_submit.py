@@ -13,6 +13,7 @@ import sys
 import zipfile
 
 import pytest
+from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -51,8 +52,6 @@ def test_spark_submit_py_files_on_local_cluster(spark, tmp_path):
         "event_ts",
         "n_tok",
         min_samples_train=20,
-        collect_metrics=False,
-        fused=True,
     ).points
 
     out_dir = str(tmp_path / "warehouse")
@@ -96,5 +95,14 @@ def test_spark_submit_py_files_on_local_cluster(spark, tmp_path):
     # the warehouse the submitted job wrote is a real, readable one
     t1m = spark.read.parquet(os.path.join(out_dir, "tier=1m"))
     assert t1m.count() > 0
-    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
+    chunks = spark.read.parquet(os.path.join(out_dir, "chunks_tier=1d"))
     assert chunks.where("tier = '1d'").count() > 0
+    # ...and the chunk readers work on it: a range read, then retention
+    from datafiller_spark.plans import apply_chunk_retention, scan_chunks
+
+    span = t1m.agg(F.min("bucket"), F.max("bucket")).first()
+    read = scan_chunks(spark, out_dir, "1m", ["source"], span[0], span[1])
+    assert read.count() > 0
+    assert read.where(F.col("avg_value").isNull() | F.isnan("avg_value")).count() == 0
+    n_chunks = spark.read.parquet(os.path.join(out_dir, "chunks_tier=1m")).count()
+    assert 0 < apply_chunk_retention(spark, out_dir, "1m", ["source"], span[1]) <= n_chunks
