@@ -163,18 +163,25 @@ def _cache_path() -> str:
     never a predictable world-writable path — so on a shared host no
     other account can pre-plant a library at the expected name (CDLL
     runs constructors) or park an unreadable file there that would
-    permanently disable the fast path. A directory owned by someone
-    else is refused (raises, caller falls back to pure Python)."""
+    permanently disable the fast path. The path is checked with
+    ``lstat``: a symlink, a non-directory, a directory owned by someone
+    else or one that grants any group/other permission is refused
+    (raises, caller falls back to pure Python)."""
     import hashlib
+    import stat
 
     digest = hashlib.sha256(_C_SRC.encode()).hexdigest()[:16]
     cache_dir = os.path.join(
         tempfile.gettempdir(), f"datafiller_cext_u{os.getuid()}"
     )
     os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-    st = os.stat(cache_dir)
+    st = os.lstat(cache_dir)
+    if not stat.S_ISDIR(st.st_mode):
+        raise OSError(f"cext cache dir {cache_dir!r} is a symlink or not a directory")
     if st.st_uid != os.getuid():
         raise OSError(f"cext cache dir {cache_dir!r} not owned by this user")
+    if st.st_mode & 0o077:
+        raise OSError(f"cext cache dir {cache_dir!r} is accessible to other users")
     return os.path.join(cache_dir, f"{digest}.so")
 
 

@@ -1,12 +1,22 @@
 """The per-series runner every per-series operator shares.
 
-``repartition(keys) → sortWithinPartitions(keys, order) → mapInPandas``:
+``repartition(n, keys) → sortWithinPartitions(keys, order) → mapInPandas``:
 one hash shuffle, then Arrow moves PARTITION-sized batches into Python
 instead of one tiny frame per series. ``groupBy().applyInPandas`` pays a
 per-group fixed cost (Arrow batch framing + pandas construction, ~8 ms)
 that dominates wall and serializes scaling when groups are thousands of
 small series (measured: the bare kernel scales 0.98 at 1→4 procs while
 the applyInPandas stage scaled 0.56).
+
+The shuffle is sized to ``defaultParallelism`` — one Python task per
+core slot — rather than following ``spark.sql.shuffle.partitions`` or
+AQE. Each Python task pays a fixed set-up toll (0.2–0.25 CPU-s on a
+4-core host, mostly ``importlib.invalidate_caches`` re-reading
+``pyspark.zip`` in ``setup_spark_files``), so 16 shuffle partitions on 4
+cores pay it four times per core; and AQE merges a small (<1 MB by
+default) kernel input into ONE task, serializing the kernel math. A numbered
+repartition is never coalesced by AQE, so the stage runs exactly one
+task per core whatever the session's shuffle settings.
 
 Series are split with NumPy key-change scans over the sorted batch; a
 series spanning two Arrow batches of a partition is carried over, so
@@ -79,7 +89,7 @@ def _per_series(
             yield run_batch(carry)
 
     return (
-        df.repartition(*keys)
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
         .sortWithinPartitions(*keys, order_col)
         .mapInPandas(process_partition, schema=schema)
     )

@@ -39,6 +39,7 @@ import shutil
 import time
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -267,17 +268,20 @@ def _commit_snapshot(
 
     path = os.path.join(output_dir, "_snapshots")
     parent = latest_snapshot_id(spark, output_dir)
+    row = pd.DataFrame(
+        {
+            "snapshot_id": [snapshot_id],
+            "parent_id": [parent],
+            "anchor_id": [anchor_id],
+            "resume": [bool(resume)],
+            "committed_at": [float(_time.time())],
+            "counters": [json.dumps(counters)],
+        }
+    )
+    # from pandas, not a list: a list is shipped through a Python worker
+    # (~1 s per commit), a pandas frame goes over Arrow (~0.06 s)
     spark.createDataFrame(
-        [
-            (
-                snapshot_id,
-                parent,
-                anchor_id,
-                bool(resume),
-                float(_time.time()),
-                json.dumps(counters),
-            )
-        ],
+        row,
         "snapshot_id string, parent_id string, anchor_id string, "
         "resume boolean, committed_at double, counters string",
     ).coalesce(1).write.mode("append").parquet(path)
@@ -448,8 +452,10 @@ def run_pipeline(
         counters[f"tier_{tier}_points"] = grid
         counters[f"tier_{tier}_bytes"] = nbytes
         metrics_rows.append((tier, rows_in, grid, grid - rows_in, nbytes))
+    # pandas (Arrow), not a list, for the reason in _commit_snapshot
     metrics = spark.createDataFrame(
-        metrics_rows, "tier string, rows_in long, grid_rows long, gaps_filled long, bytes_out long"
+        pd.DataFrame(metrics_rows, columns=["tier", "rows_in", "grid_rows", "gaps_filled", "bytes_out"]),
+        "tier string, rows_in long, grid_rows long, gaps_filled long, bytes_out long",
     )
 
     lineage = None

@@ -72,9 +72,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # keep AQE's parallelism-first coalescing (default): size-based
-        # coalescing (parallelismFirst=false) starves Python-kernel
-        # stages, whose cost is per-row/per-group, not per-byte — a 64MB
-        # "small" shuffle can carry minutes of kernel CPU
+        # coalescing (parallelismFirst=false) would pack partitions up to
+        # the 64MB advisory size. Parallelism-first still never makes a
+        # partition smaller than coalescePartitions.minPartitionSize
+        # (1MB), so a shuffle under ~1MB per core loses parallelism: a
+        # 1.1MB kernel input becomes ONE task. Python-kernel stages cost
+        # per row/series, not per byte, so the per-series runner
+        # (operators/_series.py) uses a numbered repartition, which AQE
+        # never coalesces, instead of relying on this setting.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -47,16 +47,20 @@ def test_spark_matches_kernel_bitexact(spark):
 
 
 def test_partitioning_invariance(spark):
-    """Same result at 1 and 8 input partitions, and with Arrow batches of
+    """Same result at 1 and 8 input partitions, with Arrow batches of
     7 rows — every series then spans several batches, so the per-series
-    runner's cross-batch carry is exercised — for every operator on the
-    runner; model_gapfill also equals the kernel run directly."""
+    runner's cross-batch carry is exercised — and with
+    ``spark.sql.shuffle.partitions`` at 1 and 16, for every operator on
+    the runner; model_gapfill also equals the kernel run directly. The
+    runner's shuffle is sized to ``defaultParallelism`` whatever the
+    session's shuffle setting."""
     from datafiller_spark.operators import encode_tier, gapfill_metrics, spline_fill
 
     _, holed = _panel(n=90, gaps=((20, 24),))
     long = holed.reset_index().rename(columns={"index": "bucket"})
     long = pd.concat([long.assign(key=k) for k in ("a", "b", "c")], ignore_index=True)
     oracle = TimeSeriesImputer(lags=[1, -1], min_samples_train=10)(holed.astype("float64"))
+    cores = spark.sparkContext.defaultParallelism
 
     def run_all(parts):
         sdf = spark.createDataFrame(long[["key", "bucket", "m1", "m2"]]).repartition(parts)
@@ -72,6 +76,7 @@ def test_partitioning_invariance(spark):
         }
         out = {}
         for name, df in ops.items():
+            assert df.rdd.getNumPartitions() == cores, name
             pdf = df.toPandas()
             out[name] = pdf.sort_values(list(pdf.columns[:2])).reset_index(drop=True)
         got = out["model_gapfill"]
@@ -79,16 +84,24 @@ def test_partitioning_invariance(spark):
             np.testing.assert_array_equal(got.loc[got["key"] == k, ["m1", "m2"]].to_numpy(), oracle.to_numpy())
         return out
 
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    def run_with(conf, value, parts):
+        prior = spark.conf.get(conf)
+        try:
+            spark.conf.set(conf, value)
+            return run_all(parts)
+        finally:
+            spark.conf.set(conf, prior)
+
     baseline = run_all(1)
-    prior = spark.conf.get(conf)
-    try:
-        spark.conf.set(conf, "7")
-        small_batches = run_all(8)
-    finally:
-        spark.conf.set(conf, prior)
-    for name, got in [*run_all(8).items(), *small_batches.items()]:
-        pd.testing.assert_frame_equal(got, baseline[name], check_exact=True)
+    runs = [
+        run_all(8),
+        run_with("spark.sql.execution.arrow.maxRecordsPerBatch", "7", 8),
+        run_with("spark.sql.shuffle.partitions", "1", 8),
+        run_with("spark.sql.shuffle.partitions", "16", 8),
+    ]
+    for out in runs:
+        for name, got in out.items():
+            pd.testing.assert_frame_equal(got, baseline[name], check_exact=True)
 
 
 def test_grid_reinsertion_through_spark(spark):

@@ -598,6 +598,36 @@ def test_cext_recompiles_over_corrupt_cached_so(monkeypatch, tmp_path):
     ctypes.CDLL(corrupt)  # the recompile replaced the corrupt file
 
 
+def test_cext_cache_dir_symlink_or_open_mode_refused(monkeypatch, tmp_path):
+    """The cache dir is checked with lstat: a symlink planted at the
+    expected name (even to a 0700 directory of this user) is refused,
+    as is a real directory that grants group/other access, and lib()
+    then falls back to pure Python instead of loading from it."""
+    from datafiller_spark.kernels import cext
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    import tempfile as _tf
+
+    monkeypatch.setattr(_tf, "tempdir", None)  # re-read TMPDIR
+    target = tmp_path / "elsewhere"
+    target.mkdir(mode=0o700)
+    expected = tmp_path / f"datafiller_cext_u{os.getuid()}"
+    expected.symlink_to(target, target_is_directory=True)
+    with pytest.raises(OSError, match="symlink"):
+        cext._cache_path()
+    monkeypatch.delenv("DATAFILLER_SPARK_NO_CC", raising=False)
+    monkeypatch.setitem(cext._STATE, "lib", None)
+    monkeypatch.setitem(cext._STATE, "tried", False)
+    assert cext.lib() is None
+    assert not list(target.iterdir()), "nothing may be compiled through the link"
+
+    expected.unlink()
+    expected.mkdir()
+    expected.chmod(0o755)
+    with pytest.raises(OSError, match="other users"):
+        cext._cache_path()
+
+
 def test_jpeg_dht_trailing_garbage_raises():
     data = bytearray(encode_jpeg(_photo(16, 16)))
     at = bytes(data).find(b"\xff\xc4")

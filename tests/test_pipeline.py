@@ -310,14 +310,22 @@ def test_snapshot_log_chains_commits(spark, tmp_path):
     full = synth_sequences(spark, 800, mean_tokens=16, span_minutes=120).cache()
     cutoff = datetime.datetime(2024, 1, 1, 1, 0)
     out = str(tmp_path / "snap")
-    run_pipeline(spark, full.where(F.col("event_ts") < F.lit(cutoff)),
-                 ["source"], "event_ts", "n_tok", output_dir=out)
+    first = run_pipeline(spark, full.where(F.col("event_ts") < F.lit(cutoff)),
+                         ["source"], "event_ts", "n_tok", output_dir=out)
     run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
-    snaps = read_snapshots(spark, out).collect()
+    log = read_snapshots(spark, out)
+    assert dict(log.dtypes) == {
+        "snapshot_id": "string", "parent_id": "string", "anchor_id": "string",
+        "resume": "boolean", "committed_at": "double", "counters": "string",
+    }
+    snaps = log.collect()
     assert len(snaps) == 2
     head, root = snaps
-    assert root.parent_id is None and not root.resume
+    # the first commit: NULL parent, a real boolean, the run's counters
+    assert root.parent_id is None and root.resume is False
+    assert root.snapshot_id == first.snapshot_id
+    assert json.loads(root.counters) == first.counters
     assert head.parent_id == root.snapshot_id and head.resume
     assert json.loads(head.counters)["tier_1m_rows"] >= 0
 
