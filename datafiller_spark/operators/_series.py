@@ -1,12 +1,20 @@
-"""The per-series runner every per-series operator shares.
+"""Two runner layers:
 
-``repartition(n, keys) → sortWithinPartitions(keys, order) → mapInPandas``:
-one hash shuffle, then Arrow moves PARTITION-sized batches into Python
-instead of one tiny frame per series. ``groupBy().applyInPandas`` pays a
-per-group fixed cost (Arrow batch framing + pandas construction, ~8 ms)
-that dominates wall and serializes scaling when groups are thousands of
-small series (measured: the bare kernel scales 0.98 at 1→4 procs while
-the applyInPandas stage scaled 0.56).
+- ``_sorted_runs`` — ``repartition(n, keys) → sortWithinPartitions(keys,
+  order) → mapInPandas``: one hash shuffle, then Arrow moves
+  PARTITION-sized batches into Python. A run (the rows sharing ``keys``)
+  that spans two Arrow batches of a partition is carried over, so every
+  call of the batch function sees whole runs only, each in ``order``
+  order — results do not depend on partitioning or
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` (pinned by
+  tests/test_impute_spark.py and tests/test_dedup_similarity.py). Task
+  memory is one Arrow batch plus the longest run.
+- ``_per_series`` — the per-key split on top: one ``fn`` call per
+  series. ``groupBy().applyInPandas`` pays a per-group fixed cost
+  (Arrow batch framing + pandas construction, ~8 ms) that dominates wall
+  and serializes scaling when groups are thousands of small series
+  (measured: the bare kernel scales 0.98 at 1→4 procs while the
+  applyInPandas stage scaled 0.56).
 
 The shuffle is sized to ``defaultParallelism`` — one Python task per
 core slot — rather than following ``spark.sql.shuffle.partitions`` or
@@ -17,17 +25,11 @@ cores pay it four times per core; and AQE merges a small (<1 MB by
 default) kernel input into ONE task, serializing the kernel math. A numbered
 repartition is never coalesced by AQE, so the stage runs exactly one
 task per core whatever the session's shuffle settings.
-
-Series are split with NumPy key-change scans over the sorted batch; a
-series spanning two Arrow batches of a partition is carried over, so
-every series reaches ``fn`` whole and in ``order_col`` order — results
-do not depend on partitioning or ``spark.sql.execution.arrow.
-maxRecordsPerBatch`` (pinned by tests/test_impute_spark.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -36,6 +38,50 @@ from pyspark.sql.types import StructType
 
 from ..exceptions import EngineError
 from ..kernels.timeseries import TimeSeriesImputer
+
+
+def _sorted_runs(
+    df: DataFrame,
+    keys: Sequence[str],
+    order_cols: Sequence[str],
+    fn: Callable[[pd.DataFrame, np.ndarray], Iterator[pd.DataFrame]],
+    schema: StructType | str,
+) -> DataFrame:
+    """Yield the frames of ``fn(batch, starts)`` over ``df`` shuffled by
+    ``keys`` and sorted by ``keys`` then ``order_cols``.
+
+    ``batch`` holds whole runs only (all of ``df``'s columns) and
+    ``starts`` the row offset of each run in it; ``fn`` yields frames
+    carrying the columns of ``schema``."""
+    keys = list(keys)
+
+    def process_partition(batches):
+        carry: pd.DataFrame | None = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            # a run starts wherever a key changes
+            change = np.zeros(len(pdf), dtype=bool)
+            change[0] = True
+            for k in keys:
+                kv = pdf[k].to_numpy()
+                change[1:] |= kv[1:] != kv[:-1]
+            starts = np.flatnonzero(change)
+            # hold back the last run — it may continue in the next Arrow
+            # batch of this partition
+            carry = pdf.iloc[starts[-1] :]
+            if len(starts) > 1:
+                yield from fn(pdf.iloc[: starts[-1]], starts[:-1])
+        if carry is not None:
+            yield from fn(carry, np.zeros(1, dtype=np.int64))
+
+    return (
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+        .sortWithinPartitions(*keys, *order_cols)
+        .mapInPandas(process_partition, schema=schema)
+    )
 
 
 def _per_series(
@@ -53,46 +99,15 @@ def _per_series(
     keys = list(keys)
     out_cols = schema.fieldNames()
 
-    def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        change = np.zeros(len(pdf), dtype=bool)
-        change[0] = True
-        for k in keys:
-            kv = pdf[k].to_numpy()
-            change[1:] |= kv[1:] != kv[:-1]
-        starts = np.flatnonzero(change)
+    def run_batch(pdf: pd.DataFrame, starts: np.ndarray):
         ends = np.append(starts[1:], len(pdf))
         frames = [
             fn({k: pdf[k].iat[s] for k in keys}, pdf.iloc[s:e])
             for s, e in zip(starts, ends)
         ]
-        return pd.concat(frames, ignore_index=True)[out_cols]
+        yield pd.concat(frames, ignore_index=True)[out_cols]
 
-    def process_partition(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # hold back the trailing series — it may continue in the
-            # next Arrow batch of this partition
-            tail = np.ones(len(pdf), dtype=bool)
-            for k in keys:
-                kv = pdf[k].to_numpy()
-                tail &= kv == kv[-1]
-            # rows are key-sorted, so the last series is a contiguous tail
-            first_of_last = len(pdf) - int(tail[::-1].argmin()) if not tail.all() else 0
-            carry = pdf.iloc[first_of_last:]
-            if first_of_last:
-                yield run_batch(pdf.iloc[:first_of_last])
-        if carry is not None and len(carry):
-            yield run_batch(carry)
-
-    return (
-        df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
-        .sortWithinPartitions(*keys, order_col)
-        .mapInPandas(process_partition, schema=schema)
-    )
+    return _sorted_runs(df, keys, [order_col], run_batch, schema)
 
 
 def _impute(frame: pd.DataFrame, n_nearest_features=None, **params) -> tuple[pd.DataFrame, dict]:

@@ -5,10 +5,10 @@ by adding executors (no driver-side state, no pairwise all-to-all except
 within candidate buckets):
 
 - exact:   hash-groupBy on a normalized-content fingerprint. One shuffle.
-- n-gram Jaccard: word-shingle explode → self-join on shingle →
-  intersection counts. Exact but quadratic within a shingle's posting
-  list; at 100 TB this is the *verifier*, run only inside candidate
-  buckets produced by MinHash-LSH.
+- n-gram Jaccard: word-shingle explode → shuffle by shingle → per-task
+  pair counts over each sorted posting list → one sum per pair. Exact
+  but quadratic within a shingle's posting list; at 100 TB this is the
+  *verifier*, run only inside candidate buckets produced by MinHash-LSH.
 - MinHash + LSH: k min-hashes per doc from shingle md5-low-32 hashes
   (affine hash family mod a Mersenne prime), banded into b buckets;
   only same-band collisions are verified. Linear shuffle volume; the
@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..spread import spread_input
+from ._series import _sorted_runs
 from .banding import banded_pairs
 
 _MERSENNE = (1 << 31) - 1
@@ -49,39 +50,10 @@ if sys.byteorder != "little":  # pragma: no cover - no big-endian CI host
         "SimHash packs/unpacks signature bits through native byte views."
     )
 
-# pair-expansion block: two int64 index arrays of this length ≈ 64 MB
-# peak — the memory unit for streamed posting-list pair expansion
-_PAIR_BLOCK = 1 << 22
-
-
-def _triu_blocks(L: int, block: int):
-    """Yield (i, j) index-array blocks covering the strict upper
-    triangle of an L×L grid, each block holding ≤ ``block`` pairs
-    (a single row wider than ``block`` is split by column range).
-    Equivalent to ``np.triu_indices(L, k=1)`` streamed in bounded
-    allocations."""
-    r0 = 0
-    while r0 < L - 1:
-        row_pairs = L - 1 - r0
-        if row_pairs > block:
-            # one row alone exceeds the block: walk its columns
-            for c0 in range(r0 + 1, L, block):
-                j = np.arange(c0, min(c0 + block, L), dtype=np.int64)
-                yield np.full(len(j), r0, dtype=np.int64), j
-            r0 += 1
-            continue
-        # greedily take rows [r0, r1) while the pair total fits
-        total, r1 = 0, r0
-        while r1 < L - 1 and total + (L - 1 - r1) <= block:
-            total += L - 1 - r1
-            r1 += 1
-        rows = np.arange(r0, r1, dtype=np.int64)
-        counts = L - 1 - rows
-        i = np.repeat(rows, counts)
-        starts = np.cumsum(counts) - counts
-        j = np.arange(total, dtype=np.int64) - np.repeat(starts, counts) + i + 1
-        yield i, j
-        r0 = r1
+# pairs per block of the n-gram pair count: each int64 array over one
+# block is 8 MB and the count holds a few at once, so a task's memory
+# does not grow with the square of a posting list's length
+_PAIR_BLOCK = 1 << 20
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -140,9 +112,8 @@ _WS_ASCII = re.compile(r"[ \t\n\x0b\f\r]+")
 
 def _shingle_list(t: str | None, n: int) -> list[str]:
     """Distinct word n-grams of one document, first-occurrence order —
-    the Python twin of ``_shingles_expr`` (pinned equal by tests).
-    Shared by the ``_shingles`` UDF and the broadcast-index stream so
-    both compute the identical gram sets."""
+    the Python twin of ``_shingles_expr`` (pinned equal by tests) and
+    the body of the ``_shingles`` UDF."""
     if t is None:
         # size(null) fails the >= n condition in the SQL form,
         # which then yields the empty array
@@ -171,168 +142,6 @@ def _shingles(text_col: str, n: int):
     return shingle.asNondeterministic()(F.col(text_col))
 
 
-#: default budget for the broadcast posting index of the n-gram
-#: Jaccard fast path, in total (doc, gram) entries. The per-worker
-#: deserialized cost is dict overhead + gram-string keys + int64 id
-#: arrays ≈ 200-300 bytes/entry worst case, i.e. ~2-2.5 GB per Python
-#: worker at this cap — bounded on any executor sized for pandas work,
-#: and EVERY worker of an executor pays it simultaneously during the
-#: counting stage, so the cap must stay conservative (32 M entries
-#: would be ~10 GB/worker: an OOM, not a fast path). sf1.0 of the
-#: bench corpus is 2.6 M entries; corpora past the budget take the
-#: streamed shuffle path, which is the 100 TB shape anyway.
-_INDEX_MAX_ENTRIES = 8_000_000
-
-_INT_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
-
-
-def _jaccard_via_broadcast_index(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    threshold: float,
-    max_posting_len: int | None,
-    max_entries: int,
-    id_type: str,
-) -> DataFrame | None:
-    """Small/medium-corpus fast path for exact n-gram Jaccard: broadcast
-    the posting index, count intersections per document with one
-    ``np.unique`` — ZERO pair shuffle.
-
-    The shuffle form expands every (doc_a, doc_b, shared-gram) occurrence
-    into a row (O(Σ L²) rows — ~10⁸ at 50 k docs), Arrow-ships them to
-    the JVM, partially aggregates, exchanges ~1 GB and aggregates again,
-    all to find the handful of above-threshold pairs. When the inverted
-    index fits a broadcast (≤ ``max_entries`` total (doc, gram) entries),
-    the same counts fall out of a per-document vectorized pass:
-    concatenate the (pre-sorted) posting lists of the doc's grams, keep
-    ids > doc (each pair counted exactly once, from its smaller id), and
-    ``np.unique(…, return_counts=True)`` IS the per-pair shared-gram
-    count. Candidate work is identical to the shuffle form (same Σ L²
-    elements touched) but at NumPy sort speed with nothing crossing the
-    wire. The same hybrid-by-bound pattern as ``dup_clusters``' driver
-    union-find; above the bound the shuffle path runs unchanged — that
-    remains the 100 TB shape.
-
-    Job shape (each job costs ~1.5 s of fixed dispatch on the bench
-    box): (1) a JVM-only budget gate — Σ max(words − n + 1, 0) upper-
-    bounds the distinct-gram entries without running any Python; (2) ONE
-    shingle pass, collected, from which the driver inverts the posting
-    index vectorized (factorize + lexsort) and broadcasts it; the
-    returned plan re-shingles inline inside the counting kernel
-    (``_shingle_list``), so the caller's action is one more job and the
-    whole path runs the Python shingler exactly twice with no persist.
-
-    Jaccard values are bit-identical to the shuffle form: the division
-    is the same float64 op, and the final round(…, 6) + threshold filter
-    stay JVM-side (Python applies only a provably-loose raw prefilter,
-    ``j ≥ threshold − 1e-6``: a raw value below that cannot round up to
-    ``threshold`` since round6 moves a value by ≤ 5e-7).
-
-    Returns None (caller falls back) when the gate exceeds the budget.
-    Integer id columns only — candidate ordering relies on numpy/JVM
-    agreeing on id order, which holds for ints but not for non-ASCII
-    strings (numpy compares code points, Spark compares UTF-8 bytes).
-    """
-    spark = docs.sparkSession
-    # JVM-only gate: distinct grams per doc ≤ max(n_words − n + 1, 0)
-    words = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    upper = docs.agg(
-        F.sum(F.greatest(F.size(words) - (n - 1), F.lit(0))).alias("e")
-    ).first()["e"] or 0
-    if upper == 0 or upper > max_entries:
-        return None
-    shingled = docs.select(
-        F.col(id_col).alias("id"), _shingles(text_col, n).alias("grams")
-    ).where(F.size("grams") > 0)
-    pdf = shingled.toPandas()
-    ids = pdf["id"].to_numpy().astype(np.int64)
-    gram_arrays = pdf["grams"].to_numpy()
-    lens = np.fromiter((len(g) for g in gram_arrays), dtype=np.int64, count=len(pdf))
-    # driver-side posting inversion, vectorized. Docs are processed in
-    # ASCENDING id order, so after a STABLE argsort by gram code each
-    # posting slice is already id-sorted — a single-key stable sort
-    # instead of a two-key lexsort.
-    doc_order = np.argsort(ids, kind="stable")
-    ids = ids[doc_order]
-    lens = lens[doc_order]
-    gram_arrays = gram_arrays[doc_order]
-    flat_ids = np.repeat(ids, lens)
-    if len(gram_arrays):
-        flat_grams = np.concatenate([np.asarray(g, dtype=object) for g in gram_arrays])
-    else:
-        flat_grams = np.array([], dtype=object)
-    codes, gram_names = pd.factorize(flat_grams)
-    order = np.argsort(codes, kind="stable")
-    sorted_flat_ids = flat_ids[order]
-    counts = np.bincount(codes, minlength=len(gram_names))
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    cap = max_posting_len if max_posting_len is not None else np.iinfo(np.int64).max
-    index = {
-        gram_names[c]: sorted_flat_ids[starts[c] : starts[c] + counts[c]]
-        for c in np.nonzero((counts >= 2) & (counts <= cap))[0]
-    }
-    sorted_ids = ids
-    sorted_n = lens
-    bc = spark.sparkContext.broadcast((index, sorted_ids, sorted_n))
-    loose = threshold - 1e-6
-
-    def _count(batches):
-        idx, sid, sn = bc.value
-        for pdf in batches:
-            out_a, out_b, out_i, out_u = [], [], [], []
-            for a, text in zip(pdf[id_col], pdf[text_col]):
-                grams = _shingle_list(text, n)
-                na = len(grams)
-                if not na:
-                    continue
-                a = int(a)
-                lists = []
-                for g in grams:
-                    arr = idx.get(g)
-                    if arr is not None:
-                        # pre-sorted posting list: slice to ids > a so the
-                        # pair (a, b) is counted once, from its smaller id
-                        tail = arr[np.searchsorted(arr, a, side="right") :]
-                        if len(tail):
-                            lists.append(tail)
-                if not lists:
-                    continue
-                cand = np.concatenate(lists)
-                b, inter = np.unique(cand, return_counts=True)
-                nb = sn[np.searchsorted(sid, b)]
-                union = na + nb - inter
-                keep = inter >= loose * union  # loose raw prefilter only
-                if not keep.any():
-                    continue
-                out_a.append(np.full(int(keep.sum()), a, dtype=np.int64))
-                out_b.append(b[keep])
-                out_i.append(inter[keep].astype(np.int64))
-                out_u.append(union[keep].astype(np.int64))
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "inter": np.concatenate(out_i),
-                        "union_size": np.concatenate(out_u),
-                    }
-                )
-
-    raw = docs.mapInPandas(
-        _count,
-        schema=f"id_a {id_type}, id_b {id_type}, inter bigint, union_size bigint",
-    )
-    # round + threshold stay JVM-side: Spark's HALF_UP round is the
-    # cross-engine contract (numpy rounds half-to-even)
-    return (
-        raw.withColumn("jaccard", F.round(F.col("inter") / F.col("union_size"), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "inter", "union_size", "jaccard")
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -340,12 +149,11 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_posting_len: int | None = None,
-    pair_block: int = _PAIR_BLOCK,
-    broadcast_index_max_entries: int | None = _INDEX_MAX_ENTRIES,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs over word n-gram shingle sets.
 
-    Output: (id_a, id_b, inter, union_size, jaccard) with id_a < id_b.
+    Output: (id_a, id_b, inter, union_size, jaccard) with id_a < id_b in
+    Spark's ordering of the id column (any orderable id type).
 
     Quadratic in posting-list density — this is the VERIFIER; the scale
     path is ``minhash_lsh_pairs``. ``max_posting_len`` caps the pair
@@ -360,112 +168,78 @@ def ngram_jaccard_pairs(
     library callers get textbook semantics unless they opt into the
     approximation); production pipelines over open-web corpora should
     pass a finite cap (the entry queries use 10 000, mirrored in their
-    DuckDB oracle). Peak task memory stays bounded either way because
-    pair expansion is streamed in ``pair_block``-sized blocks (default
-    ``_PAIR_BLOCK`` ≈ 64 MB of index arrays); with ``None`` only total
-    CPU work is unbounded.
+    DuckDB oracle).
 
-    ``broadcast_index_max_entries`` bounds the small-corpus broadcast-
-    index fast path (see ``_jaccard_via_broadcast_index``); its budget
-    gate runs one eager JVM-only scan of the text column at call time.
-    Callers at known over-budget scale should pass ``0``/``None``,
-    which skips the gate entirely and keeps the call fully lazy on the
-    streamed shuffle path.
+    One lazy plan: shingle once, explode to (id, n_grams, gram) rows,
+    shuffle by gram onto the sorted-run runner (``_series._sorted_runs``)
+    so each task sees whole, id-sorted posting lists, and count pairs
+    there with one vectorized NumPy pass per block of ≤ ``_PAIR_BLOCK``
+    pairs: each entry's tail (the later ids of its posting list) is
+    expanded with ``repeat``/``arange``, every pair becomes one int64 key
+    and ``np.unique(return_counts=True)`` is the per-task shared-gram
+    count. Task memory is one Arrow batch plus one posting list plus one
+    block, whatever the cap. Pairs failing the exact size bound
+    ``min(na, nb) ≥ (threshold − 1e-6)·max(na, nb)`` are dropped there
+    (Jaccard ≤ min/max, and round6 moves a value by ≤ 5e-7); the partial
+    counts are summed in one JVM aggregation. Jaccard's round(…, 6) and
+    the threshold filter stay JVM-side: Spark's HALF_UP round is the
+    cross-engine contract (numpy rounds half-to-even).
     """
-    docs = spread_input(df.select(id_col, text_col))
+    # a NULL id has no place in the id order the pairs are oriented by
+    docs = spread_input(df.select(id_col, text_col).where(F.col(id_col).isNotNull()))
     id_type = df.schema[id_col].dataType.simpleString()
-    if broadcast_index_max_entries and id_type in _INT_ID_TYPES:
-        fast = _jaccard_via_broadcast_index(
-            docs,
-            id_col,
-            text_col,
-            n,
-            threshold,
-            max_posting_len,
-            broadcast_index_max_entries,
-            id_type,
-        )
-        if fast is not None:
-            return fast
-    shingled = docs.select(
+    posting = docs.select(
         F.col(id_col).alias("id"), _shingles(text_col, n).alias("grams")
-    ).where(F.size("grams") > 0)
-    sizes = shingled.select("id", F.size("grams").alias("n_grams"))
-    posting = shingled.select("id", F.explode("grams").alias("gram"))
-    # group each gram's posting list and expand its pairs in ONE Arrow
-    # kernel (np.triu_indices over the sorted ids): the same pair
-    # multiset the posting⋈posting SQL self-join produced, minus one
-    # full shuffle of the join build side and its JVM row-at-a-time
-    # pair materialization. A doc's shingles are DISTINCT, so ids are
-    # unique within a group and id_a < id_b falls out of the sort.
-    # The posting cap becomes a plain size filter (the window-count
-    # form cost an extra shuffle).
-    members = posting.groupBy("gram").agg(F.sort_array(F.collect_list("id")).alias("ids"))
-    members = members.where(F.size("ids") >= 2)
-    if max_posting_len is not None:
-        members = members.where(F.size("ids") <= max_posting_len)
-    # pair-expansion work is O(L²) per posting list while the list ROWS
-    # are tiny: AQE's byte-based coalescing would shrink this exchange
-    # to a handful of tasks and serialize the CPU-heavy expansion, so
-    # re-spread the lists round-robin over the cluster (4 waves/core
-    # smooths the L² skew between lists)
-    members = members.select("ids").repartition(
-        max(df.sparkSession.sparkContext.defaultParallelism, 1) * 4
-    )
+    ).select("id", F.size("grams").alias("n_grams"), F.explode("grams").alias("gram"))
+    block = _PAIR_BLOCK
+    loose = threshold - 1e-6
 
-    def _expand(batches):
-        # Streamed pair expansion: pairs are emitted in ≤ pair_block
-        # blocks, so one hot posting list can never materialize its full
-        # O(L²) index set in a single allocation (a 10⁵-doc shingle is
-        # ~5·10⁹ pairs ≈ 80 GB if expanded at once). Small lists batch
-        # together; a list whose pair count exceeds the block is walked
-        # by row range (and a single row wider than the block by column
-        # range), so peak memory is ~2 · pair_block ids regardless of L.
-        buf_a, buf_b, buffered = [], [], 0
-        for pdf in batches:
-            for ids in pdf["ids"]:
-                arr = np.asarray(ids)
-                L = len(arr)
-                n_pairs = L * (L - 1) // 2
-                if n_pairs <= pair_block:
-                    i, j = np.triu_indices(L, k=1)
-                    buf_a.append(arr[i])
-                    buf_b.append(arr[j])
-                    buffered += n_pairs
-                    if buffered >= pair_block:
-                        yield pd.DataFrame(
-                            {"id_a": np.concatenate(buf_a), "id_b": np.concatenate(buf_b)}
-                        )
-                        buf_a, buf_b, buffered = [], [], 0
-                    continue
-                if buffered:
-                    yield pd.DataFrame(
-                        {"id_a": np.concatenate(buf_a), "id_b": np.concatenate(buf_b)}
-                    )
-                    buf_a, buf_b, buffered = [], [], 0
-                for bi, bj in _triu_blocks(L, pair_block):
-                    yield pd.DataFrame({"id_a": arr[bi], "id_b": arr[bj]})
-        if buffered:
-            yield pd.DataFrame(
-                {"id_a": np.concatenate(buf_a), "id_b": np.concatenate(buf_b)}
-            )
+    def count_pairs(pdf: pd.DataFrame, starts: np.ndarray):
+        # one gram per run, ids ascending within it (the JVM sort), so
+        # each pair is counted from its earlier entry, oriented a < b
+        lens = np.diff(starts, append=len(pdf))
+        keep = lens >= 2
+        if max_posting_len is not None:
+            keep &= lens <= max_posting_len
+        pos = np.arange(len(pdf)) - np.repeat(starts, lens)
+        tails = np.where(np.repeat(keep, lens), np.repeat(lens, lens) - 1 - pos, 0)
+        entries = np.flatnonzero(tails)
+        tails = tails[entries]
+        sizes = pdf["n_grams"].to_numpy()
+        codes, uniq = pd.factorize(pdf["id"].to_numpy())
+        n_of = np.empty(len(uniq), dtype=sizes.dtype)
+        n_of[codes] = sizes
+        ends = np.cumsum(tails)
+        lo = 0
+        while lo < len(entries):
+            # entries [lo, hi) hold ≤ block pairs (one entry if its tail alone is longer)
+            hi = max(int(np.searchsorted(ends, ends[lo] - tails[lo] + block, "right")), lo + 1)
+            t = tails[lo:hi]
+            a = np.repeat(entries[lo:hi], t)
+            b = a + 1 + np.arange(len(a)) - np.repeat(np.cumsum(t) - t, t)
+            sa, sb = sizes[a], sizes[b]
+            ok = np.minimum(sa, sb) >= loose * np.maximum(sa, sb)
+            key, inter = np.unique(codes[a[ok]] * len(uniq) + codes[b[ok]], return_counts=True)
+            if len(key):
+                ca, cb = np.divmod(key, len(uniq))
+                yield pd.DataFrame(
+                    {"id_a": uniq[ca], "id_b": uniq[cb], "inter": inter, "na": n_of[ca], "nb": n_of[cb]}
+                )
+            lo = hi
 
-    inter = (
-        members.select("ids")
-        .mapInPandas(_expand, schema=f"id_a {id_type}, id_b {id_type}")
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
+    partial = _sorted_runs(
+        posting,
+        ["gram"],
+        ["id"],
+        count_pairs,
+        f"id_a {id_type}, id_b {id_type}, inter bigint, na int, nb int",
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_grams").alias("na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_grams").alias("nb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("union_size", F.col("na") + F.col("nb") - F.col("inter"))
-        .withColumn("jaccard", F.round(F.col("inter") / F.col("union_size"), 6))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "inter", "union_size", "jaccard")
+    inter = F.sum("inter")
+    pairs = partial.groupBy("id_a", "id_b").agg(
+        inter.alias("inter"), (F.max("na") + F.max("nb") - inter).alias("union_size")
     )
+    jaccard = F.round(F.col("inter") / F.col("union_size"), 6)
+    return pairs.select("*", jaccard.alias("jaccard")).where(F.col("jaccard") >= threshold)
 
 
 def _minhash_params(k: int, seed: int = 11) -> list[tuple[int, int]]:

@@ -51,7 +51,7 @@ def get_spark(
 
                 _pin_blas_single_thread()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # one shuffle partition per core locally; on a real cluster this is

@@ -123,7 +123,7 @@ def sweep():
     from datafiller_spark.sources import load_table
     from pyspark.sql import functions as F
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     emb = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", F.transform("embedding", lambda v: v.cast("double")).alias("embedding")
     )
@@ -150,7 +150,7 @@ def validate():
     from datafiller_spark.sources import load_table
     from pyspark.sql import functions as F
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     emb = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", F.transform("embedding", lambda v: v.cast("double")).alias("embedding")
     )

@@ -332,13 +332,13 @@ def main() -> int:
 
         spark = (
             SparkSession.builder.appName("oracle_check_plain")
-            .master("local[8]")
+            .master(f"local[{len(os.sched_getaffinity(0))}]")
             .config("spark.sql.session.timeZone", "America/New_York")
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )
     else:
-        spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+        spark = get_spark(app_name="oracle_check")
 
     failures = 0
     for name, fn in qs.items():

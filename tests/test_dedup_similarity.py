@@ -13,6 +13,7 @@ from datafiller_spark.operators import (
     ngram_jaccard_pairs,
     simhash_duplicates,
 )
+from datafiller_spark.operators.dedup import _shingle_list
 from datafiller_spark.sources import load_table
 
 
@@ -100,73 +101,93 @@ def test_ngram_jaccard_posting_cap_is_conservative(spark):
     assert (100, 101) in capped  # distinctive pair survives the cap
 
 
-def test_ngram_pair_expansion_streams_in_blocks(spark):
-    """A hot shingle's posting list expands in bounded pair blocks, not
-    one O(L²) allocation: a tiny pair_block forcing dozens of blocks
-    (including the single-row column-split path) must reproduce the
-    unchunked output exactly."""
-    boiler = "lorem ipsum dolor"  # 3-gram shared by every doc
-    rows = [(i, f"{boiler} tail {i} x{i % 7} y{i % 5}") for i in range(60)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    # broadcast_index_max_entries=None pins the SHUFFLE path: pair_block
-    # only exists there (the r7 broadcast-index fast path never
-    # materializes pairs per gram)
-    kwargs = dict(n=3, threshold=0.05, max_posting_len=None, broadcast_index_max_entries=None)
-    unchunked = {
-        (r.id_a, r.id_b): (r.inter, r.union_size, r.jaccard)
-        for r in ngram_jaccard_pairs(df, **kwargs).collect()
-    }
-    # 60-doc list = 1770 pairs; block of 40 → ~45 blocks, and rows near
-    # the top (59 pairs each) exercise multi-row packing while a block
-    # of 10 also forces the single-row column-range split
-    for block in (40, 10):
-        chunked = {
-            (r.id_a, r.id_b): (r.inter, r.union_size, r.jaccard)
-            for r in ngram_jaccard_pairs(df, pair_block=block, **kwargs).collect()
-        }
-        assert chunked == unchunked
-    assert len(unchunked) > 0
+def _jaccard_reference(rows, n, threshold, cap):
+    """Brute-force exact n-gram Jaccard: set algebra over ``_shingle_list``
+    per pair of documents, grams shared by more than ``cap`` documents
+    left out of the intersection, and Spark's HALF_UP round(…, 6)."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+    from itertools import combinations
+
+    grams = {i: set(_shingle_list(t, n)) for i, t in rows if i is not None}
+    posting_len = Counter(g for s in grams.values() for g in s)
+    out = {}
+    for a, b in combinations(sorted(grams), 2):
+        inter = sum(1 for g in grams[a] & grams[b] if cap is None or posting_len[g] <= cap)
+        if not inter:
+            continue
+        union = len(grams[a]) + len(grams[b]) - inter
+        jaccard = float(Decimal(repr(inter / union)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+        if jaccard >= threshold:
+            out[(a, b)] = (inter, union, jaccard)
+    return out
 
 
-def test_ngram_broadcast_index_fast_path_matches_shuffle_path(spark):
-    """The r7 broadcast-index fast path must reproduce the shuffle
-    path's output EXACTLY — same pairs, same inter/union/jaccard — with
-    and without a binding posting cap, including cap-binding corpora
-    where reported intersections are the capped lower bound."""
-    boiler = "lorem ipsum dolor"
-    rows = [(i, f"{boiler} unique tail {i} {i + 1} {i + 2}") for i in range(30)]
-    rows += [
+def test_ngram_jaccard_matches_brute_force_reference(spark, monkeypatch):
+    """Every pair, intersection, union and rounded Jaccard equals the
+    brute-force reference exactly — with and without a binding posting
+    cap, for bigint, int and string ids (string ids order as text, so
+    "10" < "9") — and stays so whatever the shuffle width, with a posting
+    list spread over many 7-row Arrow batches (the sorted-run carry), and
+    with pair blocks of 10 (many blocks; single entries whose tail alone
+    exceeds a block). NULL, empty and shorter-than-n texts have no
+    grams; a NULL id is never paired."""
+    from datafiller_spark.operators import dedup
+
+    boiler = "lorem ipsum dolor"  # every non-empty doc shares these grams
+    texts = [(i, f"{boiler} tail {i % 4} x{i % 7} y{i % 5}") for i in range(36)]
+    texts += [
         (100, "a very distinctive document about tier rollups here"),
-        (101, "a very distinctive document about tier rollups there"),
-        (102, None),
-        (103, ""),
+        (101, "a very distinctive document about tier rollups there " + boiler),
+        (102, boiler + " " + " ".join(f"w{k}" for k in range(60))),  # size bound rejects
+        (103, None),
+        (104, ""),
+        (105, "too short"),
+        (None, f"{boiler} tail 1 x1 y1"),  # NULL id: never paired
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    slow_by_cap = {}
-    for cap in (None, 10):
-        fast = {
-            (r.id_a, r.id_b): (r.inter, r.union_size, r.jaccard)
-            for r in ngram_jaccard_pairs(
-                df, n=3, threshold=0.2, max_posting_len=cap
-            ).collect()
+    threshold, n = 0.1, 3
+    refs = {cap: _jaccard_reference(texts, n, threshold, cap) for cap in (None, 10)}
+    assert refs[10] and refs[None] and refs[10] != refs[None]
+
+    def pairs(df, cap, cast):
+        return {
+            (cast(r.id_a), cast(r.id_b)): (r.inter, r.union_size, r.jaccard)
+            for r in ngram_jaccard_pairs(df, n=n, threshold=threshold, max_posting_len=cap).collect()
         }
-        slow_by_cap[cap] = {
-            (r.id_a, r.id_b): (r.inter, r.union_size, r.jaccard)
-            for r in ngram_jaccard_pairs(
-                df, n=3, threshold=0.2, max_posting_len=cap,
-                broadcast_index_max_entries=None,
-            ).collect()
-        }
-        assert fast == slow_by_cap[cap]
-        assert len(fast) > 0
-    # over-budget gate falls back to the shuffle path (still correct)
-    tiny_budget = {
-        (r.id_a, r.id_b): (r.inter, r.union_size, r.jaccard)
-        for r in ngram_jaccard_pairs(
-            df, n=3, threshold=0.2, broadcast_index_max_entries=5
-        ).collect()
-    }
-    assert tiny_budget == slow_by_cap[None]
+
+    frames = [
+        (spark.createDataFrame(texts, "doc_id bigint, text string"), int),
+        (spark.createDataFrame(texts, "doc_id int, text string"), int),
+        (
+            spark.createDataFrame(
+                [(None if i is None else str(i), t) for i, t in texts], "doc_id string, text string"
+            ),
+            str,
+        ),
+    ]
+
+    def check_all():
+        for df, cast in frames:
+            for cap, ref in refs.items():
+                want = ref if cast is int else {
+                    tuple(sorted(map(str, p))): v for p, v in ref.items()
+                }
+                assert pairs(df, cap, cast) == want, (df.schema["doc_id"].dataType, cap)
+
+    check_all()
+    for conf, value in (
+        ("spark.sql.shuffle.partitions", "1"),
+        ("spark.sql.shuffle.partitions", "16"),
+        ("spark.sql.execution.arrow.maxRecordsPerBatch", "7"),
+    ):
+        prior = spark.conf.get(conf)
+        try:
+            spark.conf.set(conf, value)
+            check_all()
+        finally:
+            spark.conf.set(conf, prior)
+    monkeypatch.setattr(dedup, "_PAIR_BLOCK", 10)
+    check_all()
 
 
 def test_ngram_default_posting_cap_is_exact():

@@ -132,3 +132,24 @@ def test_asof_join_is_one_shuffle_no_range_explosion(spark, sf_dir):
     plan = _plan(entrymod.q_asof_join(spark, sf_dir))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "Window" in plan, "asof = union + carry-forward window, not a range join"
+
+
+def test_ngram_jaccard_is_lazy_with_no_broadcast(spark, sf_dir):
+    """Building the n-gram Jaccard plan starts no Spark job (no eager
+    gate, no collect of the shingles) and the plan is one shuffle-by-gram
+    pandas stage: no broadcast index and a single MapInPandas."""
+    from datafiller_spark.operators import ngram_jaccard_pairs
+
+    docs = load_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+    sc.setJobGroup("ngram_jaccard_plan", "building the n-gram Jaccard plan")
+    try:
+        pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.2, max_posting_len=10_000)
+        started = sc.statusTracker().getJobIdsForGroup("ngram_jaccard_plan")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(started) == [], f"ngram_jaccard_pairs ran jobs at call time: {started}"
+    plan = _plan(pairs)
+    assert "BroadcastExchange" not in plan
+    assert plan.count("MapInPandas") == 1
