@@ -48,6 +48,13 @@ from .scoring import score_features
 
 _DEFAULT_MIN_SAMPLES_TRAIN = 20
 
+# Targets scored per block by ``select_features``. ``score_features``
+# holds about six (targets × features) float64 arrays at once, so a
+# block of 128 targets against the ~3·10^4 lag features of a 10^4-sensor
+# panel stays near 180 MB, where scoring every target at once needs
+# ~2.4 GB per array.
+_SELECT_BLOCK_TARGETS = 128
+
 
 def _as_index_array(to_impute: None | int | Iterable, size: int) -> np.ndarray:
     """Resolve a rows/cols selector into validated, unique int64 positions.
@@ -397,7 +404,9 @@ class MultivariateImputer:
         per-column or per-(target, feature)-pair: standardization and
         score moments read only the two columns involved, and the
         stable top-k tie-break is by column order, which an
-        order-preserving column subset preserves.
+        order-preserving column subset preserves. The same holds for
+        the targets: they are scored ``_SELECT_BLOCK_TARGETS`` at a
+        time, which bounds the scoring arrays on wide panels.
         """
         _ensure_blas_pinned()
         x = np.asarray(x)
@@ -434,11 +443,13 @@ class MultivariateImputer:
         score_means = np.where(counts == 0, 0.0, sums / np.maximum(counts, 1))
         if norm_means is not None:
             score_means[norm_cols] = 0.0
-        scores = score_features(x, cols_idx, column_means=score_means)
-        return {
-            int(c): self._sampled_cols(n, int(c), n_nearest, scores, i)
-            for i, c in enumerate(cols_idx)
-        }
+        selected = {}
+        for lo in range(0, len(cols_idx), _SELECT_BLOCK_TARGETS):
+            block = cols_idx[lo : lo + _SELECT_BLOCK_TARGETS]
+            scores = score_features(x, block, column_means=score_means)
+            for i, c in enumerate(block):
+                selected[int(c)] = self._sampled_cols(n, int(c), n_nearest, scores, i)
+        return selected
 
     # -- per-column imputation ---------------------------------------------
 

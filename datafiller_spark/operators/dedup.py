@@ -250,16 +250,6 @@ def _minhash_params(k: int, seed: int = 11) -> list[tuple[int, int]]:
     ]
 
 
-def _gram_hash(g):
-    """Deterministic 31-bit gram hash: low 32 md5 bits mod the Mersenne
-    prime. md5 (not crc32/xxhash) so DuckDB computes the identical
-    value: ``('0x' || substr(md5(g), 1, 8))::BIGINT % p``. This SQL
-    expression form is the cross-engine CONTRACT; the hot path computes
-    the same value in ``_signature_udf`` (pinned equal by
-    tests/test_dedup_similarity.py)."""
-    return F.conv(F.substring(F.md5(F.encode(g, "utf-8")), 1, 8), 16, 10).cast("long") % _MERSENNE
-
-
 def _signature_udf(params: list[tuple[int, int]]):
     """grams → MinHash signature in ONE Arrow stage.
 
@@ -270,8 +260,10 @@ def _signature_udf(params: list[tuple[int, int]]):
     3.3 s for 5000 docs × 52 grams). Here hashlib computes each gram
     md5 once (C speed) and the k affine mins are one vectorized
     ``(k, |grams|)`` NumPy pass in exact int64 (h, a < 2^31 so h·a+b <
-    2^62 never overflows). Values are identical to the SQL form —
-    that expression remains the DuckDB oracle contract."""
+    2^62 never overflows). Each gram hash is the low 32 md5 bits mod
+    the Mersenne prime — DuckDB's ``('0x' || substr(md5(g), 1, 8))::BIGINT
+    % p``, the cross-engine contract; tests/test_dedup_similarity.py
+    pins the signatures equal to that SQL expression form."""
     import hashlib
 
     ab = np.asarray(params, dtype=np.int64)  # (k, 2)

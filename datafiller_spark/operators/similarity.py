@@ -176,28 +176,6 @@ def _probe_masks(n_planes: int, radius: int) -> list[int]:
     return masks
 
 
-def _bucket_expr(vec_col, planes: np.ndarray):
-    """Literal-expression sign-bucket id (reference form, kept ONLY as
-    the cross-check oracle for the vectorized UDF — inlines n_planes×dim
-    float literals, do not use on wide embeddings)."""
-    bits = []
-    for i, plane in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(c)) for c in plane]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return bucket
-
-
 def _bucket_udf(df: DataFrame, tables: list[np.ndarray]):
     """Vectorized per-table sign-bucket ids: ONE pandas UDF whose Arrow
     batches each cost a single GEMM against the broadcast stacked

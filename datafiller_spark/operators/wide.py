@@ -14,19 +14,20 @@ matrix, writes only its own column — the same property the kernel's
 
 What each task RECEIVES depends on ``n_nearest_features``:
 
-- unset: every model reads every column, so the full panel is
-  broadcast once and each task reads it (the only correct option —
-  the math genuinely needs all columns).
-- set (the wide-panel configuration — nobody regresses a sensor on
-  10^5 others): the driver first runs the kernel's own
-  feature-SELECTION pass (``TimeSeriesImputer.select_features``) on
-  the full panel, then ships each chunk task ONLY its target columns
-  plus the original columns their selected features derive from. Per-
-  task input is bounded by ``columns_per_task × (n_nearest + 1)``
-  columns instead of the whole panel. Bit-parity with the broadcast
-  path holds because scoring/standardization are per-column-pair and
-  the stable top-k tie-break is by column order, which the order-
-  preserving subset keeps (pinned by tests/test_wide_gapfill.py).
+- unset, or a panel with non-numeric columns (whose one-hot encoding
+  changes the feature layout): every model may read every column, so
+  the full panel is broadcast once and each task reads it.
+- set on an all-numeric panel (the wide-panel configuration — nobody
+  regresses a sensor on 10^5 others): the driver first runs the
+  kernel's own feature-SELECTION pass
+  (``TimeSeriesImputer.select_features``) on the full panel, then
+  ships each chunk task ONLY its target columns plus the original
+  columns their selected features derive from. Per-task input is
+  bounded by ``columns_per_task × (n_nearest + 1)`` columns instead of
+  the whole panel. Bit-parity with the kernel run on the full panel
+  holds because scoring/standardization are per-column-pair and the
+  stable top-k tie-break is by column order, which the
+  order-preserving subset keeps (pinned by tests/test_wide_gapfill.py).
   The selection pass costs the same scoring BLAS the tasks would have
   paid anyway, run once on the driver (which already holds the panel).
 
@@ -77,8 +78,6 @@ def wide_gapfill(
     columns_per_task: int = 8,
     spill_dir: str | None = None,
     spill_cell_budget: int = 200_000_000,
-    subset_features: bool = True,
-    subset_wave_chunks: int | None = None,
 ) -> pd.DataFrame:
     """Impute a wide single-series panel across the cluster.
 
@@ -94,16 +93,6 @@ def wide_gapfill(
             chunks spill to parquet instead of riding the driver
             collect (default 2e8 cells ≈ 1.6 GB of float64 — the
             collect path would briefly need twice that).
-        subset_features: with ``n_nearest_features`` set on an
-            all-numeric panel, ship each task only the columns its
-            targets' selected features read (see module docstring)
-            instead of broadcasting the whole panel. Off, or when
-            ``n_nearest_features`` is None, the full panel is
-            broadcast.
-        subset_wave_chunks: how many chunk sub-frames the driver
-            materializes per Spark job on the subset path (bounds the
-            driver's transient copy memory). Default:
-            ``max(2 × defaultParallelism, 16)``.
 
     Returns the fully imputed frame, bit-identical to
     ``TimeSeriesImputer(...)(frame, n_nearest_features=...)`` run
@@ -159,7 +148,7 @@ def wide_gapfill(
             add_time_features=add_time_features,
         )
 
-    subset = subset_features and n_nearest_features is not None and all_numeric
+    subset = n_nearest_features is not None and all_numeric
     if subset:
         # kernel-exact selection pass: which original columns does each
         # target's model read, and the int n_nearest resolved against
@@ -204,7 +193,7 @@ def wide_gapfill(
         if subset:
             # waves bound the driver's transient sub-frame copies: only
             # `wave` chunks' column subsets exist at once
-            wave = subset_wave_chunks or max(2 * spark.sparkContext.defaultParallelism, 16)
+            wave = max(2 * spark.sparkContext.defaultParallelism, 16)
             for w0 in range(0, len(chunks), wave):
                 tasks = [
                     (ci, chunks[ci], frame[chunk_cols[ci]])

@@ -8,7 +8,7 @@ from .pipeline import (
     run_pipeline,
     scan_chunks,
 )
-from .checkpoint import read_high_water, write_high_water, incremental_filter
+from .checkpoint import high_water_marks, read_high_water, write_high_water, incremental_filter
 
 __all__ = [
     "run_pipeline",
@@ -19,6 +19,7 @@ __all__ = [
     "apply_chunk_retention",
     "scan_chunks",
     "PipelineResult",
+    "high_water_marks",
     "read_high_water",
     "write_high_water",
     "incremental_filter",

@@ -14,6 +14,15 @@ incremental read plus the open bucket's prior rows also satisfies the
 contract); ``incremental_filter`` prunes everything strictly before the
 open bucket.
 
+The marks record which raw rows the BATCH path (``run_pipeline``) has
+consumed, and only a batch commit advances them. A streaming commit
+(streaming/stream.py) merges through the same warehouse commit, but its
+source progress lives in its own Structured Streaming checkpoint: it
+records the marks of the snapshot it follows, unchanged, under its own
+snapshot id. Advancing them would let ``incremental_filter`` drop a raw
+row that arrives later than the stream's watermark inside a streamed
+bucket, and the batch resume could then never heal it.
+
 Snapshot pinning (the Iceberg analogue): every committed run writes its
 high-water table to an IMMUTABLE per-snapshot path
 (``_hw/snapshot=<id>``) in addition to the mutable head copy
@@ -86,30 +95,33 @@ def _cleanup_hw_temp_dirs() -> None:
     _TEMP_HW_DIRS.clear()
 
 
-def write_high_water(
+def high_water_marks(
     df_tier_1m: DataFrame,
     key_cols: list[str],
-    base_dir: str,
     prior: DataFrame | None = None,
-    snapshot_id: str | None = None,
-) -> None:
-    """Persist per-key max bucket, unioned with the prior checkpoint so
-    keys with no new data this run retain their marks. With
-    ``snapshot_id`` the table lands on the immutable per-snapshot path
-    and the mutable head is refreshed from it by file copy."""
+) -> DataFrame:
+    """Per-key max bucket of ``df_tier_1m``, unioned with the ``prior``
+    marks so keys with no new data this run retain theirs (lazy)."""
     hw = df_tier_1m.groupBy(*key_cols).agg(F.max("bucket").alias("max_bucket"))
-    if prior is not None:
-        hw = (
-            hw.unionByName(prior.select(*key_cols, "max_bucket"))
-            .groupBy(*key_cols)
-            .agg(F.max("max_bucket").alias("max_bucket"))
-        )
+    if prior is None:
+        return hw
+    return (
+        hw.unionByName(prior.select(*key_cols, "max_bucket"))
+        .groupBy(*key_cols)
+        .agg(F.max("max_bucket").alias("max_bucket"))
+    )
+
+
+def write_high_water(marks: DataFrame, base_dir: str, snapshot_id: str | None = None) -> None:
+    """Persist a marks table (``high_water_marks``). With
+    ``snapshot_id`` it lands on the immutable per-snapshot path and the
+    mutable head is refreshed from it by file copy."""
     head = checkpoint_path(base_dir)
     if snapshot_id is None:
-        hw.coalesce(1).write.mode("overwrite").parquet(head)
+        marks.coalesce(1).write.mode("overwrite").parquet(head)
         return
     pinned = checkpoint_path(base_dir, snapshot_id)
-    hw.coalesce(1).write.mode("overwrite").parquet(pinned)
+    marks.coalesce(1).write.mode("overwrite").parquet(pinned)
     staged = head + "__new"
     if os.path.exists(staged):
         shutil.rmtree(staged)

@@ -23,8 +23,10 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   chunks — is then recomputed from the MERGED tier restricted to the
   keys the delta touched. Cascade boundaries and open chunks are thus
   always rebuilt from complete history, and the merge replaces complete
-  rows with complete rows (the same contract the streaming path keeps
-  per micro-batch). Untouched keys are never read or rewritten.
+  rows with complete rows. Untouched keys are never read or rewritten.
+  This commit (``_commit_delta``) is the warehouse's only write path:
+  a streaming micro-batch (streaming/stream.py) is committed through it
+  as a 1m delta too.
 - Lineage: one row per (tier, spark partition) recording row counts and
   bucket ranges — enough to re-drive any partition.
 - Metrics: per tier: observed rows in, grid size, gaps filled
@@ -45,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..exceptions import EngineValueError
 from ..operators import cascade, cascade_gapfill_encode_all, decode_tier, rollup
-from .checkpoint import incremental_filter, read_high_water, write_high_water
+from .checkpoint import high_water_marks, incremental_filter, read_high_water, write_high_water
 
 TIER_CHAIN = ("1m", "1h", "1d")
 
@@ -65,6 +67,15 @@ class PipelineResult:
     #: the 1m rows actually re-aggregated from raw this run (on resume:
     #: only buckets at/past the pinned high-water marks)
     delta: DataFrame | None = None
+    #: the kernel's cached chunk rows, all tiers (``encoded`` reads them)
+    _chunks: DataFrame | None = field(default=None, repr=False)
+
+    def unpersist(self) -> None:
+        """Drop the frames this run cached: the 1m delta, the merged 1m
+        tier a resume re-read, and the kernel's chunk rows."""
+        for df in (self.delta, self.tiers["1m"], self._chunks):
+            if df is not None:
+                df.unpersist()
 
     @property
     def filled(self) -> dict[str, DataFrame]:
@@ -316,6 +327,132 @@ def _lineage(df: DataFrame, tier: str, key_cols: list[str]) -> DataFrame:
     )
 
 
+def _derive(spark: SparkSession, t1m: DataFrame, keys: list[str], **kernel) -> PipelineResult:
+    """Everything an observed 1m tier yields: its 1h/1d cascades, the
+    tier-chain kernel's chunks (``kernel`` is ``run_pipeline``'s
+    gap-fill parameters) and the one stats aggregation over them, which
+    gives the per-tier counters and the metrics rows."""
+    tiers = {"1m": t1m, "1h": cascade(t1m, keys, "1h")}
+    tiers["1d"] = cascade(tiers["1h"], keys, "1d")
+    # chunk rows are small (one per key × calendar period); caching them
+    # means the stats job, the writes and the returned frames don't
+    # re-run the scan→rollup→kernel chain
+    all_enc = cascade_gapfill_encode_all(t1m, keys, **kernel).cache()
+    stats = {
+        r["tier"]: (int(r["rows"]), int(r["points"]), int(r["bytes"]))
+        for r in all_enc.groupBy("tier")
+        .agg(
+            F.sum(F.length("payload")).alias("bytes"),
+            F.sum("n_points").alias("points"),
+            F.sum("n_observed").alias("rows"),
+        )
+        .collect()
+    }
+    counters: dict[str, int] = {}
+    metrics_rows = []
+    for tier in TIER_CHAIN:
+        rows_in, grid, nbytes = stats.get(tier, (0, 0, 0))
+        counters[f"tier_{tier}_rows"] = rows_in
+        counters[f"tier_{tier}_points"] = grid
+        counters[f"tier_{tier}_bytes"] = nbytes
+        metrics_rows.append((tier, rows_in, grid, grid - rows_in, nbytes))
+    # pandas (Arrow), not a list, for the reason in _commit_snapshot
+    metrics = spark.createDataFrame(
+        pd.DataFrame(metrics_rows, columns=["tier", "rows_in", "grid_rows", "gaps_filled", "bytes_out"]),
+        "tier string, rows_in long, grid_rows long, gaps_filled long, bytes_out long",
+    )
+    chunks = all_enc.drop("n_observed")
+    return PipelineResult(
+        tiers=tiers,
+        encoded={tier: chunks.where(F.col("tier") == tier) for tier in TIER_CHAIN},
+        key_cols=keys,
+        metrics=metrics,
+        points=sum(counters[f"tier_{tier}_points"] for tier in TIER_CHAIN),
+        counters=counters,
+        _chunks=all_enc,
+    )
+
+
+def _commit_delta(
+    spark: SparkSession,
+    t1m_delta: DataFrame,
+    output_dir: str,
+    key_cols: list[str],
+    marks: DataFrame,
+    anchor_id: str | None,
+    merge: bool,
+    lags: tuple[int, ...] = (1, 2, 3, -1, -2, -3),
+    min_samples_train: int = 20,
+    interpolate_gaps_less_than: int | None = 4,
+) -> PipelineResult:
+    """Commit a 1m delta to the warehouse at ``output_dir`` — the one
+    write path of the batch pipeline and the streaming front-end.
+
+    Merge-writes the observed 1m rows; with ``merge`` re-reads the
+    merged tier for the keys the delta touched; derives the tiers,
+    chunks and stats from it (``_derive``); writes ``tier=<t>``,
+    ``chunks_tier=<t>``, ``metrics`` and ``lineage``; records ``marks``
+    (the per-key high-water table, see plans/checkpoint.py) under the
+    new snapshot; and appends the snapshot row anchored to
+    ``anchor_id``. ``t1m_delta`` should be cached: the tier write, the
+    affected-keys probe and the caller's marks all read it. The kernel
+    parameter defaults are ``run_pipeline``'s."""
+    keys = list(key_cols)
+    tier1m_path = os.path.join(output_dir, "tier=1m")
+    # observed rows are the persisted source of truth; written FIRST so
+    # every derived product below can re-derive from the merged tier
+    # and a crash mid-run is heal-by-rerun
+    _merge_write(
+        spark, t1m_delta, tier1m_path, merge_keys=keys + ["bucket"], partition_by=keys[:1], merge=merge
+    )
+    t1m = t1m_delta
+    if merge:
+        # Derived products (cascades, fills, chunks) must never be built
+        # from the delta alone: a delta-only 1h boundary row or open
+        # chunk would REPLACE its complete prior version on merge. Read
+        # back the merged tier, restricted to the keys the delta touched
+        # — work scales with the affected keys' history, not the table.
+        affected = t1m_delta.select(*keys).distinct()
+        t1m = spark.read.parquet(tier1m_path).join(F.broadcast(affected), keys, "left_semi").cache()
+
+    result = _derive(
+        spark,
+        t1m,
+        keys,
+        lags=lags,
+        min_samples_train=min_samples_train,
+        interpolate_gaps_less_than=interpolate_gaps_less_than,
+    )
+    for tier in TIER_CHAIN[1:]:  # 1m observed rows already persisted above
+        _merge_write(
+            spark,
+            result.tiers[tier],
+            os.path.join(output_dir, f"tier={tier}"),
+            merge_keys=keys + ["bucket"],
+            partition_by=keys[:1],
+            merge=merge,
+        )
+    for tier in TIER_CHAIN:
+        _merge_write(
+            spark,
+            result.encoded[tier],
+            os.path.join(output_dir, f"chunks_tier={tier}"),
+            merge_keys=keys + ["chunk_start"],
+            merge=merge,
+        )
+
+    result.lineage = _lineage(t1m, "1m", keys)
+    for tier in TIER_CHAIN[1:]:
+        result.lineage = result.lineage.unionByName(_lineage(result.tiers[tier], tier, keys))
+    result.metrics.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "metrics"))
+    result.lineage.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "lineage"))
+    result.snapshot_id = _new_snapshot_id()
+    write_high_water(marks, output_dir, snapshot_id=result.snapshot_id)
+    _commit_snapshot(spark, output_dir, result.counters, merge, result.snapshot_id, anchor_id)
+    result.delta = t1m_delta
+    return result
+
+
 def run_pipeline(
     spark: SparkSession,
     raw: DataFrame,
@@ -340,10 +477,11 @@ def run_pipeline(
     that cascades to 1h/1d, gap-fills and Gorilla-encodes every tier
     (``cascade_gapfill_encode_all``) → one stats aggregation, which
     yields the counters and the metrics rows. With ``output_dir`` the
-    run writes the observed ``tier=<t>`` rows, the ``chunks_tier=<t>``
-    chunks, ``metrics``, ``lineage``, the high-water marks and a
-    snapshot commit. ``filled[tier]`` decodes ``encoded[tier]`` on access
-    (the codec is lossless).
+    rollup is committed by ``_commit_delta``, which writes the observed
+    ``tier=<t>`` rows, the ``chunks_tier=<t>`` chunks, ``metrics``,
+    ``lineage``, the high-water marks and a snapshot commit.
+    ``filled[tier]`` decodes ``encoded[tier]`` on access (the codec is
+    lossless).
 
     ``resume=True`` anchors the high-water read to a snapshot —
     ``pin_snapshot`` names one explicitly, otherwise the current head is
@@ -355,131 +493,36 @@ def run_pipeline(
     ignored: metrics are always recorded and there is no other shape."""
     t0 = time.time()
     keys = list(key_cols)
-    merging = bool(resume and output_dir)
-    if output_dir:
-        _check_layout(output_dir)
-
+    kernel = dict(
+        lags=lags,
+        min_samples_train=min_samples_train,
+        interpolate_gaps_less_than=interpolate_gaps_less_than,
+    )
     prior_hw = None
     anchor_id = None
-    if merging:
-        anchor_id = pin_snapshot if pin_snapshot is not None else latest_snapshot_id(spark, output_dir)
-        prior_hw = read_high_water(spark, output_dir, snapshot_id=anchor_id)
-        raw = incremental_filter(raw, prior_hw, keys, ts_col, tier="1m")
-    snapshot_id = _new_snapshot_id() if output_dir else None
+    if output_dir:
+        _check_layout(output_dir)
+        if resume:
+            anchor_id = pin_snapshot if pin_snapshot is not None else latest_snapshot_id(spark, output_dir)
+            prior_hw = read_high_water(spark, output_dir, snapshot_id=anchor_id)
+            raw = incremental_filter(raw, prior_hw, keys, ts_col, tier="1m")
 
     if salt_buckets and salt_col:
         t1m_delta = salted_rollup(raw, keys, ts_col, value_col, "1m", salt_buckets, salt_col)
     else:
         t1m_delta = rollup(raw, keys, ts_col, value_col, "1m")
-    t1m = t1m_delta
     if output_dir:
-        # reused by the tier writes, the affected-keys probe and the
-        # high-water write; without a warehouse the kernel consumes it
-        # exactly once, and caching would only add a full memory-store
+        # without a warehouse the kernel consumes the rollup exactly
+        # once, and caching would only add a full memory-store
         # materialization of the tier to the critical path
-        t1m = t1m_delta = t1m_delta.cache()
-        tier1m_path = os.path.join(output_dir, "tier=1m")
-        # observed rows are the persisted source of truth; written FIRST
-        # so every derived product below can re-derive from the merged
-        # tier (resume) and a crash mid-run is heal-by-rerun
-        _merge_write(
-            spark,
-            t1m_delta,
-            tier1m_path,
-            merge_keys=keys + ["bucket"],
-            partition_by=keys[:1],
-            merge=merging,
-        )
-        if merging:
-            # Derived products (cascades, fills, chunks) must never be
-            # built from the delta alone: a delta-only 1h boundary row or
-            # open chunk would REPLACE its complete prior version on
-            # merge. Read back the merged tier, restricted to the keys
-            # the delta touched — work scales with the affected keys'
-            # history, not the table.
-            affected = t1m_delta.select(*keys).distinct()
-            t1m = spark.read.parquet(tier1m_path).join(F.broadcast(affected), keys, "left_semi")
-            t1m = t1m.cache()
-
-    tiers = {"1m": t1m, "1h": cascade(t1m, keys, "1h")}
-    tiers["1d"] = cascade(tiers["1h"], keys, "1d")
-    # chunk rows are small (one per key × calendar period); caching them
-    # means the writes, the stats job and the returned frames don't
-    # re-run the scan→rollup→kernel chain
-    all_enc = cascade_gapfill_encode_all(
-        t1m,
-        keys,
-        lags=lags,
-        min_samples_train=min_samples_train,
-        interpolate_gaps_less_than=interpolate_gaps_less_than,
-    ).cache()
-    chunks = all_enc.drop("n_observed")
-    encoded = {tier: chunks.where(F.col("tier") == tier) for tier in TIER_CHAIN}
-    if output_dir:
-        for tier in TIER_CHAIN[1:]:  # 1m observed rows already persisted above
-            _merge_write(
-                spark,
-                tiers[tier],
-                os.path.join(output_dir, f"tier={tier}"),
-                merge_keys=keys + ["bucket"],
-                partition_by=keys[:1],
-                merge=merging,
-            )
-        for tier in TIER_CHAIN:
-            _merge_write(
-                spark,
-                encoded[tier],
-                os.path.join(output_dir, f"chunks_tier={tier}"),
-                merge_keys=keys + ["chunk_start"],
-                merge=merging,
-            )
-
-    stats = {
-        r["tier"]: (int(r["rows"]), int(r["points"]), int(r["bytes"]))
-        for r in all_enc.groupBy("tier")
-        .agg(
-            F.sum(F.length("payload")).alias("bytes"),
-            F.sum("n_points").alias("points"),
-            F.sum("n_observed").alias("rows"),
-        )
-        .collect()
-    }
-    counters: dict[str, int] = {}
-    metrics_rows = []
-    for tier in TIER_CHAIN:
-        rows_in, grid, nbytes = stats.get(tier, (0, 0, 0))
-        counters[f"tier_{tier}_rows"] = rows_in
-        counters[f"tier_{tier}_points"] = grid
-        counters[f"tier_{tier}_bytes"] = nbytes
-        metrics_rows.append((tier, rows_in, grid, grid - rows_in, nbytes))
-    # pandas (Arrow), not a list, for the reason in _commit_snapshot
-    metrics = spark.createDataFrame(
-        pd.DataFrame(metrics_rows, columns=["tier", "rows_in", "grid_rows", "gaps_filled", "bytes_out"]),
-        "tier string, rows_in long, grid_rows long, gaps_filled long, bytes_out long",
-    )
-
-    lineage = None
-    if output_dir:
-        lineage = _lineage(tiers["1m"], "1m", keys)
-        for tier in TIER_CHAIN[1:]:
-            lineage = lineage.unionByName(_lineage(tiers[tier], tier, keys))
-        metrics.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "metrics"))
-        lineage.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "lineage"))
-        write_high_water(t1m_delta, keys, output_dir, prior=prior_hw, snapshot_id=snapshot_id)
-        _commit_snapshot(spark, output_dir, counters, resume, snapshot_id, anchor_id)
-
-    return PipelineResult(
-        tiers=tiers,
-        encoded=encoded,
-        key_cols=keys,
-        metrics=metrics,
-        lineage=lineage,
-        points=sum(counters[f"tier_{tier}_points"] for tier in TIER_CHAIN),
-        wall_seconds=time.time() - t0,
-        counters=counters,
-        snapshot_id=snapshot_id,
-        delta=t1m_delta,
-    )
+        t1m_delta = t1m_delta.cache()
+        marks = high_water_marks(t1m_delta, keys, prior=prior_hw)
+        result = _commit_delta(spark, t1m_delta, output_dir, keys, marks, anchor_id, resume, **kernel)
+    else:
+        result = _derive(spark, t1m_delta, keys, **kernel)
+        result.delta = t1m_delta
+    result.wall_seconds = time.time() - t0
+    return result
 
 
 def apply_retention(spark: SparkSession, output_dir: str, tier: str, keep_after) -> int:

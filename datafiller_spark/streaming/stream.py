@@ -1,12 +1,22 @@
 """Structured Streaming front-end for the 1m tier.
 
-The continuous-aggregate path for live ingest: tumbling-window
-aggregation with a watermark for late data. The aggregate set is the
-same composable (count, sum, min, max) as the batch rollup, so the
-streaming 1m tier feeds the identical 1h/1d cascade and gap-fill stages
-— late rows within the watermark update their window in place;
-later-than-watermark rows are the snapshot re-rollup case handled by the
-batch checkpoint path (plans/checkpoint.py).
+The continuous-aggregate path for live ingest: tumbling 1-minute
+windows with a watermark for late data. The aggregate set is the same
+composable (count, sum, min, max) as the batch rollup, and every
+finalized micro-batch is committed through the batch pipeline's own
+warehouse commit (``_commit_delta`` in plans/pipeline.py): the 1m
+merge-write, the 1h/1d cascade, gap-fill and Gorilla chunks, metrics,
+lineage and a snapshot row — one write path, so a streamed warehouse is
+indistinguishable from a batch-built one. Late rows within the
+watermark update their window in place; later-than-watermark rows are
+the snapshot re-rollup case handled by the batch resume
+(plans/checkpoint.py), which is why a stream commit never advances the
+high-water marks.
+
+Per-batch cost: a micro-batch re-derives the WHOLE history of the keys
+it touched, exactly as a batch resume does. A gap-filled chunk depends
+on the model fitted over the whole series, so re-encoding only the
+touched chunk periods cannot be correct.
 
 The reference is batch-only (SURVEY §2.4); this is engine-new surface.
 """
@@ -18,7 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_WINDOW = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+from ..plans.checkpoint import read_high_water
+from ..plans.pipeline import _check_layout, _commit_delta, latest_snapshot_id
 
 
 def streaming_rollup(
@@ -26,17 +37,16 @@ def streaming_rollup(
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    tier: str = "1m",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """Tumbling-window tier aggregation over a streaming DataFrame."""
+    """Tumbling-window 1m tier aggregation over a streaming DataFrame."""
     keys = list(key_cols)
     # watermarks require TIMESTAMP (NTZ is rejected); session TZ is UTC so
     # the cast is value-preserving for the naive-UTC test tables
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
         stream.withWatermark(ts_col, watermark)
-        .groupBy(*keys, F.window(ts_col, _WINDOW[tier]).alias("__win"))
+        .groupBy(*keys, F.window(ts_col, "1 minute").alias("__win"))
         .agg(
             F.count(value_col).alias("n_points"),
             F.sum(value_col).alias("sum_value"),
@@ -63,7 +73,6 @@ def start_rollup_stream(
     checkpoint_dir: str,
     output_path: str | None = None,
     query_name: str = "tier_1m_stream",
-    tier: str = "1m",
     watermark: str = "10 minutes",
 ):
     """Start the streaming 1m rollup.
@@ -72,7 +81,7 @@ def start_rollup_stream(
     only — exactly the tier table contract). Without: complete-mode
     in-memory table named ``query_name`` for tests/inspection.
     """
-    rolled = streaming_rollup(stream, key_cols, ts_col, value_col, tier, watermark)
+    rolled = streaming_rollup(stream, key_cols, ts_col, value_col, watermark)
     if output_path:
         return (
             rolled.writeStream.outputMode("append")
@@ -100,66 +109,42 @@ def start_tier_pipeline_stream(
     value_col: str,
     output_dir: str,
     checkpoint_dir: str,
-    tier: str = "1m",
     watermark: str = "10 minutes",
     query_name: str = "tier_pipeline_stream",
 ):
-    """Continuous aggregate end-to-end: stream → finalized tier windows →
-    MERGE into the persisted tier → re-encode exactly the Gorilla chunks
-    the batch touched.
+    """Continuous aggregate end-to-end: stream → finalized 1m windows →
+    the batch pipeline's warehouse commit, one snapshot per non-empty
+    micro-batch.
 
     ``foreachBatch`` receives only windows the watermark finalized, so
-    every micro-batch is an incremental tier delta; the merge-write
-    (plans/pipeline.py) replaces rows sharing (key, bucket) and keeps
-    everything else, and chunk re-encoding is scoped to the touched
-    (key, chunk_start) set via a broadcast semi-join — per-batch work is
-    proportional to the DELTA, not the table, which is what keeps a
-    year-long stream cheap.
+    every micro-batch is an incremental 1m delta. It is merged into
+    ``tier=1m``, and the keys it touched are re-derived from their
+    merged history into ``tier=1h``/``tier=1d`` and every
+    ``chunks_tier=<t>`` — with ``run_pipeline``'s default ``lags``,
+    ``min_samples_train`` and ``interpolate_gaps_less_than``. The
+    commit records the high-water marks of the snapshot it follows,
+    unchanged (see plans/checkpoint.py), and anchors to that snapshot.
     """
-    import os
-
-    from ..operators.bucket import time_bucket
-    from ..operators.encode import _CHUNK_UNIT, encode_tier
-    from ..plans.pipeline import _check_layout, _merge_write
-
     keys = list(key_cols)
-    # the stream writes observed tier rows (v2 layout) and merges into
-    # prior state — stamp fresh warehouses, refuse pre-versioning ones
+    # stamp fresh warehouses, refuse pre-versioning ones
     _check_layout(output_dir)
-    tier_path = os.path.join(output_dir, f"tier={tier}")
-    chunk_path = os.path.join(output_dir, f"chunks_tier={tier}")
-    chunk_unit = _CHUNK_UNIT[tier]
-
-    rolled = streaming_rollup(stream, keys, ts_col, value_col, tier, watermark)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         batch_df = batch_df.cache()
-        _merge_write(
-            spark, batch_df, tier_path, merge_keys=keys + ["bucket"],
-            partition_by=keys[:1], merge=True,
-        )
-        touched = batch_df.select(
-            *keys, F.date_trunc(chunk_unit, F.col("bucket")).alias("chunk_start")
-        ).distinct()
-        tier_df = spark.read.parquet(tier_path)
-        affected = tier_df.withColumn(
-            "chunk_start", F.date_trunc(chunk_unit, F.col("bucket"))
-        ).join(F.broadcast(touched), on=keys + ["chunk_start"], how="left_semi").drop(
-            "chunk_start"
-        )
-        enc = encode_tier(affected, keys, "bucket", "avg_value", tier)
-        _merge_write(
-            spark, enc, chunk_path, merge_keys=keys + ["chunk_start"], merge=True
-        )
-        # both merge-writes have materialized: drop the per-batch cache so
-        # a long-running stream doesn't accumulate batch blocks
-        batch_df.unpersist()
+        head = latest_snapshot_id(spark, output_dir)
+        marks = read_high_water(spark, output_dir, snapshot_id=head)
+        if marks is None:  # nothing committed by a batch run yet
+            marks = batch_df.select(*keys, F.col("bucket").alias("max_bucket")).limit(0)
+        # the commit has materialized: drop its caches so a long-running
+        # stream doesn't accumulate per-batch blocks
+        _commit_delta(spark, batch_df, output_dir, keys, marks, head, merge=True).unpersist()
 
     return (
-        rolled.writeStream.foreachBatch(handle_batch)
+        streaming_rollup(stream, keys, ts_col, value_col, watermark)
+        .writeStream.foreachBatch(handle_batch)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)

@@ -1,0 +1,31 @@
+"""Warehouse comparison shared by the resume and streaming tests."""
+
+import os
+
+TIERS = ("1m", "1h", "1d")
+
+
+def warehouse_sets(spark, out, key_col):
+    """{directory: sorted rows} for every ``tier=<t>`` (all columns) and
+    ``chunks_tier=<t>`` (key, chunk_start, n_points, payload bytes)."""
+    sets = {}
+    for tier in TIERS:
+        cols = [key_col, "bucket", "n_points", "sum_value", "min_value", "max_value", "avg_value"]
+        rows = spark.read.parquet(os.path.join(out, f"tier={tier}")).select(*cols).collect()
+        sets[f"tier={tier}"] = sorted(map(tuple, rows))
+        rows = spark.read.parquet(os.path.join(out, f"chunks_tier={tier}")).collect()
+        sets[f"chunks_tier={tier}"] = sorted(
+            (r[key_col], r.chunk_start, r.n_points, bytes(r.payload)) for r in rows
+        )
+    return sets
+
+
+def assert_same_warehouse(spark, out, ref, key_col):
+    """Every tier row set and chunk set of ``out`` equals ``ref``'s,
+    bytes exact; returns ``ref``'s sets."""
+    got = warehouse_sets(spark, out, key_col)
+    want = warehouse_sets(spark, ref, key_col)
+    for name in want:
+        assert got[name] == want[name], f"{name} diverged"
+        assert want[name], f"{name} is empty"
+    return want

@@ -320,15 +320,33 @@ def test_simhash_near_dupes_hamming(spark):
     assert all(h <= 1 for h in tight.values())
 
 
+def _bucket_expr(vec_col, planes):
+    """Literal-expression sign-bucket id (the reference form): the
+    cross-check oracle for the vectorized UDF — inlines n_planes×dim
+    float literals, so it only suits narrow embeddings."""
+    bits = []
+    for i, plane in enumerate(planes):
+        proj = F.aggregate(
+            F.zip_with(
+                vec_col,
+                F.array(*[F.lit(float(c)) for c in plane]),
+                lambda x, y: x * y,
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bits.append(F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
+    bucket = bits[0]
+    for b in bits[1:]:
+        bucket = bucket + b
+    return bucket
+
+
 def test_bucket_udf_matches_literal_expr(spark, sf_dir):
     """The vectorized GEMM bucketer must produce the same sign buckets
     as the round-2 literal-expression form (outputs-unchanged guard for
     the de-literaled ANN path)."""
-    from datafiller_spark.operators.similarity import (
-        _bucket_expr,
-        _bucket_udf,
-        _hyperplanes,
-    )
+    from datafiller_spark.operators.similarity import _bucket_udf, _hyperplanes
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
@@ -414,6 +432,16 @@ def test_ivf_topk_recall_and_determinism(spark):
         ivf_topk(df, queries, k=5)
 
 
+def _gram_hash(g):
+    """Deterministic 31-bit gram hash as a Spark SQL expression: low 32
+    md5 bits mod the Mersenne prime, the value DuckDB computes as
+    ``('0x' || substr(md5(g), 1, 8))::BIGINT % p`` — the cross-engine
+    contract the MinHash signature UDF must reproduce."""
+    from datafiller_spark.operators.dedup import _MERSENNE
+
+    return F.conv(F.substring(F.md5(F.encode(g, "utf-8")), 1, 8), 16, 10).cast("long") % _MERSENNE
+
+
 def test_signature_udf_matches_sql_expression_form(spark, sf_dir):
     """The vectorized MinHash signature (hashlib md5 + NumPy affine
     mins) must equal the pure-SQL expression form — which is the
@@ -422,7 +450,6 @@ def test_signature_udf_matches_sql_expression_form(spark, sf_dir):
 
     from datafiller_spark.operators.dedup import (
         _MERSENNE,
-        _gram_hash,
         _minhash_params,
         _shingled_signatures,
         _shingles,

@@ -180,3 +180,18 @@ def test_n_jobs_parallel_columns_bit_identical():
         np.testing.assert_array_equal(
             serial_imp.imputation_features_[c], parallel_imp.imputation_features_[c]
         )
+
+
+def test_select_features_blocked_targets_equal_unblocked(monkeypatch):
+    """Scoring the targets in blocks (remainder block included) selects
+    exactly what scoring them all at once selects."""
+    from datafiller_spark.kernels import multivariate
+
+    _, x_nan, _ = _mar_matrix(seed=3, shape=(120, 17), ratio=0.15)
+    targets = [0, 2, 3, 5, 8, 9, 11, 16]
+    whole = MultivariateImputer().select_features(x_nan.copy(), targets, 5)
+    monkeypatch.setattr(multivariate, "_SELECT_BLOCK_TARGETS", 3)
+    blocked = MultivariateImputer().select_features(x_nan.copy(), targets, 5)
+    assert list(blocked) == list(whole) == targets
+    for c in targets:
+        np.testing.assert_array_equal(blocked[c], whole[c])

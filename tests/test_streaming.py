@@ -140,71 +140,86 @@ def test_late_row_beyond_watermark_healed_by_batch_resume(spark, tmp_path):
     assert a == b
 
 
-def test_late_microbatch_reencodes_chunk_payload_byte_equal(spark, tmp_path):
-    """A late (in-watermark) micro-batch landing inside an ALREADY
-    ENCODED Gorilla chunk period must leave chunk payloads byte-equal to
-    a batch encode_tier rerun over the merged tier — the re-encode claim
-    in streaming/stream.py, proven at the payload level rather than on
-    tier rows."""
-    import datetime
+def _snapshot_chain(spark, out):
+    """The snapshot log oldest first, checked to chain parent → child."""
+    from datafiller_spark.plans import read_snapshots
 
-    from datafiller_spark.operators import decode_tier, encode_tier
-    from datafiller_spark.streaming import start_tier_pipeline_stream
+    log = read_snapshots(spark, out).collect()[::-1]
+    for parent, child in zip(log, log[1:]):
+        assert child.parent_id == parent.snapshot_id
+    return log
+
+
+@pytest.mark.parametrize("order", ["stream_then_resume", "batch_then_stream"])
+def test_streamed_warehouse_equals_single_shot_pipeline(spark, tmp_path, monkeypatch, order):
+    """A micro-batch commits through the batch pipeline's warehouse
+    commit, so a streamed warehouse finished by a batch resume — and a
+    batch warehouse the stream then replays into — both equal a
+    single-shot ``run_pipeline`` over the full table in every tier row
+    set and every chunk payload, bytes exact. Values are integers, so
+    sums do not depend on aggregation order. Each non-empty micro-batch
+    appends one snapshot chained to the previous one and re-records the
+    marks of the snapshot it follows, unchanged."""
+    import datetime
+    import os
+
+    import numpy as np
+    from _warehouse import assert_same_warehouse
+
+    from datafiller_spark.plans import read_high_water, run_pipeline
+    from datafiller_spark.streaming import start_tier_pipeline_stream, stream as stream_mod
 
     base = datetime.datetime(2024, 1, 1)
     schema = "source string, event_ts timestamp, n_tok int"
+    rng = np.random.default_rng(5)
+    rows = [
+        (s, base + datetime.timedelta(minutes=m, seconds=int(sec)), int(v))
+        for s in ("a", "b", "c")
+        for m, sec, v in zip(range(1500), rng.integers(0, 60, 1500), rng.integers(1, 50, 1500))
+        if rng.random() < 0.7  # holes for the gap-fill model to fill
+    ]
+    cut = base + datetime.timedelta(minutes=900)
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    out, ref = str(tmp_path / "out"), str(tmp_path / "ref")
+    full = spark.createDataFrame(rows, schema)
 
-    def rows(lo, hi):
-        return [
-            (s, base + datetime.timedelta(minutes=m, seconds=30), m + 1)
-            for m in range(lo, hi)
-            for s in ("a", "b")
-        ]
+    commits = []
 
-    src = tmp_path / "re_src"
-    out = tmp_path / "re_out"
-    ckpt = tmp_path / "re_ckpt"
-    spark.createDataFrame(rows(0, 30), schema).write.mode("append").parquet(str(src))
+    def counted(spark_, batch, *args, **kwargs):
+        assert not batch.isEmpty()
+        commits.append(batch.count())
+        return commit(spark_, batch, *args, **kwargs)
 
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(str(src))
+    commit = stream_mod._commit_delta
+    monkeypatch.setattr(stream_mod, "_commit_delta", counted)
+
+    def stream_once(part):
+        spark.createDataFrame(part, schema).write.mode("append").parquet(src)
         q = start_tier_pipeline_stream(
-            stream, ["source"], "event_ts", "n_tok",
-            output_dir=str(out), checkpoint_dir=str(ckpt), watermark="5 minutes",
+            spark.readStream.schema(schema).parquet(src), ["source"], "event_ts", "n_tok",
+            output_dir=out, checkpoint_dir=ckpt, watermark="5 minutes",
         )
-        q.awaitTermination(120)
+        q.awaitTermination(300)
 
-    run_once()
-    first_chunks = {
-        (r.source, r.chunk_start): bytes(r.payload)
-        for r in spark.read.parquet(str(out / "chunks_tier=1m")).collect()
-    }
-    assert first_chunks  # the day-chunk exists and is encoded
+    def marks(snapshot_id):
+        hw = read_high_water(spark, out, snapshot_id=snapshot_id)
+        return sorted(map(tuple, hw.collect()))
 
-    # the second micro-batch lands in the SAME day chunk (minutes 30-55
-    # of 2024-01-01): the touched chunk must be re-encoded from the
-    # merged tier, not appended to or left stale
-    spark.createDataFrame(rows(30, 56), schema).write.mode("append").parquet(str(src))
-    run_once()
+    if order == "batch_then_stream":
+        run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out)
+    batch_snaps = _snapshot_chain(spark, out) if order == "batch_then_stream" else []
+    stream_once([r for r in rows if r[1] < cut])
+    stream_once([r for r in rows if r[1] >= cut])
+    log = _snapshot_chain(spark, out)
+    assert len(commits) >= 2 and len(log) == len(batch_snaps) + len(commits)
+    followed = batch_snaps[-1].snapshot_id if batch_snaps else None
+    for snap in log[len(batch_snaps):]:
+        assert snap.anchor_id == followed and snap.resume
+        assert os.path.exists(os.path.join(out, "_hw", f"snapshot={snap.snapshot_id}"))
+        assert marks(snap.snapshot_id) == (marks(followed) if followed else [])
+        followed = snap.snapshot_id
+    if order == "stream_then_resume":
+        run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
-    tier = spark.read.parquet(str(out / "tier=1m"))
-    streamed = {
-        (r.source, r.chunk_start): bytes(r.payload)
-        for r in spark.read.parquet(str(out / "chunks_tier=1m")).collect()
-    }
-    batch = {
-        (r.source, r.chunk_start): bytes(r.payload)
-        for r in encode_tier(tier, ["source"], "bucket", "avg_value", "1m").collect()
-    }
-    assert streamed == batch
-    # payloads actually changed vs the first encode (the chunk grew)
-    assert any(streamed[k] != v for k, v in first_chunks.items())
-    # and decode back to the tier's avg values bit-exactly
-    decoded = {
-        (r.source, r.bucket): r.value
-        for r in decode_tier(
-            spark.read.parquet(str(out / "chunks_tier=1m")), ["source"], "bucket", "value"
-        ).collect()
-    }
-    for r in tier.collect():
-        assert decoded[(r.source, r.bucket)] == r.sum_value / r.n_points
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref)
+    assert_same_warehouse(spark, out, ref, "source")
