@@ -71,29 +71,16 @@ def start_rollup_stream(
     ts_col: str,
     value_col: str,
     checkpoint_dir: str,
-    output_path: str | None = None,
     query_name: str = "tier_1m_stream",
     watermark: str = "10 minutes",
 ):
-    """Start the streaming 1m rollup.
-
-    With ``output_path``: append-mode parquet sink (finalized windows
-    only — exactly the tier table contract). Without: complete-mode
-    in-memory table named ``query_name`` for tests/inspection.
-    """
-    rolled = streaming_rollup(stream, key_cols, ts_col, value_col, watermark)
-    if output_path:
-        return (
-            rolled.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", output_path)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
+    """Start the streaming 1m rollup into a complete-mode in-memory
+    table named ``query_name``, for inspection and tests. Persisting
+    the stream is ``start_tier_pipeline_stream``'s job: it commits
+    through the warehouse's one write path."""
     return (
-        rolled.writeStream.outputMode("complete")
+        streaming_rollup(stream, key_cols, ts_col, value_col, watermark)
+        .writeStream.outputMode("complete")
         .format("memory")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
