@@ -367,19 +367,23 @@ class MultivariateImputer:
         scores: np.ndarray | None,
         scores_index: int,
     ) -> np.ndarray:
-        """All features but the target, or the top-k by score (stable order,
-        NaN scores last, result sorted ascending). Reference parity:
-        imputer.py:252-286."""
+        """All features but the target, or the top-k by score (ties to the
+        lower index, NaN scores last, result sorted ascending). Reference
+        parity: imputer.py:252-286, whose stable argsort this equals in
+        linear time: every feature scoring above the k-th score, then the
+        lowest-index ties at it."""
         candidates = np.arange(n_features)
         candidates = candidates[candidates != col]
-        if n_nearest is None:
+        if n_nearest is None or n_nearest >= len(candidates):
             return candidates
         assert scores is not None
         with np.errstate(all="ignore"):
             feat_scores = np.nan_to_num(scores[scores_index][candidates], nan=-np.inf)
-        k = min(n_nearest, len(candidates))
-        ranking = np.argsort(-feat_scores, kind="stable")
-        return np.sort(candidates[ranking[:k]])
+        kth = np.partition(feat_scores, len(feat_scores) - n_nearest)[-n_nearest]
+        keep = feat_scores > kth
+        ties = np.flatnonzero(feat_scores == kth)
+        keep[ties[: n_nearest - np.count_nonzero(keep)]] = True
+        return candidates[keep]
 
     def select_features(
         self,

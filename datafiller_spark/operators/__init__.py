@@ -1,4 +1,4 @@
-from .rollup import rollup, cascade, TIERS, tier_interval
+from .rollup import rollup, cascade, TIERS
 from .bucket import time_bucket, regular_grid
 from .gapfill import forward_fill, backward_fill, linear_fill, fill_small_gaps, spline_fill
 from .impute import model_gapfill, cascade_gapfill_encode_all, gapfill_metrics
@@ -31,7 +31,6 @@ __all__ = [
     "rollup",
     "cascade",
     "TIERS",
-    "tier_interval",
     "time_bucket",
     "regular_grid",
     "forward_fill",

@@ -18,13 +18,16 @@
 
 The shuffle is sized to ``defaultParallelism`` — one Python task per
 core slot — rather than following ``spark.sql.shuffle.partitions`` or
-AQE. Each Python task pays a fixed set-up toll (0.2–0.25 CPU-s on a
-4-core host, mostly ``importlib.invalidate_caches`` re-reading
-``pyspark.zip`` in ``setup_spark_files``), so 16 shuffle partitions on 4
-cores pay it four times per core; and AQE merges a small (<1 MB by
-default) kernel input into ONE task, serializing the kernel math. A numbered
-repartition is never coalesced by AQE, so the stage runs exactly one
-task per core whatever the session's shuffle settings.
+AQE. Each Python task pays a fixed set-up cost, so 16 shuffle partitions
+on 4 cores pay it four times per core; and AQE merges a small (<1 MB by
+default) kernel input into ONE task, serializing the kernel math. A
+numbered repartition is never coalesced by AQE, so the stage runs
+exactly one task per core whatever the session's shuffle settings. The
+rule was set when that cost was 0.2–0.25 CPU-s per task, mostly
+``importlib.invalidate_caches`` re-reading ``pyspark.zip`` and the
+``spark-core`` jar; ``get_spark``'s worker daemon
+(``datafiller_spark._worker_daemon``) takes both off the worker path, and
+the call now takes under 1 ms.
 """
 
 from __future__ import annotations

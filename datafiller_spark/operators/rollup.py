@@ -26,14 +26,7 @@ from .bucket import time_bucket
 #: Cascade order, finest to coarsest.
 TIERS = ("1m", "1h", "1d")
 
-_MINUTES = {"1m": 1, "1h": 60, "1d": 1440}
-
 METRIC_COLS = ("n_points", "sum_value", "min_value", "max_value")
-
-
-def tier_interval(tier: str) -> int:
-    """Tier width in minutes."""
-    return _MINUTES[tier]
 
 
 def rollup(

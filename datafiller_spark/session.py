@@ -7,7 +7,16 @@ matter at 100 TB:
 - AQE on (runtime coalescing + skew-join splitting),
 - Arrow execution for every pandas-UDF exchange,
 - shuffle partitions sized to the parallelism level (overridable),
-- parquet pushdown left at defaults (filters/column pruning reach the scan).
+- parquet pushdown left at defaults (filters/column pruning reach the scan),
+- Python workers forked from ``datafiller_spark._worker_daemon``, which
+  drops the jar and swaps ``pyspark.zip`` for the unpacked
+  ``$SPARK_HOME/python`` on the daemon's ``sys.path``: PySpark calls
+  ``importlib.invalidate_caches()`` on every task, and each zipimporter
+  on the path re-reads its whole archive then (0.16–0.46 s per task on a
+  4-core host). ``spark-submit`` jobs that build their own session keep
+  PySpark's stock daemon.
+
+The driver heap and the local core count are sized from the host.
 """
 
 from __future__ import annotations
@@ -15,6 +24,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half the host's memory, capped at 8 GiB, in MiB."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(8 * 1024, total // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -85,10 +100,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.python.daemon.module", "datafiller_spark._worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

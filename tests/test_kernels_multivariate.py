@@ -195,3 +195,36 @@ def test_select_features_blocked_targets_equal_unblocked(monkeypatch):
     assert list(blocked) == list(whole) == targets
     for c in targets:
         np.testing.assert_array_equal(blocked[c], whole[c])
+
+
+def _argsort_top_k(n_features, col, n_nearest, scores):
+    """The full stable-argsort form of ``_sampled_cols``, kept as the oracle."""
+    candidates = np.arange(n_features)
+    candidates = candidates[candidates != col]
+    with np.errstate(all="ignore"):
+        feat_scores = np.nan_to_num(scores[candidates], nan=-np.inf)
+    k = min(n_nearest, len(candidates))
+    ranking = np.argsort(-feat_scores, kind="stable")
+    return np.sort(candidates[ranking[:k]])
+
+
+def test_sampled_cols_top_k_equals_stable_argsort():
+    """The linear-time top-k selects exactly what the stable argsort does:
+    ties to the lower index, NaN below -inf, k = 1 up to k >= F - 1."""
+    rng = np.random.default_rng(13)
+    imputer = MultivariateImputer()
+    for trial in range(400):
+        n = int(rng.integers(2, 40))
+        # few distinct levels force ties at the k-th score
+        scores = rng.integers(0, int(rng.integers(1, 6)), size=n).astype(np.float64)
+        special = rng.random(n)
+        scores[special < 0.15] = np.nan
+        scores[(special >= 0.15) & (special < 0.25)] = -np.inf
+        scores[(special >= 0.25) & (special < 0.3)] = np.inf
+        if trial % 7 == 0:
+            scores[:] = np.nan
+        col = int(rng.integers(0, n))
+        for k in {1, 2, n // 2 or 1, n - 2 or 1, n - 1, n}:
+            got = imputer._sampled_cols(n, col, k, scores[None, :], 0)
+            np.testing.assert_array_equal(got, _argsort_top_k(n, col, k, scores))
+            assert got.dtype == np.arange(1).dtype
