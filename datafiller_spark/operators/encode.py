@@ -65,6 +65,19 @@ def _encode_chunks(index: pd.DatetimeIndex, values: np.ndarray, tier: str):
         yield chunk_start, s, e, encode_points(ts[s:e], values[s:e])
 
 
+def chunk_schema(df: DataFrame, key_cols: Sequence[str]) -> StructType:
+    """The schema of a chunk row — ``df``'s key fields, then
+    chunk_start, tier, n_points and payload — shared by ``encode_tier``,
+    the pipeline kernel and the warehouse's ``chunks_tier=<t>``."""
+    out = StructType([df.schema[k] for k in key_cols])
+    return (
+        out.add("chunk_start", "timestamp")
+        .add("tier", "string")
+        .add("n_points", "integer")
+        .add("payload", "binary")
+    )
+
+
 def encode_tier(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -75,14 +88,7 @@ def encode_tier(
     """One binary chunk row per (key, chunk period), built on the
     per-series runner: each series is chunked by ``_chunk_slices``."""
     keys = list(key_cols)
-
-    out_schema = StructType()
-    for k in keys:
-        out_schema.add(df.schema[k])
-    out_schema.add("chunk_start", "timestamp")
-    out_schema.add("tier", "string")
-    out_schema.add("n_points", "integer")
-    out_schema.add("payload", "binary")
+    out_schema = chunk_schema(df, keys)
 
     def encode_series(key_values: dict, series: pd.DataFrame) -> pd.DataFrame:
         chunks = _encode_chunks(

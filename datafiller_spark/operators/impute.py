@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 from ._series import _impute, _per_series
-from .encode import _encode_chunks
+from .encode import _encode_chunks, chunk_schema
 
 
 def _series_frame(series: pd.DataFrame, bucket_col: str, values: list[str]) -> pd.DataFrame:
@@ -173,14 +173,7 @@ def cascade_gapfill_encode_all(
     """
     keys = list(key_cols)
 
-    out_schema = StructType()
-    for k in keys:
-        out_schema.add(df_1m.schema[k])
-    out_schema.add("chunk_start", "timestamp")
-    out_schema.add("tier", "string")
-    out_schema.add("n_points", "integer")
-    out_schema.add("payload", "binary")
-    out_schema.add("n_observed", "integer")
+    out_schema = chunk_schema(df_1m, keys).add("n_observed", "integer")
     out_cols = out_schema.fieldNames()
 
     params = dict(

@@ -23,76 +23,64 @@ snapshot id. Advancing them would let ``incremental_filter`` drop a raw
 row that arrives later than the stream's watermark inside a streamed
 bucket, and the batch resume could then never heal it.
 
-Snapshot pinning (the Iceberg analogue): every committed run writes its
-high-water table to an IMMUTABLE per-snapshot path
-(``_hw/snapshot=<id>``) in addition to the mutable head copy
-(``_checkpoint_high_water``). A resume anchors to a snapshot id and
-reads that snapshot's marks — a writer racing the resume can move the
-head, but never the pinned copy the resume is reading. Reads are lazy
-Spark scans (never a driver-side collect: the checkpoint is one row per
-key, which at 10^12 sequences can be millions of rows); the mutable
-head, which the same run later overwrites, is file-copied to a
-run-scoped temp dir before the lazy read so the plan never points at
-deleted files.
+Snapshot pinning (the Iceberg analogue): marks live ONLY per snapshot,
+in one parquet file under ``_hw/snapshot=<id>`` that the commit writes
+before its snapshot record (plans/pipeline.py) and never changes. A
+resume anchors to a snapshot id and reads that snapshot's marks, so a
+writer committing while the resume runs adds a new snapshot and cannot
+move the marks the resume reads. There is no mutable head copy and no
+temp copy: the marks are read and written on the driver with pyarrow,
+and ``read_high_water`` hands them to Spark with ``createDataFrame``.
+That bounds them by driver memory. Measured at 10^6 keys (an
+11-character string key and the mark, 4-core host): the file is 11 MB;
+``write_high_water`` raised the Python driver's peak RSS by 65 MB
+(2.0–2.6 s), and ``read_high_water`` by 53 MB (2.7–3.1 s) while the
+JVM heap held 135 MB for the resulting local relation.
 
-Losing the head copy is SAFE: a key absent from the marks is simply
-reprocessed from the start and merge-write replaces its rows — the
-result is unchanged, only the incremental saving is lost.
+Losing a snapshot's marks is SAFE: a key absent from the marks is
+simply reprocessed from the start and merge-write replaces its rows —
+the result is unchanged, only the incremental saving is lost.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bucket import time_bucket
 
 
-def checkpoint_path(base_dir: str, snapshot_id: str | None = None) -> str:
-    if snapshot_id is None:
-        return os.path.join(base_dir, "_checkpoint_high_water")
-    return os.path.join(base_dir, "_hw", f"snapshot={snapshot_id}")
+def write_parquet_file(table: pa.Table, path: str) -> None:
+    """Write ``table`` as the one parquet file ``path``: to a hidden temp
+    name beside it, then renamed into place, so no reader sees a partial
+    file."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
+
+
+def snapshot_file(base_dir: str, name: str, snapshot_id: str) -> str:
+    """The one file a snapshot's commit wrote under ``name`` (``_hw``,
+    ``metrics`` or ``lineage``)."""
+    return os.path.join(base_dir, name, f"snapshot={snapshot_id}", "part-0.parquet")
 
 
 def read_high_water(
     spark: SparkSession, base_dir: str, snapshot_id: str | None = None
 ) -> DataFrame | None:
-    """Per-key high-water marks; ``snapshot_id`` pins the immutable copy
-    a specific commit wrote (outputs written before snapshot pinning
-    existed fall back to the mutable head)."""
-    if snapshot_id is not None:
-        pinned = checkpoint_path(base_dir, snapshot_id)
-        if os.path.exists(pinned):
-            # immutable: never overwritten, so a lazy scan is safe
-            return spark.read.parquet(pinned)
-    head = checkpoint_path(base_dir)
-    if not os.path.exists(head):
+    """Per-key high-water marks of snapshot ``snapshot_id``; None for a
+    fresh warehouse (no snapshot) or a snapshot without marks."""
+    if snapshot_id is None:
         return None
-    # The head copy is overwritten when THIS run commits; snapshot its
-    # files to a run-scoped temp dir so the lazy plan outlives the
-    # overwrite. File copy, not collect: O(bytes), zero driver rows.
-    # The temp dir must outlive the COMMIT (returned lazy frames may
-    # re-read it on cache eviction), so it is reaped at process exit
-    # rather than per-run — a long-lived driver leaks zero dirs.
-    tmp = os.path.join(tempfile.mkdtemp(prefix="dfspark_hw_"), "hw")
-    _TEMP_HW_DIRS.append(os.path.dirname(tmp))
-    shutil.copytree(head, tmp)
-    return spark.read.parquet(tmp)
-
-
-_TEMP_HW_DIRS: list[str] = []
-
-
-@atexit.register
-def _cleanup_hw_temp_dirs() -> None:
-    for d in _TEMP_HW_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _TEMP_HW_DIRS.clear()
+    path = snapshot_file(base_dir, "_hw", snapshot_id)
+    if not os.path.exists(path):
+        return None
+    return spark.createDataFrame(pq.read_table(path))
 
 
 def high_water_marks(
@@ -112,23 +100,12 @@ def high_water_marks(
     )
 
 
-def write_high_water(marks: DataFrame, base_dir: str, snapshot_id: str | None = None) -> None:
-    """Persist a marks table (``high_water_marks``). With
-    ``snapshot_id`` it lands on the immutable per-snapshot path and the
-    mutable head is refreshed from it by file copy."""
-    head = checkpoint_path(base_dir)
-    if snapshot_id is None:
-        marks.coalesce(1).write.mode("overwrite").parquet(head)
-        return
-    pinned = checkpoint_path(base_dir, snapshot_id)
-    marks.coalesce(1).write.mode("overwrite").parquet(pinned)
-    staged = head + "__new"
-    if os.path.exists(staged):
-        shutil.rmtree(staged)
-    shutil.copytree(pinned, staged)
-    if os.path.exists(head):
-        shutil.rmtree(head)
-    os.rename(staged, head)
+def write_high_water(marks: DataFrame, base_dir: str, snapshot_id: str) -> None:
+    """Persist a marks table (``high_water_marks``) as snapshot
+    ``snapshot_id``'s marks: collected to the driver and written with
+    pyarrow (timestamps as UTC-adjusted microseconds, which Spark reads
+    as ``timestamp``)."""
+    write_parquet_file(marks.toArrow(), snapshot_file(base_dir, "_hw", snapshot_id))
 
 
 def incremental_filter(

@@ -27,27 +27,55 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   This commit (``_commit_delta``) is the warehouse's only write path:
   a streaming micro-batch (streaming/stream.py) is committed through it
   as a 1m delta too.
-- Lineage: one row per (tier, spark partition) recording row counts and
-  bucket ranges — enough to re-drive any partition.
+- Lineage: one row per (tier, kernel partition) of the chunk rows:
+  observed rows, grid points, payload bytes, the chunk_start bounds and
+  the chunk count (``n_chunks``; a distinct key count would cost the
+  stats job an extra stage).
 - Metrics: per tier: observed rows in, grid size, gaps filled
-  (grid − observed), bytes out — summed from the kernel's chunk rows by
-  the one stats aggregation, so they cost no extra job.
+  (grid − observed), bytes out — the lineage rows summed per tier.
+  Lineage and metrics both come from the one stats aggregation over the
+  kernel's chunk rows, so they cost no extra job.
+- Spark touches only the data directories (``tier=<t>``,
+  ``chunks_tier=<t>``), and every read of one is pinned to a known
+  schema (the delta's, or the one the snapshot log recorded), so none
+  infers a schema from parquet footers. The warehouse metadata — the
+  snapshot log, the high-water marks, ``metrics`` and ``lineage`` — is a
+  few KB per commit, read and written on the driver with pyarrow, one
+  file per snapshot (``<name>/snapshot=<id>/part-0.parquet``) that is
+  never rewritten. The driver must therefore see ``output_dir`` as a
+  file system, as the rename-based directory swap already requires.
+- One commit point: the snapshot record
+  (``_snapshots/part-<id>.parquet``) is written last, to a temp name and
+  renamed into place. A crash before it leaves data directories that a
+  re-run heals by merge and per-snapshot files that no record names;
+  nothing reads marks, metrics or lineage except through a record.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
 from dataclasses import dataclass, field
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..exceptions import EngineValueError
 from ..operators import cascade, cascade_gapfill_encode_all, decode_tier, rollup
-from .checkpoint import high_water_marks, incremental_filter, read_high_water, write_high_water
+from ..operators.encode import chunk_schema
+from .checkpoint import (
+    high_water_marks,
+    incremental_filter,
+    read_high_water,
+    snapshot_file,
+    write_high_water,
+    write_parquet_file,
+)
 
 TIER_CHAIN = ("1m", "1h", "1d")
 
@@ -57,9 +85,6 @@ class PipelineResult:
     tiers: dict[str, DataFrame]
     encoded: dict[str, DataFrame]
     key_cols: list[str]
-    metrics: DataFrame | None = None
-    #: written beside the warehouse; None without ``output_dir``
-    lineage: DataFrame | None = None
     points: int = 0
     wall_seconds: float = 0.0
     counters: dict[str, int] = field(default_factory=dict)
@@ -69,6 +94,9 @@ class PipelineResult:
     delta: DataFrame | None = None
     #: the kernel's cached chunk rows, all tiers (``encoded`` reads them)
     _chunks: DataFrame | None = field(default=None, repr=False)
+    #: the stats aggregation's ``metrics`` and ``lineage`` rows, which
+    #: the commit writes
+    _tables: dict[str, pa.Table] = field(default_factory=dict, repr=False)
 
     def unpersist(self) -> None:
         """Drop the frames this run cached: the 1m delta, the merged 1m
@@ -76,6 +104,18 @@ class PipelineResult:
         for df in (self.delta, self.tiers["1m"], self._chunks):
             if df is not None:
                 df.unpersist()
+
+    @property
+    def metrics(self) -> DataFrame:
+        """Per tier: rows_in, grid_rows, gaps_filled (grid − observed)
+        and bytes_out. Like ``lineage``, built on access."""
+        return self.tiers["1m"].sparkSession.createDataFrame(self._tables["metrics"])
+
+    @property
+    def lineage(self) -> DataFrame:
+        """One row per (tier, kernel partition): observed rows, grid
+        points, payload bytes, chunk_start bounds and chunk count."""
+        return self.tiers["1m"].sparkSession.createDataFrame(self._tables["lineage"])
 
     @property
     def filled(self) -> dict[str, DataFrame]:
@@ -170,7 +210,9 @@ def _merge_write(
 
     _heal_dir(path)
     if merge and os.path.exists(path):
-        prior = spark.read.parquet(path)
+        # pinned to the delta's schema: no footer inference, and a commit
+        # whose schema drifted never gets here (``_check_schemas``)
+        prior = spark.read.schema(df.schema).parquet(path)
         keep = prior.join(df.select(*merge_keys).distinct(), on=merge_keys, how="left_anti")
         merged = keep.select(*df.columns).unionByName(df)
         tmp = path + "__merge_tmp"
@@ -187,12 +229,15 @@ def _new_snapshot_id() -> str:
 
 
 # Persisted-warehouse layout contract version. v2: tier=<t> directories
-# hold OBSERVED rows (gap-filled values live only in chunks/ and query
+# hold OBSERVED rows (gap-filled values live only in chunks and query
 # results); v1 (pre round-3) persisted gap-filled rows in tier=<t>.
 # Merging v2 observed deltas into a v1 directory would silently retain
 # synthetic values as ground truth, so resumes refuse on version skew.
-LAYOUT_VERSION = 2
-
+# v3: the metadata (snapshot log, marks, metrics, lineage) is one file
+# per snapshot written by the driver, and each snapshot record carries
+# the data directories' schemas; a v2 warehouse has a mutable marks head
+# and a log without schemas.
+LAYOUT_VERSION = 3
 
 def _check_layout(output_dir: str) -> None:
     """Stamp the layout version on fresh warehouses; refuse to write
@@ -214,8 +259,8 @@ def _check_layout(output_dir: str) -> None:
         if found != LAYOUT_VERSION:
             raise EngineValueError(
                 f"warehouse at {output_dir!r} has layout v{found}, engine "
-                f"expects v{LAYOUT_VERSION}: tier directories predate the "
-                "observed-rows contract. Rebuild the warehouse from raw "
+                f"expects v{LAYOUT_VERSION}: its metadata or tier directories "
+                "predate the current contract. Rebuild the warehouse from raw "
                 "(a full, non-resume run into a fresh output_dir) instead "
                 "of resuming into it."
             )
@@ -239,13 +284,36 @@ def _check_layout(output_dir: str) -> None:
         fh.write(str(LAYOUT_VERSION))
 
 
+#: One snapshot record; ``schemas`` maps each data directory to its
+#: Spark schema (JSON), which readers pin instead of inferring one.
+_LOG_SCHEMA = pa.schema(
+    [
+        ("snapshot_id", pa.string()),
+        ("parent_id", pa.string()),
+        ("anchor_id", pa.string()),
+        ("resume", pa.bool_()),
+        ("committed_at", pa.float64()),
+        ("counters", pa.string()),
+        ("schemas", pa.string()),
+    ]
+)
+
+
+def _snapshot_log(output_dir: str) -> pa.Table:
+    """The snapshot log, newest first, read with pyarrow on the driver:
+    one file per commit, ``_snapshots/part-<id>.parquet``."""
+    path = os.path.join(output_dir, "_snapshots")
+    names = os.listdir(path) if os.path.isdir(path) else []
+    files = [os.path.join(path, n) for n in names if n.startswith("part-") and n.endswith(".parquet")]
+    if not files:
+        return _LOG_SCHEMA.empty_table()
+    return pa.concat_tables(pq.read_table(f) for f in files).sort_by([("committed_at", "descending")])
+
+
 def latest_snapshot_id(spark: SparkSession, output_dir: str) -> str | None:
     """Head of the snapshot chain, or None for a fresh warehouse."""
-    path = os.path.join(output_dir, "_snapshots")
-    if not os.path.exists(path):
-        return None
-    rows = spark.read.parquet(path).orderBy(F.desc("committed_at")).limit(1).collect()
-    return rows[0]["snapshot_id"] if rows else None
+    log = _snapshot_log(output_dir)
+    return log["snapshot_id"][0].as_py() if log.num_rows else None
 
 
 def read_snapshot(spark: SparkSession, output_dir: str, snapshot_id: str):
@@ -260,6 +328,12 @@ def read_snapshot(spark: SparkSession, output_dir: str, snapshot_id: str):
     return rows[0]
 
 
+def read_snapshots(spark: SparkSession, output_dir: str) -> DataFrame:
+    """The warehouse's commit log, newest first (a driver-side table:
+    reading it starts no Spark job)."""
+    return spark.createDataFrame(_snapshot_log(output_dir))
+
+
 def _commit_snapshot(
     spark: SparkSession,
     output_dir: str,
@@ -267,87 +341,110 @@ def _commit_snapshot(
     resume: bool,
     snapshot_id: str,
     anchor_id: str | None,
-) -> str:
-    """Append one commit row to the warehouse's snapshot log — the
+    schemas: dict[str, StructType],
+) -> None:
+    """Append one commit record to the warehouse's snapshot log — the
     parquet stand-in for Iceberg's snapshot chain: id, parent id, the
     anchor a resume pinned its high-water read to, the run's counters,
-    and whether it was incremental. Read it back with
-    :func:`read_snapshots`; the parent chain is the audit trail a resume
-    or a re-rollup anchors to."""
-    import json
-    import time as _time
-
-    path = os.path.join(output_dir, "_snapshots")
-    parent = latest_snapshot_id(spark, output_dir)
-    row = pd.DataFrame(
-        {
-            "snapshot_id": [snapshot_id],
-            "parent_id": [parent],
-            "anchor_id": [anchor_id],
-            "resume": [bool(resume)],
-            "committed_at": [float(_time.time())],
-            "counters": [json.dumps(counters)],
-        }
-    )
-    # from pandas, not a list: a list is shipped through a Python worker
-    # (~1 s per commit), a pandas frame goes over Arrow (~0.06 s)
-    spark.createDataFrame(
-        row,
-        "snapshot_id string, parent_id string, anchor_id string, "
-        "resume boolean, committed_at double, counters string",
-    ).coalesce(1).write.mode("append").parquet(path)
-    return snapshot_id
-
-
-def read_snapshots(spark: SparkSession, output_dir: str) -> DataFrame:
-    """The warehouse's commit log, newest first."""
-    return spark.read.parquet(os.path.join(output_dir, "_snapshots")).orderBy(
-        F.desc("committed_at")
+    whether it was incremental, and the data directories' schemas. The
+    record is one file written to a temp name and renamed into place:
+    the commit point. Read the log back with :func:`read_snapshots`;
+    the parent chain is the audit trail a resume anchors to."""
+    record = {
+        "snapshot_id": snapshot_id,
+        "parent_id": latest_snapshot_id(spark, output_dir),
+        "anchor_id": anchor_id,
+        "resume": bool(resume),
+        "committed_at": time.time(),
+        "counters": json.dumps(counters),
+        "schemas": json.dumps({name: s.jsonValue() for name, s in schemas.items()}),
+    }
+    write_parquet_file(
+        pa.Table.from_pylist([record], schema=_LOG_SCHEMA),
+        os.path.join(output_dir, "_snapshots", f"part-{snapshot_id}.parquet"),
     )
 
 
-def _lineage(df: DataFrame, tier: str, key_cols: list[str]) -> DataFrame:
-    return (
-        df.withColumn("__pid", F.spark_partition_id())
-        .groupBy("__pid")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("bucket").alias("min_bucket"),
-            F.max("bucket").alias("max_bucket"),
-            F.countDistinct(*key_cols).alias("n_keys"),
+def _recorded_schemas(output_dir: str) -> dict[str, StructType]:
+    """Data directory → Spark schema, as the newest snapshot recorded
+    them ({} for a warehouse with no snapshot, or whose log predates
+    layout v3)."""
+    log = _snapshot_log(output_dir)
+    if not log.num_rows or "schemas" not in log.column_names:
+        return {}
+    return {name: StructType.fromJson(s) for name, s in json.loads(log["schemas"][0].as_py()).items()}
+
+
+def _read_dir(spark: SparkSession, output_dir: str, name: str) -> DataFrame:
+    """Data directory ``name``, read pinned to the schema the newest
+    snapshot recorded for it: nothing is inferred from parquet footers."""
+    schema = _recorded_schemas(output_dir).get(name)
+    if schema is None:
+        raise EngineValueError(
+            f"warehouse at {output_dir!r} has no committed snapshot recording "
+            f"{name} (none yet, or its layout predates v{LAYOUT_VERSION}). Rebuild "
+            "the warehouse from raw (a full, non-resume run into a fresh output_dir)."
         )
-        .select(
-            F.lit(tier).alias("tier"),
-            F.col("__pid").alias("partition_id"),
-            "n_rows",
-            "min_bucket",
-            "max_bucket",
-            "n_keys",
-        )
-    )
+    return spark.read.schema(schema).parquet(os.path.join(output_dir, name))
+
+
+def _cascades(t1m: DataFrame, keys: list[str]) -> dict[str, DataFrame]:
+    tiers = {"1m": t1m, "1h": cascade(t1m, keys, "1h")}
+    tiers["1d"] = cascade(tiers["1h"], keys, "1d")
+    return tiers
+
+
+def _layout_schemas(t1m: DataFrame, keys: list[str]) -> dict[str, StructType]:
+    """The schema of every data directory a commit of ``t1m`` writes."""
+    schemas = {f"tier={tier}": df.schema for tier, df in _cascades(t1m, keys).items()}
+    schemas.update({f"chunks_tier={tier}": chunk_schema(t1m, keys) for tier in TIER_CHAIN})
+    return schemas
+
+
+def _check_schemas(output_dir: str, schemas: dict[str, StructType]) -> None:
+    """Refuse a commit whose directory schemas differ (in a column's
+    name, type or position; nullability aside) from the ones the
+    warehouse recorded."""
+    for name, recorded in _recorded_schemas(output_dir).items():
+        ours = schemas[name]
+        if ours.simpleString() != recorded.simpleString():
+            raise EngineValueError(
+                f"{os.path.join(output_dir, name)} was committed with schema "
+                f"{recorded.simpleString()}, but this commit's is "
+                f"{ours.simpleString()}. Cast the input to the recorded types, "
+                "or rebuild the warehouse from raw into a fresh output_dir."
+            )
 
 
 def _derive(spark: SparkSession, t1m: DataFrame, keys: list[str], **kernel) -> PipelineResult:
     """Everything an observed 1m tier yields: its 1h/1d cascades, the
     tier-chain kernel's chunks (``kernel`` is ``run_pipeline``'s
-    gap-fill parameters) and the one stats aggregation over them, which
-    gives the per-tier counters and the metrics rows."""
-    tiers = {"1m": t1m, "1h": cascade(t1m, keys, "1h")}
-    tiers["1d"] = cascade(tiers["1h"], keys, "1d")
+    gap-fill parameters) and the one stats aggregation over them. It
+    groups the chunk rows by tier and kernel partition; its rows are the
+    lineage, and their sums per tier are the counters and metrics."""
+    tiers = _cascades(t1m, keys)
     # chunk rows are small (one per key × calendar period); caching them
     # means the stats job, the writes and the returned frames don't
     # re-run the scan→rollup→kernel chain
     all_enc = cascade_gapfill_encode_all(t1m, keys, **kernel).cache()
-    stats = {
-        r["tier"]: (int(r["rows"]), int(r["points"]), int(r["bytes"]))
-        for r in all_enc.groupBy("tier")
+    # sums, bounds and counts only: a distinct count would add a stage
+    lineage = (
+        all_enc.groupBy("tier", F.spark_partition_id().alias("partition_id"))
         .agg(
-            F.sum(F.length("payload")).alias("bytes"),
-            F.sum("n_points").alias("points"),
-            F.sum("n_observed").alias("rows"),
+            F.sum("n_observed").alias("n_rows"),
+            F.sum("n_points").alias("n_points"),
+            F.sum(F.length("payload")).alias("bytes_out"),
+            F.min("chunk_start").alias("min_chunk_start"),
+            F.max("chunk_start").alias("max_chunk_start"),
+            F.count("*").alias("n_chunks"),
         )
-        .collect()
-    }
+        .toArrow()
+        .sort_by([("tier", "ascending"), ("partition_id", "ascending")])
+    )
+    totals = lineage.group_by("tier").aggregate(
+        [("n_rows", "sum"), ("n_points", "sum"), ("bytes_out", "sum")]
+    ).to_pylist()
+    stats = {r["tier"]: (r["n_rows_sum"], r["n_points_sum"], r["bytes_out_sum"]) for r in totals}
     counters: dict[str, int] = {}
     metrics_rows = []
     for tier in TIER_CHAIN:
@@ -355,21 +452,19 @@ def _derive(spark: SparkSession, t1m: DataFrame, keys: list[str], **kernel) -> P
         counters[f"tier_{tier}_rows"] = rows_in
         counters[f"tier_{tier}_points"] = grid
         counters[f"tier_{tier}_bytes"] = nbytes
-        metrics_rows.append((tier, rows_in, grid, grid - rows_in, nbytes))
-    # pandas (Arrow), not a list, for the reason in _commit_snapshot
-    metrics = spark.createDataFrame(
-        pd.DataFrame(metrics_rows, columns=["tier", "rows_in", "grid_rows", "gaps_filled", "bytes_out"]),
-        "tier string, rows_in long, grid_rows long, gaps_filled long, bytes_out long",
-    )
+        metrics_rows.append(
+            {"tier": tier, "rows_in": rows_in, "grid_rows": grid, "gaps_filled": grid - rows_in, "bytes_out": nbytes}
+        )
+    metrics = pa.Table.from_pylist(metrics_rows)
     chunks = all_enc.drop("n_observed")
     return PipelineResult(
         tiers=tiers,
         encoded={tier: chunks.where(F.col("tier") == tier) for tier in TIER_CHAIN},
         key_cols=keys,
-        metrics=metrics,
         points=sum(counters[f"tier_{tier}_points"] for tier in TIER_CHAIN),
         counters=counters,
         _chunks=all_enc,
+        _tables={"metrics": metrics, "lineage": lineage},
     )
 
 
@@ -388,16 +483,22 @@ def _commit_delta(
     """Commit a 1m delta to the warehouse at ``output_dir`` — the one
     write path of the batch pipeline and the streaming front-end.
 
-    Merge-writes the observed 1m rows; with ``merge`` re-reads the
-    merged tier for the keys the delta touched; derives the tiers,
-    chunks and stats from it (``_derive``); writes ``tier=<t>``,
-    ``chunks_tier=<t>``, ``metrics`` and ``lineage``; records ``marks``
-    (the per-key high-water table, see plans/checkpoint.py) under the
-    new snapshot; and appends the snapshot row anchored to
-    ``anchor_id``. ``t1m_delta`` should be cached: the tier write, the
-    affected-keys probe and the caller's marks all read it. The kernel
-    parameter defaults are ``run_pipeline``'s."""
+    Refuses a delta whose directory schemas drifted from the recorded
+    ones before it writes anything. Then merge-writes the observed 1m
+    rows; with ``merge`` re-reads the merged tier for the keys the delta
+    touched; derives the tiers, chunks and stats from it (``_derive``);
+    writes ``tier=<t>`` and ``chunks_tier=<t>``; writes ``metrics``,
+    ``lineage`` and ``marks`` (the per-key high-water table, see
+    plans/checkpoint.py) under the new snapshot's own paths; and last
+    the snapshot record anchored to ``anchor_id`` — the commit point. A
+    crash before the record leaves files no record names, which the
+    next run ignores and overwrites nothing of. ``t1m_delta`` should be
+    cached: the tier write, the affected-keys probe and the caller's
+    marks all read it. The kernel parameter defaults are
+    ``run_pipeline``'s."""
     keys = list(key_cols)
+    schemas = _layout_schemas(t1m_delta, keys)
+    _check_schemas(output_dir, schemas)
     tier1m_path = os.path.join(output_dir, "tier=1m")
     # observed rows are the persisted source of truth; written FIRST so
     # every derived product below can re-derive from the merged tier
@@ -413,7 +514,12 @@ def _commit_delta(
         # back the merged tier, restricted to the keys the delta touched
         # — work scales with the affected keys' history, not the table.
         affected = t1m_delta.select(*keys).distinct()
-        t1m = spark.read.parquet(tier1m_path).join(F.broadcast(affected), keys, "left_semi").cache()
+        t1m = (
+            spark.read.schema(t1m_delta.schema)
+            .parquet(tier1m_path)
+            .join(F.broadcast(affected), keys, "left_semi")
+            .cache()
+        )
 
     result = _derive(
         spark,
@@ -441,14 +547,11 @@ def _commit_delta(
             merge=merge,
         )
 
-    result.lineage = _lineage(t1m, "1m", keys)
-    for tier in TIER_CHAIN[1:]:
-        result.lineage = result.lineage.unionByName(_lineage(result.tiers[tier], tier, keys))
-    result.metrics.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "metrics"))
-    result.lineage.coalesce(1).write.mode("overwrite").parquet(os.path.join(output_dir, "lineage"))
     result.snapshot_id = _new_snapshot_id()
+    for name, table in result._tables.items():
+        write_parquet_file(table, snapshot_file(output_dir, name, result.snapshot_id))
     write_high_water(marks, output_dir, snapshot_id=result.snapshot_id)
-    _commit_snapshot(spark, output_dir, result.counters, merge, result.snapshot_id, anchor_id)
+    _commit_snapshot(spark, output_dir, result.counters, merge, result.snapshot_id, anchor_id, schemas)
     result.delta = t1m_delta
     return result
 
@@ -525,18 +628,30 @@ def run_pipeline(
     return result
 
 
+def _parquet_rows(path: str) -> int:
+    """Rows in the parquet files under ``path``, summed from their
+    footers on the driver (no Spark job)."""
+    return sum(
+        pq.read_metadata(os.path.join(d, f)).num_rows
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
 def apply_retention(spark: SparkSession, output_dir: str, tier: str, keep_after) -> int:
     """Retention: rewrite a tier keeping only buckets >= ``keep_after``.
 
     On Iceberg this is a metadata-only partition drop; on parquet we
     rewrite the tier directory (crash-safe rename swap). Returns rows
     retained."""
-    path = os.path.join(output_dir, f"tier={tier}")
+    name = f"tier={tier}"
+    path = os.path.join(output_dir, name)
     _heal_dir(path)
-    df = spark.read.parquet(path).where(F.col("bucket") >= F.lit(keep_after))
-    kept = df.count()
+    df = _read_dir(spark, output_dir, name)
     tmp = path + "__merge_tmp"
-    df.write.mode("overwrite").parquet(tmp)
+    df.where(F.col("bucket") >= F.lit(keep_after)).write.mode("overwrite").parquet(tmp)
+    kept = _parquet_rows(tmp)
     _replace_dir(path, tmp)
     return kept
 
@@ -558,7 +673,7 @@ def scan_chunks(
     are trimmed after decode. Returns (keys…, bucket, value)."""
     from ..operators.encode import _CHUNK_UNIT, decode_tier
 
-    df = spark.read.parquet(os.path.join(output_dir, f"chunks_tier={tier}"))
+    df = _read_dir(spark, output_dir, f"chunks_tier={tier}")
     if start is not None:
         # a chunk starting before `start` may still contain it: include
         # the whole boundary period, trim per-bucket after decode
@@ -594,9 +709,10 @@ def apply_chunk_retention(
     from ..operators.encode import _CHUNK_UNIT, decode_tier, encode_tier
 
     keys = list(key_cols)
-    path = os.path.join(output_dir, f"chunks_tier={tier}")
+    name = f"chunks_tier={tier}"
+    path = os.path.join(output_dir, name)
     _heal_dir(path)
-    df = spark.read.parquet(path)
+    df = _read_dir(spark, output_dir, name)
     boundary = F.date_trunc(_CHUNK_UNIT[tier], F.lit(keep_after))
     whole = df.where(F.col("chunk_start") >= F.lit(keep_after))
     partial = df.where(
@@ -614,5 +730,6 @@ def apply_chunk_retention(
     retained = whole.unionByName(reencoded)
     tmp = path + "__merge_tmp"
     retained.write.mode("overwrite").parquet(tmp)
+    kept = _parquet_rows(tmp)
     _replace_dir(path, tmp)
-    return spark.read.parquet(path).count()
+    return kept

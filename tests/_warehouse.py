@@ -1,5 +1,6 @@
 """Warehouse comparison shared by the resume and streaming tests."""
 
+import hashlib
 import os
 
 TIERS = ("1m", "1h", "1d")
@@ -29,3 +30,14 @@ def assert_same_warehouse(spark, out, ref, key_col):
         assert got[name] == want[name], f"{name} diverged"
         assert want[name], f"{name} is empty"
     return want
+
+
+def tree_digest(root):
+    """{relative path: sha256} of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(d, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out

@@ -2,15 +2,22 @@
 
 import datetime
 import os
+import shutil
 
 import pytest
-from _warehouse import assert_same_warehouse
+from _warehouse import assert_same_warehouse, tree_digest
 from pyspark.sql import functions as F
 
+from datafiller_spark.exceptions import EngineValueError
 from datafiller_spark.operators import rollup
-from datafiller_spark.plans import run_pipeline
+from datafiller_spark.plans import latest_snapshot_id, read_high_water, read_snapshots, run_pipeline
 from datafiller_spark.plans.pipeline import apply_retention, salted_rollup
 from datafiller_spark.sources import synth_sequences
+
+
+def head_marks(spark, out):
+    """The high-water marks of the warehouse's newest snapshot."""
+    return read_high_water(spark, out, latest_snapshot_id(spark, out))
 
 
 @pytest.fixture(scope="module")
@@ -59,14 +66,30 @@ def test_pipeline_counters_and_tiers(spark, seqs, tmp_path):
         assert metrics[tier].gaps_filled == metrics[tier].grid_rows - metrics[tier].rows_in
         assert metrics[tier].bytes_out == res.counters[f"tier_{tier}_bytes"]
         assert res.filled[tier].where(F.col("avg_value").isNull()).count() == 0
-    # artifacts written
+    # lineage: one row per (tier, kernel partition), summing to the counters
+    lineage = res.lineage.collect()
+    assert len({(r.tier, r.partition_id) for r in lineage}) == len(lineage)
+    for tier in tiers:
+        rows = [r for r in lineage if r.tier == tier]
+        assert sum(r.n_rows for r in rows) == res.counters[f"tier_{tier}_rows"]
+        assert sum(r.n_points for r in rows) == res.counters[f"tier_{tier}_points"]
+        assert sum(r.bytes_out for r in rows) == res.counters[f"tier_{tier}_bytes"]
+        assert sum(r.n_chunks for r in rows) == res.encoded[tier].count()
+        bounds = res.encoded[tier].agg(F.min("chunk_start"), F.max("chunk_start")).first()
+        assert (min(r.min_chunk_start for r in rows), max(r.max_chunk_start for r in rows)) == tuple(bounds)
+    # artifacts written: per-snapshot metrics, lineage and marks, readable by Spark
     out = tmp_path / "out"
     for tier in tiers:
         assert (out / f"tier={tier}").exists()
         assert (out / f"chunks_tier={tier}").exists()
-    assert (out / "metrics").exists()
-    assert (out / "lineage").exists()
-    assert (out / "_checkpoint_high_water").exists()
+    snap = f"snapshot={res.snapshot_id}"
+    persisted = spark.read.parquet(str(out / "metrics" / snap))
+    assert sorted(map(tuple, persisted.collect())) == sorted(map(tuple, res.metrics.collect()))
+    persisted = spark.read.parquet(str(out / "lineage" / snap))
+    assert dict(persisted.dtypes)["min_chunk_start"] == "timestamp"
+    assert sorted(map(tuple, persisted.collect())) == sorted(map(tuple, lineage))
+    marked = {r.source for r in head_marks(spark, str(out)).collect()}
+    assert marked == {r.source for r in res.tiers["1m"].select("source").distinct().collect()}
 
 
 def test_resume_is_incremental_and_consistent(spark, tmp_path):
@@ -78,7 +101,7 @@ def test_resume_is_incremental_and_consistent(spark, tmp_path):
     out = str(tmp_path / "ckpt")
     run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
 
-    hw_rows = spark.read.parquet(os.path.join(out, "_checkpoint_high_water")).collect()
+    hw_rows = head_marks(spark, out).collect()
     hw_max = max(r.max_bucket for r in hw_rows)
     hw_min = min(r.max_bucket for r in hw_rows)
     assert hw_max < cutoff
@@ -131,10 +154,7 @@ def test_resume_boundary_bucket_and_quiet_keys(spark, tmp_path):
         ("a", m1): (1, 4),
         ("b", m0): (1, 7),  # quiet key retained
     }
-    hw = {
-        r.source: r.max_bucket
-        for r in spark.read.parquet(os.path.join(out, "_checkpoint_high_water")).collect()
-    }
+    hw = {r.source: r.max_bucket for r in head_marks(spark, out).collect()}
     assert hw == {"a": m1, "b": m0}  # quiet key's mark survived the resume
 
 
@@ -154,15 +174,13 @@ def test_resume_heals_after_crash_between_write_and_checkpoint(spark, tmp_path):
     committed. The re-run reprocesses the same increment (the filter
     still sees the OLD marks) and merge-write replaces the same rows —
     the final state must equal the single-shot run regardless."""
-    import shutil
-
     full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=180).cache()
     cutoff = datetime.datetime(2024, 1, 1, 1, 30)
     first = full.where(F.col("event_ts") < F.lit(cutoff))
     out = str(tmp_path / "crash")
 
     run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
-    committed = ["_checkpoint_high_water", "_hw", "_snapshots"]
+    committed = ["_hw", "_snapshots"]
     for name in committed:
         shutil.copytree(os.path.join(out, name), str(tmp_path / f"{name}_backup"))
 
@@ -217,8 +235,6 @@ def test_resume_with_gapfill_encode_matches_single_shot(spark, tmp_path):
 def test_merge_write_heals_crash_mid_swap(spark, tmp_path):
     """A crash between the two renames of the directory swap must be
     recoverable: __old present without the live dir → restored."""
-    import shutil
-
     from datafiller_spark.plans.pipeline import _heal_dir, _merge_write
 
     path = str(tmp_path / "swap" / "tier=1m")
@@ -245,11 +261,12 @@ def test_merge_write_heals_crash_mid_swap(spark, tmp_path):
 
 
 def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
-    """North star: 'snapshot-pinned reads for resume'. A writer racing
-    the resume may move the mutable head marks; a resume pinned to a
-    snapshot must re-read THAT snapshot's immutable marks, so the raced
-    run's output equals the un-raced one."""
-    from datafiller_spark.plans import latest_snapshot_id, read_snapshot
+    """North star: 'snapshot-pinned reads for resume'. A writer that
+    commits while a resume runs moves the head to a snapshot with new
+    marks; a resume pinned to the earlier snapshot must read THAT
+    snapshot's marks, so the raced run's output equals the un-raced one."""
+    from datafiller_spark.plans import read_snapshot
+    from datafiller_spark.plans.pipeline import _commit_delta
 
     full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=180).cache()
     cutoff = datetime.datetime(2024, 1, 1, 1, 30)
@@ -259,16 +276,15 @@ def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
     run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
     s1 = latest_snapshot_id(spark, out)
 
-    # racing writer: clobber the mutable head with far-future marks —
-    # an unpinned reader consulting the head would now skip everything
-    head = os.path.join(out, "_checkpoint_high_water")
-    far = spark.read.parquet(head).withColumn(
-        "max_bucket", F.lit(datetime.datetime(2030, 1, 1))
-    )
-    far.coalesce(1).write.mode("overwrite").parquet(head + "__race")
-    import shutil
-    shutil.rmtree(head)
-    os.rename(head + "__race", head)
+    # racing writer: a real commit (the first part's rows again, an
+    # idempotent merge) carrying far-future marks — a resume reading the
+    # head's marks would now skip everything
+    far = datetime.datetime(2030, 1, 1)
+    marks = read_high_water(spark, out, s1).withColumn("max_bucket", F.lit(far))
+    delta = rollup(first, ["source"], "event_ts", "n_tok", "1m").cache()
+    raced = _commit_delta(spark, delta, out, ["source"], marks, s1, merge=True)
+    assert latest_snapshot_id(spark, out) == raced.snapshot_id != s1
+    assert {r.max_bucket for r in head_marks(spark, out).collect()} == {far}
 
     res = run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out,
                        resume=True, pin_snapshot=s1)
@@ -279,9 +295,11 @@ def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
     b = sorted(map(tuple, single.select("source", "bucket", "n_points", "sum_value").collect()))
     assert a == b
 
-    # the commit records which snapshot the resume anchored to
+    # the commit records which snapshot the resume anchored to, and
+    # chains onto the racing commit
     snap = read_snapshot(spark, out, res.snapshot_id)
     assert snap.anchor_id == s1 and snap.resume
+    assert snap.parent_id == raced.snapshot_id
 
 
 def test_snapshot_log_chains_commits(spark, tmp_path):
@@ -302,6 +320,7 @@ def test_snapshot_log_chains_commits(spark, tmp_path):
     assert dict(log.dtypes) == {
         "snapshot_id": "string", "parent_id": "string", "anchor_id": "string",
         "resume": "boolean", "committed_at": "double", "counters": "string",
+        "schemas": "string",
     }
     snaps = log.collect()
     assert len(snaps) == 2
@@ -312,6 +331,13 @@ def test_snapshot_log_chains_commits(spark, tmp_path):
     assert json.loads(root.counters) == first.counters
     assert head.parent_id == root.snapshot_id and head.resume
     assert json.loads(head.counters)["tier_1m_rows"] >= 0
+    # each record carries the Spark schema of every data directory
+    for snap in snaps:
+        schemas = json.loads(snap.schemas)
+        assert sorted(schemas) == sorted(f"{d}={t}" for d in ("tier", "chunks_tier") for t in ("1m", "1h", "1d"))
+        for name, schema in schemas.items():
+            on_disk = spark.read.parquet(os.path.join(out, name)).schema
+            assert sorted(f["name"] for f in schema["fields"]) == sorted(on_disk.names)
 
 
 def test_retention_then_resume_does_not_resurrect_dropped_data(spark, tmp_path):
@@ -389,3 +415,106 @@ def test_retired_fused_layout_refused(spark, seqs, tmp_path):
     for resume in (True, False):
         with _pytest.raises(EngineValueError, match="Rebuild the warehouse from raw"):
             run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out, resume=resume)
+
+
+def test_schema_drift_refused_before_any_write(spark, tmp_path):
+    """A commit whose tier or chunk schema differs from the recorded one
+    is refused with an error naming the directory and both schemas, and
+    the warehouse is left byte-for-byte unchanged."""
+    base = datetime.datetime(2024, 1, 1)
+    rows = [(s, base + datetime.timedelta(minutes=m), m % 7) for s in "ab" for m in range(90)]
+    out = str(tmp_path / "drift")
+    as_int = spark.createDataFrame(rows, "source string, event_ts timestamp, n_tok int")
+    run_pipeline(spark, as_int, ["source"], "event_ts", "n_tok", output_dir=out)
+    before = tree_digest(out)
+
+    as_double = as_int.withColumn("n_tok", F.col("n_tok").cast("double"))
+    with pytest.raises(EngineValueError) as err:
+        run_pipeline(spark, as_double, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
+    msg = str(err.value)
+    assert os.path.join(out, "tier=1m") in msg
+    assert "sum_value:bigint" in msg and "sum_value:double" in msg
+    assert tree_digest(out) == before
+
+
+def test_readers_refuse_a_warehouse_without_recorded_schemas(spark, seqs, tmp_path):
+    """Range reads and retention pin the schema the snapshot log
+    recorded; a warehouse whose log records none (an older layout, or no
+    finished commit) is refused instead of read with an inferred one."""
+    from datafiller_spark.plans import apply_chunk_retention, scan_chunks
+
+    out = str(tmp_path / "noschema")
+    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
+    shutil.rmtree(os.path.join(out, "_snapshots"))
+    keep_after = datetime.datetime(2024, 1, 1, 3, 0)
+    for read in (
+        lambda: scan_chunks(spark, out, "1m", ["source"]),
+        lambda: apply_chunk_retention(spark, out, "1m", ["source"], keep_after),
+        lambda: apply_retention(spark, out, "1m", keep_after),
+    ):
+        with pytest.raises(EngineValueError, match="Rebuild the warehouse from raw"):
+            read()
+
+
+@pytest.fixture(scope="module")
+def crash_case(spark, tmp_path_factory):
+    """(full raw table, a warehouse built from its first part, a
+    single-shot warehouse of all of it)."""
+    full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=180).cache()
+    base = tmp_path_factory.mktemp("crash_matrix")
+    built, ref = str(base / "built"), str(base / "ref")
+    first = full.where(F.col("event_ts") < F.lit(datetime.datetime(2024, 1, 1, 1, 30)))
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=built)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref)
+    return full, built, ref
+
+
+#: A commit's file-system steps: six directory merge-writes, then the
+#: metrics, lineage and marks files; the snapshot record is the tenth.
+COMMIT_STEPS = 10
+
+
+@pytest.mark.parametrize("crash_after", range(1, COMMIT_STEPS))
+def test_crash_at_every_commit_step_heals_on_resume(spark, tmp_path, monkeypatch, crash_case, crash_after):
+    """A resume that dies after any file-system step of its commit leaves
+    no snapshot record; the next resume ends byte-equal to a single-shot
+    run, and the log chains the healing commit onto the build."""
+    from datafiller_spark.plans import checkpoint, pipeline
+
+    full, built, ref = crash_case
+    out = str(tmp_path / "wh")
+    shutil.copytree(built, out)
+    head = latest_snapshot_id(spark, out)
+
+    class Crash(Exception):
+        pass
+
+    def run_counted(crash_at):
+        steps = []
+
+        def counted(fn, path_arg):
+            def step(*args, **kwargs):
+                fn(*args, **kwargs)
+                steps.append(args[path_arg])
+                if len(steps) == crash_at:
+                    raise Crash
+            return step
+
+        with monkeypatch.context() as m:
+            for mod, name, path_arg in ((pipeline, "_merge_write", 2), (pipeline, "write_parquet_file", 1),
+                                        (checkpoint, "write_parquet_file", 1)):
+                m.setattr(mod, name, counted(getattr(mod, name), path_arg))
+            run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
+        return steps
+
+    with pytest.raises(Crash):
+        run_counted(crash_after)
+    assert latest_snapshot_id(spark, out) == head
+    assert read_snapshots(spark, out).count() == 1
+
+    steps = run_counted(None)
+    assert len(steps) == COMMIT_STEPS
+    assert os.path.basename(os.path.dirname(steps[-1])) == "_snapshots"
+    assert_same_warehouse(spark, out, ref, "source")
+    log = read_snapshots(spark, out).collect()
+    assert len(log) == 2 and log[0].parent_id == head and log[0].anchor_id == head
