@@ -23,10 +23,24 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   chunks — is then recomputed from the MERGED tier restricted to the
   keys the delta touched. Cascade boundaries and open chunks are thus
   always rebuilt from complete history, and the merge replaces complete
-  rows with complete rows. Untouched keys are never read or rewritten.
-  This commit (``_commit_delta``) is the warehouse's only write path:
-  a streaming micro-batch (streaming/stream.py) is committed through it
-  as a 1m delta too.
+  rows with complete rows. This commit (``_commit_delta``) is the
+  warehouse's only write path: a streaming micro-batch
+  (streaming/stream.py) is committed through it as a 1m delta too.
+- Layout (v4): every data directory — ``tier=<t>`` and
+  ``chunks_tier=<t>`` — is partitioned by the first key column
+  (``<key0>=<v>``), the unit a commit updates. A commit rewrites only
+  the partitions its delta touches: it stages them under
+  ``<dir>__merge_tmp`` and renames each into place, parking the one it
+  displaces under ``<dir>__old`` until all are in (``_heal_dir`` undoes
+  or finishes a crashed swap partition by partition). Untouched
+  partitions are never read or rewritten — with one key column, no
+  untouched key is. A derived directory's touched partitions are
+  replaced outright when the key is the partition column alone (every
+  row of a touched key is re-derived, so no prior row is read); with
+  more key columns the commit reads the touched partitions only and
+  keeps their untouched keys' rows. ``tier=1m`` merges on (keys,
+  bucket), reading the touched partitions only, because its delta
+  carries only the new buckets.
 - Lineage: one row per (tier, kernel partition) of the chunk rows:
   observed rows, grid points, payload bytes, the chunk_start bounds and
   the chunk count (``n_chunks``; a distinct key count would cost the
@@ -49,6 +63,8 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   renamed into place. A crash before it leaves data directories that a
   re-run heals by merge and per-snapshot files that no record names;
   nothing reads marks, metrics or lineage except through a record.
+- Retention rewrites a whole directory through the same partition swap
+  and keeps its partitioning.
 """
 
 from __future__ import annotations
@@ -156,35 +172,63 @@ def salted_rollup(
     )
 
 
+def _partition_dirs(path: str) -> list[str]:
+    """The ``<col>=<v>`` partition directories of ``path`` (none if it
+    does not exist)."""
+    if not os.path.isdir(path):
+        return []
+    return sorted(n for n in os.listdir(path) if "=" in n and os.path.isdir(os.path.join(path, n)))
+
+
 def _heal_dir(path: str) -> None:
-    """Recover a directory from a crash mid-swap.
+    """Recover a directory from a crash mid-swap, partition by partition.
 
-    ``_replace_dir`` renames the live dir aside (``__old``) before
-    renaming the new one into place, so every crash window leaves a
-    recoverable state: ``__old`` without ``path`` → the second rename
-    never happened, restore the old dir; ``__old`` beside ``path`` →
-    the swap completed, drop the leftover; a stray ``__merge_tmp`` is an
-    unfinished staging write and is discarded either way."""
+    ``_swap_partitions`` parks each displaced partition under ``__old``
+    before it renames the staged one into place, so a parked partition
+    says how far its own swap got: without a live partition beside it the
+    second rename never happened, and it is restored; beside one, the swap
+    finished, and it is dropped. A stray ``__merge_tmp`` is an unfinished
+    staging write or the partitions a crashed swap had not reached yet,
+    and is discarded either way."""
     old = path + "__old"
-    if os.path.exists(old):
-        if os.path.exists(path):
-            shutil.rmtree(old)
+    for name in _partition_dirs(old):
+        if os.path.exists(os.path.join(path, name)):
+            shutil.rmtree(os.path.join(old, name))
         else:
-            os.rename(old, path)
-    tmp = path + "__merge_tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+            os.rename(os.path.join(old, name), os.path.join(path, name))
+    for leftover in (old, path + "__merge_tmp"):
+        if os.path.exists(leftover):
+            shutil.rmtree(leftover)
 
 
-def _replace_dir(path: str, staged: str) -> None:
-    """Atomically (to within one rename) swap ``staged`` into ``path``:
-    no crash instant leaves the data unrecoverable (see ``_heal_dir``)."""
-    old = path + "__old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(path, old)
-    os.rename(staged, path)
+def _swap_partitions(path: str, whole: bool = False) -> None:
+    """Rename every partition staged under ``<path>__merge_tmp`` into
+    ``path``, parking the partition it displaces under ``<path>__old`` —
+    outside the table, so no reader ever sees a stray partition value —
+    until all are in. No crash instant loses a partition (see
+    ``_heal_dir``). Other partitions are left alone; with ``whole`` the
+    staged partitions are the whole table and the others, whose rows all
+    went, are deleted first."""
+    tmp, old = path + "__merge_tmp", path + "__old"
+    staged = _partition_dirs(tmp)
+    if whole:
+        for name in sorted(set(_partition_dirs(path)) - set(staged)):
+            shutil.rmtree(os.path.join(path, name))
+    os.makedirs(old)
+    for name in staged:
+        live = os.path.join(path, name)
+        if os.path.exists(live):
+            os.rename(live, os.path.join(old, name))
+        os.rename(os.path.join(tmp, name), live)
+    shutil.rmtree(tmp)
     shutil.rmtree(old)
+
+
+def _in_partitions(col: str, values: list):
+    """``col`` is one of ``values`` (``None`` matching null): a filter on
+    a partition column, so a scan reads only those partitions' files."""
+    cond = F.col(col).isin([v for v in values if v is not None])
+    return cond | F.col(col).isNull() if None in values else cond
 
 
 def _merge_write(
@@ -192,34 +236,36 @@ def _merge_write(
     df: DataFrame,
     path: str,
     merge_keys: list[str],
-    partition_by: list[str] | None = None,
-    merge: bool = False,
+    partitions: list | None = None,
 ) -> None:
-    """Persist ``df``; with ``merge=True`` new rows REPLACE prior rows
-    sharing the same merge key and untouched keys keep their history —
-    the parquet stand-in for Iceberg MERGE / dynamic partition
-    overwrite. A static overwrite on a resume run would truncate the
-    whole directory and drop previously persisted data. The directory
-    swap is rename-based with crash recovery (``_heal_dir``)."""
+    """Persist ``df`` partitioned by its first merge key — the parquet
+    stand-in for Iceberg MERGE / dynamic partition overwrite.
 
-    def _write(d: DataFrame, p: str) -> None:
-        w = d.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(p)
-
+    With ``partitions=None`` ``df`` overwrites the whole directory (a
+    build). Otherwise ``partitions`` are the partition values ``df``
+    touches, and only those partitions are rewritten: staged under
+    ``<path>__merge_tmp`` and renamed into place one by one
+    (``_swap_partitions``, crash recovery in ``_heal_dir``); every other
+    partition is neither read nor rewritten. In a rewritten partition
+    ``df``'s rows replace the prior rows sharing their ``merge_keys`` and
+    the other prior rows are kept — read from the touched partitions
+    alone, pinned to ``df``'s schema. When the partition column is the
+    whole merge key, ``df`` replaces its partitions outright and no prior
+    row is read."""
+    part = merge_keys[0]
     _heal_dir(path)
-    if merge and os.path.exists(path):
+    if partitions is None or not os.path.exists(path):
+        df.write.mode("overwrite").partitionBy(part).parquet(path)
+        return
+    staged = df
+    if merge_keys != [part]:
         # pinned to the delta's schema: no footer inference, and a commit
         # whose schema drifted never gets here (``_check_schemas``)
-        prior = spark.read.schema(df.schema).parquet(path)
-        keep = prior.join(df.select(*merge_keys).distinct(), on=merge_keys, how="left_anti")
-        merged = keep.select(*df.columns).unionByName(df)
-        tmp = path + "__merge_tmp"
-        _write(merged, tmp)
-        _replace_dir(path, tmp)
-    else:
-        _write(df, path)
+        prior = spark.read.schema(df.schema).parquet(path).where(_in_partitions(part, partitions))
+        keep = prior.join(df.select(*merge_keys), on=merge_keys, how="left_anti")
+        staged = keep.select(*df.columns).unionByName(df)
+    staged.write.mode("overwrite").partitionBy(part).parquet(path + "__merge_tmp")
+    _swap_partitions(path)
 
 
 def _new_snapshot_id() -> str:
@@ -236,13 +282,37 @@ def _new_snapshot_id() -> str:
 # v3: the metadata (snapshot log, marks, metrics, lineage) is one file
 # per snapshot written by the driver, and each snapshot record carries
 # the data directories' schemas; a v2 warehouse has a mutable marks head
-# and a log without schemas.
-LAYOUT_VERSION = 3
+# and a log without schemas. v4: chunks_tier=<t> is partitioned by the
+# first key column like tier=<t>, and a commit swaps only the partitions
+# it touches; a v3 chunk directory is flat.
+LAYOUT_VERSION = 4
+
+
+def _layout_version(output_dir: str) -> int | None:
+    """The warehouse's stamped layout version (None if unstamped)."""
+    marker = os.path.join(output_dir, "_layout_version")
+    if not os.path.exists(marker):
+        return None
+    with open(marker) as fh:
+        return int(fh.read().strip() or 0)
+
+
+def _refuse_other_layout(output_dir: str, found: int | None) -> None:
+    if found != LAYOUT_VERSION:
+        raise EngineValueError(
+            f"warehouse at {output_dir!r} has "
+            + (f"layout v{found}" if found is not None else "no layout marker")
+            + f", engine "
+            f"expects v{LAYOUT_VERSION}: its metadata or tier directories "
+            "predate the current contract. Rebuild the warehouse from raw "
+            "(a full, non-resume run into a fresh output_dir) instead "
+            "of resuming into it."
+        )
+
 
 def _check_layout(output_dir: str) -> None:
     """Stamp the layout version on fresh warehouses; refuse to write
     into one written under an older (or unversioned) layout contract."""
-    marker = os.path.join(output_dir, "_layout_version")
     if os.path.exists(os.path.join(output_dir, "chunks")):
         # the retired fused layout (chunks/tier=<t>): a resume would start
         # a chunks_tier=<t> directory holding only the delta's keys, and
@@ -253,17 +323,9 @@ def _check_layout(output_dir: str) -> None:
             "Rebuild the warehouse from raw (a full, non-resume run into a "
             "fresh output_dir) instead of resuming into it."
         )
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            found = int(fh.read().strip() or 0)
-        if found != LAYOUT_VERSION:
-            raise EngineValueError(
-                f"warehouse at {output_dir!r} has layout v{found}, engine "
-                f"expects v{LAYOUT_VERSION}: its metadata or tier directories "
-                "predate the current contract. Rebuild the warehouse from raw "
-                "(a full, non-resume run into a fresh output_dir) instead "
-                "of resuming into it."
-            )
+    found = _layout_version(output_dir)
+    if found is not None:
+        _refuse_other_layout(output_dir, found)
         return
     has_prior = os.path.exists(os.path.join(output_dir, "_snapshots")) or os.path.exists(
         os.path.join(output_dir, "tier=1m")
@@ -280,7 +342,7 @@ def _check_layout(output_dir: str) -> None:
             "fresh output_dir."
         )
     os.makedirs(output_dir, exist_ok=True)
-    with open(marker, "w") as fh:
+    with open(os.path.join(output_dir, "_layout_version"), "w") as fh:
         fh.write(str(LAYOUT_VERSION))
 
 
@@ -377,7 +439,9 @@ def _recorded_schemas(output_dir: str) -> dict[str, StructType]:
 
 def _read_dir(spark: SparkSession, output_dir: str, name: str) -> DataFrame:
     """Data directory ``name``, read pinned to the schema the newest
-    snapshot recorded for it: nothing is inferred from parquet footers."""
+    snapshot recorded for it: nothing is inferred from parquet footers.
+    Refuses a warehouse of another layout version."""
+    _refuse_other_layout(output_dir, _layout_version(output_dir))
     schema = _recorded_schemas(output_dir).get(name)
     if schema is None:
         raise EngineValueError(
@@ -492,34 +556,34 @@ def _commit_delta(
     plans/checkpoint.py) under the new snapshot's own paths; and last
     the snapshot record anchored to ``anchor_id`` — the commit point. A
     crash before the record leaves files no record names, which the
-    next run ignores and overwrites nothing of. ``t1m_delta`` should be
-    cached: the tier write, the affected-keys probe and the caller's
-    marks all read it. The kernel parameter defaults are
-    ``run_pipeline``'s."""
+    next run ignores and overwrites nothing of. With ``merge`` each data
+    directory rewrites only the ``<key0>=<v>`` partitions the delta
+    touches (``_merge_write``). ``t1m_delta`` should be cached: the
+    partition probe, the tier write and the caller's marks all read it.
+    The kernel parameter defaults are ``run_pipeline``'s."""
     keys = list(key_cols)
     schemas = _layout_schemas(t1m_delta, keys)
     _check_schemas(output_dir, schemas)
     tier1m_path = os.path.join(output_dir, "tier=1m")
+    # every directory is partitioned by the first key column, and a merge
+    # rewrites only the partitions the delta touches
+    parts = [r[0] for r in t1m_delta.select(keys[0]).distinct().collect()] if merge else None
     # observed rows are the persisted source of truth; written FIRST so
     # every derived product below can re-derive from the merged tier
     # and a crash mid-run is heal-by-rerun
-    _merge_write(
-        spark, t1m_delta, tier1m_path, merge_keys=keys + ["bucket"], partition_by=keys[:1], merge=merge
-    )
+    _merge_write(spark, t1m_delta, tier1m_path, keys + ["bucket"], parts)
     t1m = t1m_delta
     if merge:
         # Derived products (cascades, fills, chunks) must never be built
         # from the delta alone: a delta-only 1h boundary row or open
-        # chunk would REPLACE its complete prior version on merge. Read
-        # back the merged tier, restricted to the keys the delta touched
-        # — work scales with the affected keys' history, not the table.
-        affected = t1m_delta.select(*keys).distinct()
-        t1m = (
-            spark.read.schema(t1m_delta.schema)
-            .parquet(tier1m_path)
-            .join(F.broadcast(affected), keys, "left_semi")
-            .cache()
-        )
+        # chunk would REPLACE its complete prior version. Read back the
+        # merged tier's touched partitions, restricted to the keys the
+        # delta touched — work scales with the affected keys' history,
+        # not the table.
+        t1m = spark.read.schema(t1m_delta.schema).parquet(tier1m_path).where(_in_partitions(keys[0], parts))
+        if len(keys) > 1:
+            t1m = t1m.join(F.broadcast(t1m_delta.select(*keys).distinct()), keys, "left_semi")
+        t1m = t1m.cache()
 
     result = _derive(
         spark,
@@ -529,23 +593,13 @@ def _commit_delta(
         min_samples_train=min_samples_train,
         interpolate_gaps_less_than=interpolate_gaps_less_than,
     )
-    for tier in TIER_CHAIN[1:]:  # 1m observed rows already persisted above
-        _merge_write(
-            spark,
-            result.tiers[tier],
-            os.path.join(output_dir, f"tier={tier}"),
-            merge_keys=keys + ["bucket"],
-            partition_by=keys[:1],
-            merge=merge,
-        )
+    # every row of a touched key is re-derived, so a derived directory
+    # replaces the touched keys' rows wholly: 1m observed rows are
+    # already persisted above
+    for tier in TIER_CHAIN[1:]:
+        _merge_write(spark, result.tiers[tier], os.path.join(output_dir, f"tier={tier}"), keys, parts)
     for tier in TIER_CHAIN:
-        _merge_write(
-            spark,
-            result.encoded[tier],
-            os.path.join(output_dir, f"chunks_tier={tier}"),
-            merge_keys=keys + ["chunk_start"],
-            merge=merge,
-        )
+        _merge_write(spark, result.encoded[tier], os.path.join(output_dir, f"chunks_tier={tier}"), keys, parts)
 
     result.snapshot_id = _new_snapshot_id()
     for name, table in result._tables.items():
@@ -639,21 +693,33 @@ def _parquet_rows(path: str) -> int:
     )
 
 
+def _rewrite_partitions(df: DataFrame, path: str, part: str) -> int:
+    """Replace the table at ``path`` with ``df``, partitioned by ``part``:
+    staged, then swapped in partition by partition (``_swap_partitions``),
+    dropping the partitions ``df`` has no rows for. Returns rows
+    written."""
+    tmp = path + "__merge_tmp"
+    df.write.mode("overwrite").partitionBy(part).parquet(tmp)
+    kept = _parquet_rows(tmp)
+    _swap_partitions(path, whole=True)
+    return kept
+
+
 def apply_retention(spark: SparkSession, output_dir: str, tier: str, keep_after) -> int:
     """Retention: rewrite a tier keeping only buckets >= ``keep_after``.
 
     On Iceberg this is a metadata-only partition drop; on parquet we
-    rewrite the tier directory (crash-safe rename swap). Returns rows
-    retained."""
+    rewrite the tier directory, keeping its partitioning (the column
+    named by its ``<col>=<v>`` directories), with the crash-safe
+    partition swap. Returns rows retained."""
     name = f"tier={tier}"
     path = os.path.join(output_dir, name)
     _heal_dir(path)
     df = _read_dir(spark, output_dir, name)
-    tmp = path + "__merge_tmp"
-    df.where(F.col("bucket") >= F.lit(keep_after)).write.mode("overwrite").parquet(tmp)
-    kept = _parquet_rows(tmp)
-    _replace_dir(path, tmp)
-    return kept
+    parts = _partition_dirs(path)
+    if not parts:  # rows always sit in partitions: the tier is empty
+        return 0
+    return _rewrite_partitions(df.where(F.col("bucket") >= F.lit(keep_after)), path, parts[0].split("=", 1)[0])
 
 
 def scan_chunks(
@@ -704,7 +770,9 @@ def apply_chunk_retention(
     the ``chunk_start`` predicate alone — no payload is ever decoded
     (the Iceberg partition-drop analogue); only the single boundary
     chunk per key is decoded, filtered to ``bucket >= keep_after``, and
-    re-encoded. Work is O(keys), not O(points). Returns chunks retained.
+    re-encoded. Work is O(keys), not O(points). The directory is
+    rewritten with the crash-safe partition swap and stays partitioned
+    by ``key_cols[0]``. Returns chunks retained.
     """
     from ..operators.encode import _CHUNK_UNIT, decode_tier, encode_tier
 
@@ -727,9 +795,4 @@ def apply_chunk_retention(
         value_col,
         tier,
     )
-    retained = whole.unionByName(reencoded)
-    tmp = path + "__merge_tmp"
-    retained.write.mode("overwrite").parquet(tmp)
-    kept = _parquet_rows(tmp)
-    _replace_dir(path, tmp)
-    return kept
+    return _rewrite_partitions(whole.unionByName(reencoded), path, keys[0])

@@ -16,7 +16,9 @@ high-water marks.
 Per-batch cost: a micro-batch re-derives the WHOLE history of the keys
 it touched, exactly as a batch resume does. A gap-filled chunk depends
 on the model fitted over the whole series, so re-encoding only the
-touched chunk periods cannot be correct.
+touched chunk periods cannot be correct. The commit rewrites only the
+``<key0>=<v>`` partitions those keys fall in; the rest of the warehouse
+is neither read nor rewritten.
 
 The reference is batch-only (SURVEY §2.4); this is engine-new surface.
 """

@@ -5,7 +5,7 @@ import os
 import shutil
 
 import pytest
-from _warehouse import assert_same_warehouse, tree_digest
+from _warehouse import assert_same_warehouse, partition_files, tree_digest
 from pyspark.sql import functions as F
 
 from datafiller_spark.exceptions import EngineValueError
@@ -222,7 +222,7 @@ def test_resume_with_gapfill_encode_matches_single_shot(spark, tmp_path):
                  resume=True, **kwargs)
     single = run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref, **kwargs)
 
-    want = assert_same_warehouse(spark, out, ref, "source")
+    want = assert_same_warehouse(spark, out, ref, ["source"])
     for tier in ("1m", "1h", "1d"):
         ccols = ["source", "chunk_start", "n_points", "payload"]
         mem = sorted(
@@ -233,31 +233,44 @@ def test_resume_with_gapfill_encode_matches_single_shot(spark, tmp_path):
 
 
 def test_merge_write_heals_crash_mid_swap(spark, tmp_path):
-    """A crash between the two renames of the directory swap must be
-    recoverable: __old present without the live dir → restored."""
+    """A crash inside a partition swap is healed partition by partition:
+    a parked partition with no live one beside it is restored (the crash
+    fell between its two renames), one beside a live partition is a
+    finished swap's leftover and is dropped, and the staging directory
+    is discarded. A merge then rewrites only the partitions it touches."""
     from datafiller_spark.plans.pipeline import _heal_dir, _merge_write
 
     path = str(tmp_path / "swap" / "tier=1m")
-    df = spark.createDataFrame([("a", 1)], "k string, v int")
-    _merge_write(spark, df, path, merge_keys=["k"])
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    schema = "k string, b int, v int"
 
-    # simulate the worst crash instant: live dir renamed aside, new dir
-    # not yet renamed in (and its staging write half-finished)
-    os.rename(path, path + "__old")
-    os.makedirs(path + "__merge_tmp")
+    def rows():
+        return sorted(map(tuple, spark.read.parquet(path).select("k", "b", "v").collect()))
+
+    _merge_write(spark, spark.createDataFrame([("a", 1, 1), ("b", 1, 1)], schema), path, ["k", "b"])
+    before = rows()
+
+    # k=a parked, its replacement not yet renamed in (and the staging
+    # write half-finished); k=b swapped, its parked copy not yet dropped
+    os.makedirs(path + "__old")
+    os.rename(os.path.join(path, "k=a"), os.path.join(path + "__old", "k=a"))
+    shutil.copytree(os.path.join(path, "k=b"), os.path.join(path + "__old", "k=b"))
+    os.makedirs(os.path.join(path + "__merge_tmp", "k=a"))
     _heal_dir(path)
-    assert os.path.exists(path) and not os.path.exists(path + "__old")
-    assert not os.path.exists(path + "__merge_tmp")
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert os.listdir(os.path.dirname(path)) == ["tier=1m"]
+    assert rows() == before
 
-    # ...and the other window: swap completed, leftovers remain
-    shutil.copytree(path, path + "__old")
-    _merge_write(spark, spark.createDataFrame([("b", 2)], "k string, v int"),
-                 path, merge_keys=["k"], merge=True)
-    rows = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert rows == [("a", 1), ("b", 2)]
-    assert not os.path.exists(path + "__old")
+    untouched = partition_files(path)["k=a"]
+    _merge_write(spark, spark.createDataFrame([("b", 1, 5), ("b", 2, 2)], schema), path, ["k", "b"],
+                 partitions=["b"])
+    assert rows() == [("a", 1, 1), ("b", 1, 5), ("b", 2, 2)]
+    assert partition_files(path)["k=a"] == untouched
+    assert os.listdir(os.path.dirname(path)) == ["tier=1m"]
+
+    # a null key is a partition too, and its prior rows are merged
+    for b in (1, 2):
+        _merge_write(spark, spark.createDataFrame([(None, b, b)], schema), path, ["k", "b"], partitions=[None])
+    nulls = spark.read.parquet(path).where(F.col("k").isNull()).select("b", "v").collect()
+    assert sorted(map(tuple, nulls)) == [(1, 1), (2, 2)]
 
 
 def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
@@ -368,6 +381,74 @@ def test_retention_then_resume_does_not_resurrect_dropped_data(spark, tmp_path):
     assert a == b
 
 
+def test_retention_keeps_key_partitions(spark, seqs, tmp_path):
+    """Retention rewrites a directory partition by partition and keeps
+    its ``<key0>=<v>`` layout: every partition with retained rows
+    survives, and no file lands flat at the table's root."""
+    from datafiller_spark.plans import apply_chunk_retention
+
+    out = str(tmp_path / "retpart")
+    run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
+    keep_after = datetime.datetime(2024, 1, 1, 3, 0)
+    for name, retain in (
+        ("tier=1m", lambda: apply_retention(spark, out, "1m", keep_after)),
+        ("chunks_tier=1m", lambda: apply_chunk_retention(spark, out, "1m", ["source"], keep_after)),
+    ):
+        path = os.path.join(out, name)
+        before = set(partition_files(path))
+        assert len(before) > 10, name
+        retain()
+        assert set(partition_files(path)) == before, name
+        assert not [f for f in os.listdir(path) if f.endswith(".parquet")], name
+        assert not os.path.exists(path + "__old") and not os.path.exists(path + "__merge_tmp"), name
+
+
+def test_multi_key_resume_matches_single_shot(spark, tmp_path):
+    """With two key columns a partition (one source) holds several keys.
+    A resume fed only shard 0's rows touches half the keys of every
+    partition: the commit merges inside the touched partitions — keeping
+    shard 1's rows, replacing shard 0's — and ends byte-equal to a
+    single-shot run over the same rows."""
+    keys = ["source", "shard"]
+    full = synth_sequences(spark, 2000, mean_tokens=16, span_minutes=240).withColumn(
+        "shard", F.pmod(F.hash("doc_id"), F.lit(2))
+    )
+    early = F.col("event_ts") < F.lit(datetime.datetime(2024, 1, 1, 2, 0))
+    shard0 = F.col("shard") == 0
+    out, ref = str(tmp_path / "resumed"), str(tmp_path / "singleshot")
+    kwargs = dict(min_samples_train=10)
+    run_pipeline(spark, full.where(early), keys, "event_ts", "n_tok", output_dir=out, **kwargs)
+    res = run_pipeline(spark, full.where(shard0), keys, "event_ts", "n_tok", output_dir=out, resume=True, **kwargs)
+    assert {r.shard for r in res.delta.select("shard").distinct().collect()} == {0}
+    run_pipeline(spark, full.where(early | shard0), keys, "event_ts", "n_tok", output_dir=ref, **kwargs)
+    want = assert_same_warehouse(spark, out, ref, keys)
+    assert {r[1] for r in want["tier=1h"]} == {0, 1}
+
+
+def test_resume_leaves_untouched_partitions_alone(spark, tmp_path):
+    """A resume rewrites only the partitions of the keys it touches: in
+    each of the six data directories every other partition keeps its very
+    files (same inode and mtime), and the touched ones are rewritten."""
+    full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=180).cache()
+    out = str(tmp_path / "wh")
+    first = full.where(F.col("event_ts") < F.lit(datetime.datetime(2024, 1, 1, 1, 30)))
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
+    dirs = [f"{d}={t}" for d in ("tier", "chunks_tier") for t in ("1m", "1h", "1d")]
+    before = {d: partition_files(os.path.join(out, d)) for d in dirs}
+    touched = {"source=web", "source=books"}
+
+    run_pipeline(spark, full.where(F.col("source").isin("web", "books")), ["source"], "event_ts", "n_tok",
+                 output_dir=out, resume=True)
+    for d in dirs:
+        after = partition_files(os.path.join(out, d))
+        assert set(after) == set(before[d]) and len(after) > 10, d
+        for part, files in after.items():
+            if part in touched:
+                assert files != before[d][part], (d, part)
+            else:
+                assert files == before[d][part], (d, part)
+
+
 def test_layout_version_guard(spark, seqs, tmp_path):
     """Fresh warehouses get a layout marker; resuming into a pre-marker
     or wrong-version warehouse refuses (ADVICE r3: merging observed
@@ -472,13 +553,22 @@ def crash_case(spark, tmp_path_factory):
 #: A commit's file-system steps: six directory merge-writes, then the
 #: metrics, lineage and marks files; the snapshot record is the tenth.
 COMMIT_STEPS = 10
+#: Crashes inside one directory's partition swap, "<directory>/<n>": the
+#: commit dies right after the n-th rename of that directory's swap. Each
+#: partition is parked, then replaced: "/1" falls between the two
+#: renames of one partition, "/2" between two partitions.
+SWAP_CRASHES = ("tier=1m/1", "tier=1m/2", "chunks_tier=1d/3")
 
 
-@pytest.mark.parametrize("crash_after", range(1, COMMIT_STEPS))
+@pytest.mark.parametrize("crash_after", [*range(1, COMMIT_STEPS), *SWAP_CRASHES])
 def test_crash_at_every_commit_step_heals_on_resume(spark, tmp_path, monkeypatch, crash_case, crash_after):
-    """A resume that dies after any file-system step of its commit leaves
-    no snapshot record; the next resume ends byte-equal to a single-shot
-    run, and the log chains the healing commit onto the build."""
+    """A resume that dies after any file-system step of its commit, or
+    between two renames of a partition swap, leaves no snapshot record;
+    the next resume ends byte-equal to a single-shot run with no leftover
+    in any partition, and the log chains the healing commit onto the
+    build."""
+    import re
+
     from datafiller_spark.plans import checkpoint, pipeline
 
     full, built, ref = crash_case
@@ -491,6 +581,7 @@ def test_crash_at_every_commit_step_heals_on_resume(spark, tmp_path, monkeypatch
 
     def run_counted(crash_at):
         steps = []
+        renames = []
 
         def counted(fn, path_arg):
             def step(*args, **kwargs):
@@ -500,10 +591,22 @@ def test_crash_at_every_commit_step_heals_on_resume(spark, tmp_path, monkeypatch
                     raise Crash
             return step
 
+        def swap_rename(rename, target, n):
+            def step(src, dst):
+                rename(src, dst)
+                if f"{os.sep}{target}__" in src + dst:  # a park or a move-in of target's swap
+                    renames.append(dst)
+                    if len(renames) == n:
+                        raise Crash
+            return step
+
         with monkeypatch.context() as m:
             for mod, name, path_arg in ((pipeline, "_merge_write", 2), (pipeline, "write_parquet_file", 1),
                                         (checkpoint, "write_parquet_file", 1)):
                 m.setattr(mod, name, counted(getattr(mod, name), path_arg))
+            if isinstance(crash_at, str):
+                target, n = crash_at.split("/")
+                m.setattr(pipeline.os, "rename", swap_rename(os.rename, target, int(n)))
             run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
         return steps
 
@@ -515,6 +618,13 @@ def test_crash_at_every_commit_step_heals_on_resume(spark, tmp_path, monkeypatch
     steps = run_counted(None)
     assert len(steps) == COMMIT_STEPS
     assert os.path.basename(os.path.dirname(steps[-1])) == "_snapshots"
-    assert_same_warehouse(spark, out, ref, "source")
+    assert_same_warehouse(spark, out, ref, ["source"])
+    # no parked or staged partition survives, and every partition holds
+    # the files of one write only
+    assert not [n for n in os.listdir(out) if n.endswith(("__old", "__merge_tmp"))]
+    for name in (f"{d}={t}" for d in ("tier", "chunks_tier") for t in ("1m", "1h", "1d")):
+        for part, files in partition_files(os.path.join(out, name)).items():
+            writes = {m.group(1) for f in files if (m := re.search(r"part-\d+-([0-9a-f-]{36})", f))}
+            assert len(writes) == 1 and not any(os.path.isdir(os.path.join(out, name, part, f)) for f in files)
     log = read_snapshots(spark, out).collect()
     assert len(log) == 2 and log[0].parent_id == head and log[0].anchor_id == head

@@ -222,4 +222,4 @@ def test_streamed_warehouse_equals_single_shot_pipeline(spark, tmp_path, monkeyp
         run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
     run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref)
-    assert_same_warehouse(spark, out, ref, "source")
+    assert_same_warehouse(spark, out, ref, ["source"])
