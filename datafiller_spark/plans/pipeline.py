@@ -34,13 +34,18 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   displaces under ``<dir>__old`` until all are in (``_heal_dir`` undoes
   or finishes a crashed swap partition by partition). Untouched
   partitions are never read or rewritten — with one key column, no
-  untouched key is. A derived directory's touched partitions are
-  replaced outright when the key is the partition column alone (every
-  row of a touched key is re-derived, so no prior row is read); with
-  more key columns the commit reads the touched partitions only and
-  keeps their untouched keys' rows. ``tier=1m`` merges on (keys,
-  bucket), reading the touched partitions only, because its delta
-  carries only the new buckets.
+  untouched key is. ``tier=1m`` merges on (keys, bucket), reading the
+  touched partitions only, because its delta carries only the new
+  buckets. A derived directory's touched partitions are replaced
+  outright when the key is the partition column alone and ``tier=1m``
+  still holds every row they were derived from: then each touched key
+  is re-derived whole and no prior row is read. Otherwise — more key
+  columns, or ``apply_retention`` has trimmed ``tier=1m``, after which
+  the coarser rows it can no longer re-derive must survive — the commit
+  reads the touched partitions only and merges on (keys, bucket) or
+  (keys, chunk_start). The first key column should have few values
+  (tens to thousands): each value is a directory, and a commit collects
+  the touched values to the driver and filters on them literally.
 - Lineage: one row per (tier, kernel partition) of the chunk rows:
   observed rows, grid points, payload bytes, the chunk_start bounds and
   the chunk count (``n_chunks``; a distinct key count would cost the
@@ -64,7 +69,8 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   re-run heals by merge and per-snapshot files that no record names;
   nothing reads marks, metrics or lineage except through a record.
 - Retention rewrites a whole directory through the same partition swap
-  and keeps its partitioning.
+  and keeps its partitioning; ``apply_retention`` records each tier it
+  trims under ``_retention/`` first.
 """
 
 from __future__ import annotations
@@ -201,21 +207,15 @@ def _heal_dir(path: str) -> None:
             shutil.rmtree(leftover)
 
 
-def _swap_partitions(path: str, whole: bool = False) -> None:
+def _swap_partitions(path: str) -> None:
     """Rename every partition staged under ``<path>__merge_tmp`` into
     ``path``, parking the partition it displaces under ``<path>__old`` —
     outside the table, so no reader ever sees a stray partition value —
     until all are in. No crash instant loses a partition (see
-    ``_heal_dir``). Other partitions are left alone; with ``whole`` the
-    staged partitions are the whole table and the others, whose rows all
-    went, are deleted first."""
+    ``_heal_dir``). Other partitions are left alone."""
     tmp, old = path + "__merge_tmp", path + "__old"
-    staged = _partition_dirs(tmp)
-    if whole:
-        for name in sorted(set(_partition_dirs(path)) - set(staged)):
-            shutil.rmtree(os.path.join(path, name))
     os.makedirs(old)
-    for name in staged:
+    for name in _partition_dirs(tmp):
         live = os.path.join(path, name)
         if os.path.exists(live):
             os.rename(live, os.path.join(old, name))
@@ -251,7 +251,8 @@ def _merge_write(
     the other prior rows are kept — read from the touched partitions
     alone, pinned to ``df``'s schema. When the partition column is the
     whole merge key, ``df`` replaces its partitions outright and no prior
-    row is read."""
+    row is read. The prior read filters on ``partitions`` literally, one
+    value each: the partition column should have few values."""
     part = merge_keys[0]
     _heal_dir(path)
     if partitions is None or not os.path.exists(path):
@@ -558,7 +559,12 @@ def _commit_delta(
     crash before the record leaves files no record names, which the
     next run ignores and overwrites nothing of. With ``merge`` each data
     directory rewrites only the ``<key0>=<v>`` partitions the delta
-    touches (``_merge_write``). ``t1m_delta`` should be cached: the
+    touches (``_merge_write``), collected to the driver (a few per
+    commit, as the first key column should have few values). A derived
+    directory replaces the touched keys' rows wholly unless
+    ``apply_retention`` has trimmed ``tier=1m``; then it merges on
+    (keys, bucket) or (keys, chunk_start), keeping the rows older than
+    the retained 1m history. ``t1m_delta`` should be cached: the
     partition probe, the tier write and the caller's marks all read it.
     The kernel parameter defaults are ``run_pipeline``'s."""
     keys = list(key_cols)
@@ -593,13 +599,16 @@ def _commit_delta(
         min_samples_train=min_samples_train,
         interpolate_gaps_less_than=interpolate_gaps_less_than,
     )
-    # every row of a touched key is re-derived, so a derived directory
-    # replaces the touched keys' rows wholly: 1m observed rows are
-    # already persisted above
+    # a touched key is re-derived from its whole 1m history, which covers
+    # every derived row of it unless retention trimmed that history: then
+    # the rows it no longer yields are kept by a (key, bucket) merge
+    trimmed = os.path.exists(_retention_mark(output_dir, "tier=1m"))
     for tier in TIER_CHAIN[1:]:
-        _merge_write(spark, result.tiers[tier], os.path.join(output_dir, f"tier={tier}"), keys, parts)
+        merge_keys = keys + ["bucket"] if trimmed else keys
+        _merge_write(spark, result.tiers[tier], os.path.join(output_dir, f"tier={tier}"), merge_keys, parts)
     for tier in TIER_CHAIN:
-        _merge_write(spark, result.encoded[tier], os.path.join(output_dir, f"chunks_tier={tier}"), keys, parts)
+        merge_keys = keys + ["chunk_start"] if trimmed else keys
+        _merge_write(spark, result.encoded[tier], os.path.join(output_dir, f"chunks_tier={tier}"), merge_keys, parts)
 
     result.snapshot_id = _new_snapshot_id()
     for name, table in result._tables.items():
@@ -693,15 +702,28 @@ def _parquet_rows(path: str) -> int:
     )
 
 
-def _rewrite_partitions(df: DataFrame, path: str, part: str) -> int:
-    """Replace the table at ``path`` with ``df``, partitioned by ``part``:
-    staged, then swapped in partition by partition (``_swap_partitions``),
-    dropping the partitions ``df`` has no rows for. Returns rows
-    written."""
+def _retention_mark(output_dir: str, name: str) -> str:
+    """The file recording that ``apply_retention`` trimmed directory
+    ``name`` (it holds the newest ``keep_after``)."""
+    return os.path.join(output_dir, "_retention", name)
+
+
+def _retain(df: DataFrame, path: str) -> int:
+    """Replace the table at ``path`` with ``df``, the rows it retains,
+    keeping the partition column its ``<col>=<v>`` directories name:
+    staged, the partitions ``df`` has no rows for deleted (their rows
+    all expired, so no crash instant loses a kept row), then swapped in
+    partition by partition (``_swap_partitions``). Returns rows
+    written (0 for an empty table, which has no partition)."""
+    parts = _partition_dirs(path)
+    if not parts:
+        return 0
     tmp = path + "__merge_tmp"
-    df.write.mode("overwrite").partitionBy(part).parquet(tmp)
+    df.write.mode("overwrite").partitionBy(parts[0].split("=", 1)[0]).parquet(tmp)
     kept = _parquet_rows(tmp)
-    _swap_partitions(path, whole=True)
+    for name in sorted(set(parts) - set(_partition_dirs(tmp))):
+        shutil.rmtree(os.path.join(path, name))
+    _swap_partitions(path)
     return kept
 
 
@@ -709,17 +731,19 @@ def apply_retention(spark: SparkSession, output_dir: str, tier: str, keep_after)
     """Retention: rewrite a tier keeping only buckets >= ``keep_after``.
 
     On Iceberg this is a metadata-only partition drop; on parquet we
-    rewrite the tier directory, keeping its partitioning (the column
-    named by its ``<col>=<v>`` directories), with the crash-safe
-    partition swap. Returns rows retained."""
+    rewrite the tier directory, keeping its partitioning, with the
+    crash-safe partition swap (``_retain``). The trim is recorded under
+    ``_retention/`` before any row goes: a later commit then keeps the
+    derived rows that ``tier=1m`` no longer yields. Returns rows
+    retained."""
     name = f"tier={tier}"
     path = os.path.join(output_dir, name)
     _heal_dir(path)
     df = _read_dir(spark, output_dir, name)
-    parts = _partition_dirs(path)
-    if not parts:  # rows always sit in partitions: the tier is empty
-        return 0
-    return _rewrite_partitions(df.where(F.col("bucket") >= F.lit(keep_after)), path, parts[0].split("=", 1)[0])
+    os.makedirs(os.path.join(output_dir, "_retention"), exist_ok=True)
+    with open(_retention_mark(output_dir, name), "w") as fh:
+        fh.write(str(keep_after))
+    return _retain(df.where(F.col("bucket") >= F.lit(keep_after)), path)
 
 
 def scan_chunks(
@@ -771,8 +795,9 @@ def apply_chunk_retention(
     (the Iceberg partition-drop analogue); only the single boundary
     chunk per key is decoded, filtered to ``bucket >= keep_after``, and
     re-encoded. Work is O(keys), not O(points). The directory is
-    rewritten with the crash-safe partition swap and stays partitioned
-    by ``key_cols[0]``. Returns chunks retained.
+    rewritten with the crash-safe partition swap (``_retain``) and keeps
+    its partition column, whatever the order of ``key_cols``. Returns
+    chunks retained.
     """
     from ..operators.encode import _CHUNK_UNIT, decode_tier, encode_tier
 
@@ -795,4 +820,4 @@ def apply_chunk_retention(
         value_col,
         tier,
     )
-    return _rewrite_partitions(whole.unionByName(reencoded), path, keys[0])
+    return _retain(whole.unionByName(reencoded), path)

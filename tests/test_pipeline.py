@@ -381,6 +381,67 @@ def test_retention_then_resume_does_not_resurrect_dropped_data(spark, tmp_path):
     assert a == b
 
 
+def test_tier_retention_then_resume_keeps_coarser_history(spark, tmp_path):
+    """Retention on ``tier=1m`` alone keeps the coarser tiers and every
+    chunk directory longer, and a resume must not take that back: it
+    re-derives the touched keys from the retained 1m rows only, so the
+    derived rows older than the 1m horizon survive by a (key, bucket)
+    or (key, chunk_start) merge instead of being replaced with the keys'
+    shorter re-derivation."""
+    full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=3 * 1440).cache()
+    day = datetime.datetime(2024, 1, 1)
+    first = full.where(F.col("event_ts") < F.lit(day + datetime.timedelta(days=2, hours=12)))
+    out = str(tmp_path / "wh")
+    run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
+    keep_after = day + datetime.timedelta(days=1, hours=7)
+    apply_retention(spark, out, "1m", keep_after)
+
+    derived = {"tier=1h": "bucket", "tier=1d": "bucket", "chunks_tier=1m": "chunk_start",
+               "chunks_tier=1h": "chunk_start", "chunks_tier=1d": "chunk_start"}
+
+    def older(name):
+        """(min bucket or chunk_start, the (key, bucket or chunk_start)
+        pairs of the whole days before the horizon)."""
+        df = spark.read.parquet(os.path.join(out, name))
+        col = derived[name]
+        rows = df.where(F.col(col) < F.lit(day + datetime.timedelta(days=1))).select("source", col).collect()
+        return df.agg(F.min(col)).first()[0], sorted(map(tuple, rows))
+
+    before = {name: older(name) for name in derived}
+    assert before["tier=1d"][0] == day and before["tier=1h"][1] and before["chunks_tier=1m"][1]
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
+    for name in derived:
+        assert older(name) == before[name], name
+
+
+def test_chunk_retention_keeps_partition_column_for_any_key_order(spark, tmp_path):
+    """``apply_chunk_retention`` keeps the directory's own partition
+    column, whatever order the caller lists the key columns in: the
+    same retention with the keys reversed leaves the same partitions and
+    the same chunks, and the table still reads."""
+    from datafiller_spark.plans import apply_chunk_retention, scan_chunks
+
+    keys = ["source", "shard"]
+    seq = synth_sequences(spark, 1000, mean_tokens=16, span_minutes=240).withColumn(
+        "shard", F.pmod(F.hash("doc_id"), F.lit(2))
+    )
+    built = str(tmp_path / "built")
+    run_pipeline(spark, seq, keys, "event_ts", "n_tok", output_dir=built, min_samples_train=10)
+    keep_after = datetime.datetime(2024, 1, 1, 2, 30)
+    got = {}
+    for order in (keys, keys[::-1]):
+        out = str(tmp_path / "_".join(order))
+        shutil.copytree(built, out)
+        path = os.path.join(out, "chunks_tier=1m")
+        parts = set(partition_files(path))
+        assert apply_chunk_retention(spark, out, "1m", order, keep_after) > 0
+        after = set(partition_files(path))  # a partition whose chunks all expired goes
+        assert after and after <= parts and all(p.startswith("source=") for p in parts)
+        rows = scan_chunks(spark, out, "1m", keys).select(*keys, "bucket", "avg_value").collect()
+        got[tuple(order)] = sorted(map(tuple, rows))
+    assert got[tuple(keys)] == got[tuple(keys[::-1])] and got[tuple(keys)]
+
+
 def test_retention_keeps_key_partitions(spark, seqs, tmp_path):
     """Retention rewrites a directory partition by partition and keeps
     its ``<key0>=<v>`` layout: every partition with retained rows
