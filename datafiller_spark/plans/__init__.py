@@ -1,9 +1,7 @@
 from .pipeline import (
     PipelineResult,
     apply_chunk_retention,
-    apply_retention,
     latest_snapshot_id,
-    read_snapshot,
     read_snapshots,
     run_pipeline,
     scan_chunks,
@@ -12,10 +10,8 @@ from .checkpoint import high_water_marks, read_high_water, write_high_water, inc
 
 __all__ = [
     "run_pipeline",
-    "read_snapshot",
     "read_snapshots",
     "latest_snapshot_id",
-    "apply_retention",
     "apply_chunk_retention",
     "scan_chunks",
     "PipelineResult",

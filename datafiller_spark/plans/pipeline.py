@@ -26,7 +26,7 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   rows with complete rows. This commit (``_commit_delta``) is the
   warehouse's only write path: a streaming micro-batch
   (streaming/stream.py) is committed through it as a 1m delta too.
-- Layout (v4): every data directory — ``tier=<t>`` and
+- Layout (v5): every data directory — ``tier=<t>`` and
   ``chunks_tier=<t>`` — is partitioned by the first key column
   (``<key0>=<v>``), the unit a commit updates. A commit rewrites only
   the partitions its delta touches: it stages them under
@@ -37,15 +37,16 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   untouched key is. ``tier=1m`` merges on (keys, bucket), reading the
   touched partitions only, because its delta carries only the new
   buckets. A derived directory's touched partitions are replaced
-  outright when the key is the partition column alone and ``tier=1m``
-  still holds every row they were derived from: then each touched key
-  is re-derived whole and no prior row is read. Otherwise — more key
-  columns, or ``apply_retention`` has trimmed ``tier=1m``, after which
-  the coarser rows it can no longer re-derive must survive — the commit
-  reads the touched partitions only and merges on (keys, bucket) or
-  (keys, chunk_start). The first key column should have few values
-  (tens to thousands): each value is a directory, and a commit collects
-  the touched values to the driver and filters on them literally.
+  outright when the key is the partition column alone and the log
+  records no 1m retention horizon: then ``tier=1m`` holds every row
+  they were derived from, each touched key is re-derived whole and no
+  prior row is read. Otherwise — more key columns, or a horizon, below
+  which the coarser rows ``tier=1m`` can no longer re-derive must
+  survive — the commit reads the touched partitions only and merges on
+  (keys, bucket) or (keys, chunk_start). The first key column should
+  have few values (tens to thousands): each value is a directory, and a
+  commit collects the touched values to the driver and filters on them
+  literally.
 - Lineage: one row per (tier, kernel partition) of the chunk rows:
   observed rows, grid points, payload bytes, the chunk_start bounds and
   the chunk count (``n_chunks``; a distinct key count would cost the
@@ -68,9 +69,19 @@ Scale design (what survives 1000 executors / 10^12 sequences):
   renamed into place. A crash before it leaves data directories that a
   re-run heals by merge and per-snapshot files that no record names;
   nothing reads marks, metrics or lineage except through a record.
-- Retention rewrites a whole directory through the same partition swap
-  and keeps its partitioning; ``apply_retention`` records each tier it
-  trims under ``_retention/`` first.
+- Retention (``apply_chunk_retention``, the one entry point) trims
+  ``tier=<t>`` and ``chunks_tier=<t>`` together, each through the same
+  partition swap, keeping its partitioning. Like an Iceberg delete it
+  is one more snapshot in the chain: its record carries the per-tier
+  ``horizons`` (every commit carries them forward), and it is written
+  before any row goes. A commit drops delta rows below the 1m horizon,
+  so no resume brings trimmed rows back. Fills after retention: a key a
+  commit touches is re-derived from its retained history only; an
+  untouched key keeps its earlier chunks byte for byte. Horizon order:
+  a coarser tier keeps at least the history of a finer one
+  (``horizon[1d] <= horizon[1h] <= horizon[1m]``, an absent horizon
+  counting as -inf), so a tier re-derived from a trimmed ``tier=1m``
+  never yields a row below its own horizon.
 """
 
 from __future__ import annotations
@@ -80,6 +91,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from datetime import datetime
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -251,8 +263,10 @@ def _merge_write(
     the other prior rows are kept — read from the touched partitions
     alone, pinned to ``df``'s schema. When the partition column is the
     whole merge key, ``df`` replaces its partitions outright and no prior
-    row is read. The prior read filters on ``partitions`` literally, one
-    value each: the partition column should have few values."""
+    row is read: ``_commit_delta`` asks for that for a derived directory
+    only while the log records no 1m retention horizon. The prior read
+    filters on ``partitions`` literally, one value each: the partition
+    column should have few values."""
     part = merge_keys[0]
     _heal_dir(path)
     if partitions is None or not os.path.exists(path):
@@ -285,8 +299,10 @@ def _new_snapshot_id() -> str:
 # the data directories' schemas; a v2 warehouse has a mutable marks head
 # and a log without schemas. v4: chunks_tier=<t> is partitioned by the
 # first key column like tier=<t>, and a commit swaps only the partitions
-# it touches; a v3 chunk directory is flat.
-LAYOUT_VERSION = 4
+# it touches; a v3 chunk directory is flat. v5: each snapshot record
+# carries the retention horizons; a v4 warehouse recorded a tier=1m trim
+# in a side file that a v5 commit would not read.
+LAYOUT_VERSION = 5
 
 
 def _layout_version(output_dir: str) -> int | None:
@@ -348,7 +364,10 @@ def _check_layout(output_dir: str) -> None:
 
 
 #: One snapshot record; ``schemas`` maps each data directory to its
-#: Spark schema (JSON), which readers pin instead of inferring one.
+#: Spark schema (JSON), which readers pin instead of inferring one, and
+#: ``horizons`` maps each tier that retention trimmed to its horizon (JSON,
+#: ``YYYY-MM-DD HH:MM:SS[.ffffff]``, so string order is time order):
+#: ``tier=<t>`` and ``chunks_tier=<t>`` hold no bucket before it.
 _LOG_SCHEMA = pa.schema(
     [
         ("snapshot_id", pa.string()),
@@ -358,6 +377,7 @@ _LOG_SCHEMA = pa.schema(
         ("committed_at", pa.float64()),
         ("counters", pa.string()),
         ("schemas", pa.string()),
+        ("horizons", pa.string()),
     ]
 )
 
@@ -379,22 +399,24 @@ def latest_snapshot_id(spark: SparkSession, output_dir: str) -> str | None:
     return log["snapshot_id"][0].as_py() if log.num_rows else None
 
 
-def read_snapshot(spark: SparkSession, output_dir: str, snapshot_id: str):
-    """One commit row by id (raises on unknown ids)."""
-    rows = (
-        read_snapshots(spark, output_dir)
-        .where(F.col("snapshot_id") == F.lit(snapshot_id))
-        .collect()
-    )
-    if not rows:
-        raise ValueError(f"unknown snapshot_id {snapshot_id!r}")
-    return rows[0]
-
-
 def read_snapshots(spark: SparkSession, output_dir: str) -> DataFrame:
     """The warehouse's commit log, newest first (a driver-side table:
     reading it starts no Spark job)."""
     return spark.createDataFrame(_snapshot_log(output_dir))
+
+
+def _head(output_dir: str) -> dict:
+    """The newest snapshot record, with its ``schemas`` and ``horizons``
+    decoded (both empty, and no ``snapshot_id``, for a warehouse with no
+    snapshot). Refuses a warehouse of another layout version."""
+    _refuse_other_layout(output_dir, _layout_version(output_dir))
+    log = _snapshot_log(output_dir)
+    if not log.num_rows:
+        return {"schemas": {}, "horizons": {}}
+    head = log.slice(0, 1).to_pylist()[0]
+    head["schemas"] = {name: StructType.fromJson(s) for name, s in json.loads(head["schemas"]).items()}
+    head["horizons"] = json.loads(head["horizons"])
+    return head
 
 
 def _commit_snapshot(
@@ -405,14 +427,16 @@ def _commit_snapshot(
     snapshot_id: str,
     anchor_id: str | None,
     schemas: dict[str, StructType],
+    horizons: dict[str, str],
 ) -> None:
     """Append one commit record to the warehouse's snapshot log — the
     parquet stand-in for Iceberg's snapshot chain: id, parent id, the
     anchor a resume pinned its high-water read to, the run's counters,
-    whether it was incremental, and the data directories' schemas. The
-    record is one file written to a temp name and renamed into place:
-    the commit point. Read the log back with :func:`read_snapshots`;
-    the parent chain is the audit trail a resume anchors to."""
+    whether it was incremental, the data directories' schemas and the
+    retention horizons. The record is one file written to a temp name
+    and renamed into place: the commit point. Read the log back with
+    :func:`read_snapshots`; the parent chain is the audit trail a resume
+    anchors to."""
     record = {
         "snapshot_id": snapshot_id,
         "parent_id": latest_snapshot_id(spark, output_dir),
@@ -421,6 +445,7 @@ def _commit_snapshot(
         "committed_at": time.time(),
         "counters": json.dumps(counters),
         "schemas": json.dumps({name: s.jsonValue() for name, s in schemas.items()}),
+        "horizons": json.dumps(horizons),
     }
     write_parquet_file(
         pa.Table.from_pylist([record], schema=_LOG_SCHEMA),
@@ -428,22 +453,11 @@ def _commit_snapshot(
     )
 
 
-def _recorded_schemas(output_dir: str) -> dict[str, StructType]:
-    """Data directory → Spark schema, as the newest snapshot recorded
-    them ({} for a warehouse with no snapshot, or whose log predates
-    layout v3)."""
-    log = _snapshot_log(output_dir)
-    if not log.num_rows or "schemas" not in log.column_names:
-        return {}
-    return {name: StructType.fromJson(s) for name, s in json.loads(log["schemas"][0].as_py()).items()}
-
-
-def _read_dir(spark: SparkSession, output_dir: str, name: str) -> DataFrame:
-    """Data directory ``name``, read pinned to the schema the newest
-    snapshot recorded for it: nothing is inferred from parquet footers.
-    Refuses a warehouse of another layout version."""
-    _refuse_other_layout(output_dir, _layout_version(output_dir))
-    schema = _recorded_schemas(output_dir).get(name)
+def _read_dir(spark: SparkSession, output_dir: str, name: str, head: dict) -> DataFrame:
+    """Data directory ``name``, read pinned to the schema the snapshot
+    record ``head`` (``_head``) recorded for it: nothing is inferred
+    from parquet footers."""
+    schema = head["schemas"].get(name)
     if schema is None:
         raise EngineValueError(
             f"warehouse at {output_dir!r} has no committed snapshot recording "
@@ -466,11 +480,11 @@ def _layout_schemas(t1m: DataFrame, keys: list[str]) -> dict[str, StructType]:
     return schemas
 
 
-def _check_schemas(output_dir: str, schemas: dict[str, StructType]) -> None:
+def _check_schemas(output_dir: str, head: dict, schemas: dict[str, StructType]) -> None:
     """Refuse a commit whose directory schemas differ (in a column's
     name, type or position; nullability aside) from the ones the
-    warehouse recorded."""
-    for name, recorded in _recorded_schemas(output_dir).items():
+    snapshot record ``head`` recorded."""
+    for name, recorded in head["schemas"].items():
         ours = schemas[name]
         if ours.simpleString() != recorded.simpleString():
             raise EngineValueError(
@@ -560,25 +574,39 @@ def _commit_delta(
     next run ignores and overwrites nothing of. With ``merge`` each data
     directory rewrites only the ``<key0>=<v>`` partitions the delta
     touches (``_merge_write``), collected to the driver (a few per
-    commit, as the first key column should have few values). A derived
-    directory replaces the touched keys' rows wholly unless
-    ``apply_retention`` has trimmed ``tier=1m``; then it merges on
-    (keys, bucket) or (keys, chunk_start), keeping the rows older than
-    the retained 1m history. ``t1m_delta`` should be cached: the
-    partition probe, the tier write and the caller's marks all read it.
-    The kernel parameter defaults are ``run_pipeline``'s."""
+    commit, as the first key column should have few values).
+
+    With ``merge`` the record carries the head's retention ``horizons``
+    forward, and the delta's rows before the 1m horizon are dropped: no
+    commit brings back a trimmed row, and a key whose only delta rows
+    lie below the horizon is not touched. A touched key is re-derived
+    from its retained history only; an untouched key keeps its files.
+    A derived directory replaces the touched keys' rows wholly while
+    the log records no 1m horizon; with one, it merges on (keys, bucket)
+    or (keys, chunk_start), keeping the rows older than the retained 1m
+    history. The horizon order (see ``apply_chunk_retention``) keeps the
+    re-derivation above every coarser tier's own horizon. A build
+    (``merge=False``) rewrites everything and records no horizon.
+    ``t1m_delta`` should be cached: the partition probe, the tier write
+    and the caller's marks all read it. The kernel parameter defaults
+    are ``run_pipeline``'s."""
     keys = list(key_cols)
     schemas = _layout_schemas(t1m_delta, keys)
-    _check_schemas(output_dir, schemas)
+    head = _head(output_dir)
+    _check_schemas(output_dir, head, schemas)
+    horizons = head["horizons"] if merge else {}
+    delta = t1m_delta
+    if "1m" in horizons:
+        delta = delta.where(F.col("bucket") >= F.lit(horizons["1m"]))
     tier1m_path = os.path.join(output_dir, "tier=1m")
     # every directory is partitioned by the first key column, and a merge
     # rewrites only the partitions the delta touches
-    parts = [r[0] for r in t1m_delta.select(keys[0]).distinct().collect()] if merge else None
+    parts = [r[0] for r in delta.select(keys[0]).distinct().collect()] if merge else None
     # observed rows are the persisted source of truth; written FIRST so
     # every derived product below can re-derive from the merged tier
     # and a crash mid-run is heal-by-rerun
-    _merge_write(spark, t1m_delta, tier1m_path, keys + ["bucket"], parts)
-    t1m = t1m_delta
+    _merge_write(spark, delta, tier1m_path, keys + ["bucket"], parts)
+    t1m = delta
     if merge:
         # Derived products (cascades, fills, chunks) must never be built
         # from the delta alone: a delta-only 1h boundary row or open
@@ -586,9 +614,9 @@ def _commit_delta(
         # merged tier's touched partitions, restricted to the keys the
         # delta touched — work scales with the affected keys' history,
         # not the table.
-        t1m = spark.read.schema(t1m_delta.schema).parquet(tier1m_path).where(_in_partitions(keys[0], parts))
+        t1m = spark.read.schema(delta.schema).parquet(tier1m_path).where(_in_partitions(keys[0], parts))
         if len(keys) > 1:
-            t1m = t1m.join(F.broadcast(t1m_delta.select(*keys).distinct()), keys, "left_semi")
+            t1m = t1m.join(F.broadcast(delta.select(*keys).distinct()), keys, "left_semi")
         t1m = t1m.cache()
 
     result = _derive(
@@ -602,7 +630,7 @@ def _commit_delta(
     # a touched key is re-derived from its whole 1m history, which covers
     # every derived row of it unless retention trimmed that history: then
     # the rows it no longer yields are kept by a (key, bucket) merge
-    trimmed = os.path.exists(_retention_mark(output_dir, "tier=1m"))
+    trimmed = "1m" in horizons
     for tier in TIER_CHAIN[1:]:
         merge_keys = keys + ["bucket"] if trimmed else keys
         _merge_write(spark, result.tiers[tier], os.path.join(output_dir, f"tier={tier}"), merge_keys, parts)
@@ -614,7 +642,7 @@ def _commit_delta(
     for name, table in result._tables.items():
         write_parquet_file(table, snapshot_file(output_dir, name, result.snapshot_id))
     write_high_water(marks, output_dir, snapshot_id=result.snapshot_id)
-    _commit_snapshot(spark, output_dir, result.counters, merge, result.snapshot_id, anchor_id, schemas)
+    _commit_snapshot(spark, output_dir, result.counters, merge, result.snapshot_id, anchor_id, schemas, horizons)
     result.delta = t1m_delta
     return result
 
@@ -702,12 +730,6 @@ def _parquet_rows(path: str) -> int:
     )
 
 
-def _retention_mark(output_dir: str, name: str) -> str:
-    """The file recording that ``apply_retention`` trimmed directory
-    ``name`` (it holds the newest ``keep_after``)."""
-    return os.path.join(output_dir, "_retention", name)
-
-
 def _retain(df: DataFrame, path: str) -> int:
     """Replace the table at ``path`` with ``df``, the rows it retains,
     keeping the partition column its ``<col>=<v>`` directories name:
@@ -727,25 +749,6 @@ def _retain(df: DataFrame, path: str) -> int:
     return kept
 
 
-def apply_retention(spark: SparkSession, output_dir: str, tier: str, keep_after) -> int:
-    """Retention: rewrite a tier keeping only buckets >= ``keep_after``.
-
-    On Iceberg this is a metadata-only partition drop; on parquet we
-    rewrite the tier directory, keeping its partitioning, with the
-    crash-safe partition swap (``_retain``). The trim is recorded under
-    ``_retention/`` before any row goes: a later commit then keeps the
-    derived rows that ``tier=1m`` no longer yields. Returns rows
-    retained."""
-    name = f"tier={tier}"
-    path = os.path.join(output_dir, name)
-    _heal_dir(path)
-    df = _read_dir(spark, output_dir, name)
-    os.makedirs(os.path.join(output_dir, "_retention"), exist_ok=True)
-    with open(_retention_mark(output_dir, name), "w") as fh:
-        fh.write(str(keep_after))
-    return _retain(df.where(F.col("bucket") >= F.lit(keep_after)), path)
-
-
 def scan_chunks(
     spark: SparkSession,
     output_dir: str,
@@ -753,17 +756,16 @@ def scan_chunks(
     key_cols: list[str],
     start=None,
     end=None,
-    value_col: str = "avg_value",
 ) -> DataFrame:
     """Read a tier back from its Gorilla chunks for a time range,
     decoding ONLY the chunks whose calendar period intersects
     [start, end) — the chunk_start predicate prunes at the parquet scan
     (row-group min/max stats), so a narrow time window over years of
     history touches a handful of chunk rows per key. Bucket-level edges
-    are trimmed after decode. Returns (keys…, bucket, value)."""
+    are trimmed after decode. Returns (keys…, bucket, avg_value)."""
     from ..operators.encode import _CHUNK_UNIT, decode_tier
 
-    df = _read_dir(spark, output_dir, f"chunks_tier={tier}")
+    df = _read_dir(spark, output_dir, f"chunks_tier={tier}", _head(output_dir))
     if start is not None:
         # a chunk starting before `start` may still contain it: include
         # the whole boundary period, trim per-bucket after decode
@@ -772,7 +774,7 @@ def scan_chunks(
         )
     if end is not None:
         df = df.where(F.col("chunk_start") < F.lit(end))
-    out = decode_tier(df, list(key_cols), "bucket", value_col)
+    out = decode_tier(df, list(key_cols), "bucket", "avg_value")
     if start is not None:
         out = out.where(F.col("bucket") >= F.lit(start))
     if end is not None:
@@ -786,15 +788,28 @@ def apply_chunk_retention(
     tier: str,
     key_cols: list[str],
     keep_after,
-    value_col: str = "avg_value",
 ) -> int:
-    """Retention over the ENCODED chunks of a tier.
+    """Retention, the one entry point: drop every bucket of ``tier``
+    before ``keep_after``, from its observed rows (``tier=<t>``) and its
+    encoded chunks (``chunks_tier=<t>``) together.
+
+    Like an Iceberg delete it appends one snapshot, carrying the head's
+    schemas and marks unchanged and ``tier``'s new horizon (a horizon
+    only moves forward). The record is written before any row goes, so
+    no crash instant leaves rows trimmed while the log records no
+    horizon, and re-running the same retention completes a crashed one.
+    Later commits carry the horizon forward and drop delta rows before
+    the 1m horizon (``_commit_delta``). Horizon order: a coarser tier
+    may not keep less history than a finer one (``horizon[1d] <=
+    horizon[1h] <= horizon[1m]``, an absent horizon counting as -inf);
+    a retention that would break it raises ``EngineValueError`` and
+    changes nothing.
 
     Chunks whose whole calendar period precedes ``keep_after`` drop by
     the ``chunk_start`` predicate alone — no payload is ever decoded
     (the Iceberg partition-drop analogue); only the single boundary
     chunk per key is decoded, filtered to ``bucket >= keep_after``, and
-    re-encoded. Work is O(keys), not O(points). The directory is
+    re-encoded. Work is O(keys), not O(points). Each directory is
     rewritten with the crash-safe partition swap (``_retain``) and keeps
     its partition column, whatever the order of ``key_cols``. Returns
     chunks retained.
@@ -802,22 +817,36 @@ def apply_chunk_retention(
     from ..operators.encode import _CHUNK_UNIT, decode_tier, encode_tier
 
     keys = list(key_cols)
-    name = f"chunks_tier={tier}"
-    path = os.path.join(output_dir, name)
-    _heal_dir(path)
-    df = _read_dir(spark, output_dir, name)
-    boundary = F.date_trunc(_CHUNK_UNIT[tier], F.lit(keep_after))
-    whole = df.where(F.col("chunk_start") >= F.lit(keep_after))
-    partial = df.where(
-        (F.col("chunk_start") == boundary) & (F.col("chunk_start") < F.lit(keep_after))
-    )
+    horizon = datetime.fromisoformat(str(keep_after)).isoformat(sep=" ")
+    head = _head(output_dir)
+    horizons = dict(head["horizons"])
+    horizons[tier] = max(horizon, horizons.get(tier, horizon))
+    for fine, coarse in zip(TIER_CHAIN, TIER_CHAIN[1:]):
+        if horizons.get(coarse, "") > horizons.get(fine, ""):
+            raise EngineValueError(
+                f"retention would keep less history in tier={coarse} (from {horizons[coarse]}) than in "
+                f"tier={fine} (from {horizons.get(fine, 'its start')}); trim tier={fine} that far first."
+            )
+    paths = [os.path.join(output_dir, f"{d}={tier}") for d in ("tier", "chunks_tier")]
+    for path in paths:
+        _heal_dir(path)
+    rows, chunks = (_read_dir(spark, output_dir, os.path.basename(path), head) for path in paths)
+
+    snapshot_id = _new_snapshot_id()
+    marks = snapshot_file(output_dir, "_hw", head["snapshot_id"])
+    if os.path.exists(marks):
+        write_parquet_file(pq.read_table(marks), snapshot_file(output_dir, "_hw", snapshot_id))
+    _commit_snapshot(spark, output_dir, {}, False, snapshot_id, head["snapshot_id"], head["schemas"], horizons)
+
+    _retain(rows.where(F.col("bucket") >= F.lit(horizon)), paths[0])
+    boundary = F.date_trunc(_CHUNK_UNIT[tier], F.lit(horizon))
+    whole = chunks.where(F.col("chunk_start") >= F.lit(horizon))
+    partial = chunks.where((F.col("chunk_start") == boundary) & (F.col("chunk_start") < F.lit(horizon)))
     reencoded = encode_tier(
-        decode_tier(partial, keys, "bucket", value_col).where(
-            F.col("bucket") >= F.lit(keep_after)
-        ),
+        decode_tier(partial, keys, "bucket", "avg_value").where(F.col("bucket") >= F.lit(horizon)),
         keys,
         "bucket",
-        value_col,
+        "avg_value",
         tier,
     )
-    return _retain(whole.unionByName(reencoded), path)
+    return _retain(whole.unionByName(reencoded), paths[1])

@@ -136,7 +136,7 @@ def test_apply_chunk_retention_boundary_reencode(spark, tmp_path):
     cutoff, equal the tier rows at/after it bit-exactly at observed
     buckets, and hold no NaN anywhere else."""
     from datafiller_spark.operators import decode_tier
-    from datafiller_spark.plans import apply_chunk_retention, apply_retention, run_pipeline
+    from datafiller_spark.plans import apply_chunk_retention, run_pipeline
     from datafiller_spark.sources import synth_sequences
 
     seqs = synth_sequences(spark, 3000, mean_tokens=16, span_minutes=3 * 1440).cache()
@@ -153,7 +153,6 @@ def test_apply_chunk_retention_boundary_reencode(spark, tmp_path):
     chunks = spark.read.parquet(os.path.join(out, "chunks_tier=1m"))
     assert chunks.agg(F.min("chunk_start")).first()[0] == datetime.datetime(2024, 1, 2)
 
-    apply_retention(spark, out, "1m", keep_after)
     tier = spark.read.parquet(os.path.join(out, "tier=1m"))
     decoded = {
         (r.source, r.bucket): r.avg_value

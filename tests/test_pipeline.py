@@ -1,6 +1,7 @@
 """End-to-end pipeline: salting equivalence, checkpoint/resume, retention."""
 
 import datetime
+import json
 import os
 import shutil
 
@@ -10,8 +11,14 @@ from pyspark.sql import functions as F
 
 from datafiller_spark.exceptions import EngineValueError
 from datafiller_spark.operators import rollup
-from datafiller_spark.plans import latest_snapshot_id, read_high_water, read_snapshots, run_pipeline
-from datafiller_spark.plans.pipeline import apply_retention, salted_rollup
+from datafiller_spark.plans import (
+    apply_chunk_retention,
+    latest_snapshot_id,
+    read_high_water,
+    read_snapshots,
+    run_pipeline,
+)
+from datafiller_spark.plans.pipeline import salted_rollup
 from datafiller_spark.sources import synth_sequences
 
 
@@ -164,8 +171,9 @@ def test_retention(spark, seqs, tmp_path):
     path = os.path.join(out, "tier=1m")
     before = spark.read.parquet(path).count()
     keep_after = datetime.datetime(2024, 1, 1, 3, 0)
-    kept = apply_retention(spark, out, "1m", keep_after)
-    assert 0 < kept < before
+    kept = apply_chunk_retention(spark, out, "1m", ["source"], keep_after)
+    assert 0 < spark.read.parquet(path).count() < before
+    assert kept == spark.read.parquet(os.path.join(out, "chunks_tier=1m")).count() > 0
     assert spark.read.parquet(path).agg(F.min("bucket")).first()[0] >= keep_after
 
 
@@ -278,7 +286,6 @@ def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
     commits while a resume runs moves the head to a snapshot with new
     marks; a resume pinned to the earlier snapshot must read THAT
     snapshot's marks, so the raced run's output equals the un-raced one."""
-    from datafiller_spark.plans import read_snapshot
     from datafiller_spark.plans.pipeline import _commit_delta
 
     full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=180).cache()
@@ -310,7 +317,8 @@ def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
 
     # the commit records which snapshot the resume anchored to, and
     # chains onto the racing commit
-    snap = read_snapshot(spark, out, res.snapshot_id)
+    snap = read_snapshots(spark, out).first()
+    assert snap.snapshot_id == res.snapshot_id
     assert snap.anchor_id == s1 and snap.resume
     assert snap.parent_id == raced.snapshot_id
 
@@ -318,8 +326,6 @@ def test_snapshot_pinned_resume_ignores_racing_head_write(spark, tmp_path):
 def test_snapshot_log_chains_commits(spark, tmp_path):
     """Every committed run appends a snapshot whose parent is the prior
     head — the Iceberg-style audit chain a resume anchors to."""
-    import json
-
     from datafiller_spark.plans.pipeline import read_snapshots
 
     full = synth_sequences(spark, 800, mean_tokens=16, span_minutes=120).cache()
@@ -333,7 +339,7 @@ def test_snapshot_log_chains_commits(spark, tmp_path):
     assert dict(log.dtypes) == {
         "snapshot_id": "string", "parent_id": "string", "anchor_id": "string",
         "resume": "boolean", "committed_at": "double", "counters": "string",
-        "schemas": "string",
+        "schemas": "string", "horizons": "string",
     }
     snaps = log.collect()
     assert len(snaps) == 2
@@ -365,7 +371,7 @@ def test_retention_then_resume_does_not_resurrect_dropped_data(spark, tmp_path):
     out = str(tmp_path / "retres")
     run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
     keep_after = datetime.datetime(2024, 1, 1, 1, 0)
-    apply_retention(spark, out, "1m", keep_after)
+    apply_chunk_retention(spark, out, "1m", ["source"], keep_after)
 
     run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
 
@@ -382,22 +388,24 @@ def test_retention_then_resume_does_not_resurrect_dropped_data(spark, tmp_path):
 
 
 def test_tier_retention_then_resume_keeps_coarser_history(spark, tmp_path):
-    """Retention on ``tier=1m`` alone keeps the coarser tiers and every
-    chunk directory longer, and a resume must not take that back: it
-    re-derives the touched keys from the retained 1m rows only, so the
-    derived rows older than the 1m horizon survive by a (key, bucket)
-    or (key, chunk_start) merge instead of being replaced with the keys'
-    shorter re-derivation."""
-    full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=3 * 1440).cache()
+    """Retention on tier 1m trims ``tier=1m`` and ``chunks_tier=1m`` but
+    keeps the coarser tiers and their chunk directories longer, and a
+    resume must not take that back: it re-derives the touched keys from
+    the retained 1m rows only, so the derived rows older than the 1m
+    horizon survive by a (key, bucket) or (key, chunk_start) merge
+    instead of being replaced with the keys' shorter re-derivation."""
+    full = synth_sequences(spark, 8640, mean_tokens=16, span_minutes=3 * 1440).cache()
     day = datetime.datetime(2024, 1, 1)
     first = full.where(F.col("event_ts") < F.lit(day + datetime.timedelta(days=2, hours=12)))
     out = str(tmp_path / "wh")
     run_pipeline(spark, first, ["source"], "event_ts", "n_tok", output_dir=out)
     keep_after = day + datetime.timedelta(days=1, hours=7)
-    apply_retention(spark, out, "1m", keep_after)
+    apply_chunk_retention(spark, out, "1m", ["source"], keep_after)
+    # the resume runs over retained 1m rows: the horizon left some
+    assert spark.read.parquet(os.path.join(out, "tier=1m")).agg(F.min("bucket")).first()[0] == keep_after
 
-    derived = {"tier=1h": "bucket", "tier=1d": "bucket", "chunks_tier=1m": "chunk_start",
-               "chunks_tier=1h": "chunk_start", "chunks_tier=1d": "chunk_start"}
+    derived = {"tier=1h": "bucket", "tier=1d": "bucket", "chunks_tier=1h": "chunk_start",
+               "chunks_tier=1d": "chunk_start"}
 
     def older(name):
         """(min bucket or chunk_start, the (key, bucket or chunk_start)
@@ -408,10 +416,141 @@ def test_tier_retention_then_resume_keeps_coarser_history(spark, tmp_path):
         return df.agg(F.min(col)).first()[0], sorted(map(tuple, rows))
 
     before = {name: older(name) for name in derived}
-    assert before["tier=1d"][0] == day and before["tier=1h"][1] and before["chunks_tier=1m"][1]
+    assert before["tier=1d"][0] == day and before["tier=1h"][1] and before["chunks_tier=1h"][1]
     run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
     for name in derived:
         assert older(name) == before[name], name
+
+
+#: The retention tests' input: 3000 documents over three days, so the
+#: 1m tier holds rows past the horizon; built to day 3 12:00 (all of it)
+#: and trimmed on tier 1m at day 2 07:00.
+HORIZON = datetime.datetime(2024, 1, 2, 7, 0)
+
+
+@pytest.fixture(scope="module")
+def retained(spark, tmp_path_factory):
+    """(full raw table, a warehouse built from it, the same warehouse
+    after ``apply_chunk_retention`` on tier 1m at ``HORIZON``)."""
+    full = synth_sequences(spark, 3000, mean_tokens=16, span_minutes=3 * 1440).cache()
+    base = tmp_path_factory.mktemp("retained")
+    built, trimmed = str(base / "built"), str(base / "trimmed")
+    cut = F.col("event_ts") < F.lit(datetime.datetime(2024, 1, 3, 12, 0))
+    run_pipeline(spark, full.where(cut), ["source"], "event_ts", "n_tok", output_dir=built)
+    shutil.copytree(built, trimmed)
+    apply_chunk_retention(spark, trimmed, "1m", ["source"], HORIZON)
+    return full, built, trimmed
+
+
+def test_resume_after_chunk_retention_keeps_it(spark, tmp_path, retained):
+    """A resume after retention on tier 1m does not bring the trimmed
+    days back: ``chunks_tier=1m`` still starts on the horizon's day and
+    ``tier=1m`` holds no bucket before the horizon."""
+    full, _, trimmed = retained
+    out = str(tmp_path / "wh")
+    shutil.copytree(trimmed, out)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
+    chunks = spark.read.parquet(os.path.join(out, "chunks_tier=1m"))
+    assert chunks.agg(F.min("chunk_start")).first()[0] == datetime.datetime(2024, 1, 2)
+    assert spark.read.parquet(os.path.join(out, "tier=1m")).agg(F.min("bucket")).first()[0] == HORIZON
+
+
+def test_retention_appends_one_snapshot_with_its_horizon(spark, tmp_path, retained):
+    """Retention is one more snapshot: it records the horizon and the
+    head's schemas, and carries the head's marks, so a resume anchored
+    to it reads the same marks, and re-aggregates as many 1m rows, as
+    one anchored to the snapshot before it."""
+    full, _, trimmed = retained
+    head, build = read_snapshots(spark, trimmed).collect()
+    assert head.parent_id == build.snapshot_id and not head.resume
+    assert json.loads(head.horizons) == {"1m": str(HORIZON)} and json.loads(build.horizons) == {}
+    assert head.schemas == build.schemas
+
+    def marks(snapshot_id):
+        return sorted(map(tuple, read_high_water(spark, trimmed, snapshot_id).collect()))
+
+    assert marks(head.snapshot_id) == marks(build.snapshot_id)
+    deltas = []
+    for snap in (head, build):
+        out = str(tmp_path / snap.snapshot_id)
+        shutil.copytree(trimmed, out)
+        res = run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True,
+                           pin_snapshot=snap.snapshot_id)
+        deltas.append(res.delta.count())
+        # the resume carries the horizon forward
+        assert json.loads(read_snapshots(spark, out).first().horizons) == {"1m": str(HORIZON)}
+    assert deltas[0] == deltas[1] > 0
+
+
+def test_resume_after_retention_fills_touched_keys_from_retained_rows(spark, tmp_path, retained):
+    """The fill contract after retention: a key a resume touches is
+    re-derived from its retained history only — its 1m chunks equal a
+    single-shot build over its rows past the horizon — and every
+    untouched key keeps its files in every data directory."""
+    full, _, trimmed = retained
+    out, ref = str(tmp_path / "wh"), str(tmp_path / "ref")
+    shutil.copytree(trimmed, out)
+    dirs = [f"{d}={t}" for d in ("tier", "chunks_tier") for t in ("1m", "1h", "1d")]
+    before = {d: partition_files(os.path.join(out, d)) for d in dirs}
+    web = F.col("source") == "web"
+    run_pipeline(spark, full.where(web), ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
+    for d in dirs:
+        after = partition_files(os.path.join(out, d))
+        assert set(after) == set(before[d]) and len(after) > 10, d
+        for part, files in after.items():
+            assert (files == before[d][part]) == (part != "source=web"), (d, part)
+
+    run_pipeline(spark, full.where(web & (F.col("event_ts") >= F.lit(HORIZON))), ["source"], "event_ts", "n_tok",
+                 output_dir=ref)
+
+    def chunks(path):
+        rows = spark.read.parquet(os.path.join(path, "chunks_tier=1m")).where(web).collect()
+        return sorted((r.chunk_start, r.n_points, bytes(r.payload)) for r in rows)
+
+    assert chunks(out) == chunks(ref) and chunks(ref)
+
+
+def test_retention_refuses_a_coarser_horizon_past_a_finer_one(spark, tmp_path, retained):
+    """A coarser tier may not keep less history than a finer one:
+    trimming tier 1h past the 1m horizon, or at all while tier 1m keeps
+    everything, is refused and changes no file."""
+    _, built, trimmed = retained
+    for src, keep_after in ((trimmed, HORIZON + datetime.timedelta(hours=1)), (built, HORIZON)):
+        out = str(tmp_path / os.path.basename(src))
+        shutil.copytree(src, out)
+        before = tree_digest(out)
+        with pytest.raises(EngineValueError, match="tier=1h"):
+            apply_chunk_retention(spark, out, "1h", ["source"], keep_after)
+        assert tree_digest(out) == before
+    # at the 1m horizon the order holds
+    assert apply_chunk_retention(spark, str(tmp_path / "trimmed"), "1h", ["source"], HORIZON) > 0
+
+
+def test_resume_after_retention_leaves_keys_marked_below_the_horizon(spark, tmp_path):
+    """A key whose high-water mark lies before the horizon is not touched
+    by a resume: its open mark bucket is re-read from raw but dropped at
+    the commit, so ``tier=1m`` gains no row below the horizon and the
+    key's ``tier=1h`` rows of day 1 keep their values."""
+    full = synth_sequences(spark, 1500, mean_tokens=16, span_minutes=3 * 1440).cache()
+    out = str(tmp_path / "wh")
+    cut = F.col("event_ts") < F.lit(datetime.datetime(2024, 1, 3, 12, 0))
+    run_pipeline(spark, full.where(cut), ["source"], "event_ts", "n_tok", output_dir=out)
+    assert max(r.max_bucket for r in head_marks(spark, out).collect()) < HORIZON
+    tier1m = os.path.join(out, "tier=1m")
+    schema = spark.read.parquet(tier1m).schema  # the trim leaves no file to infer it from
+    apply_chunk_retention(spark, out, "1m", ["source"], HORIZON)
+
+    def day1_1h():
+        rows = spark.read.parquet(os.path.join(out, "tier=1h")).where(
+            F.col("bucket") < F.lit(datetime.datetime(2024, 1, 2))
+        ).select("source", "bucket", "n_points", "sum_value", "min_value", "max_value").collect()
+        return sorted(map(tuple, rows))
+
+    before = day1_1h()
+    assert before
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
+    assert day1_1h() == before
+    assert spark.read.schema(schema).parquet(tier1m).where(F.col("bucket") < F.lit(HORIZON)).count() == 0
 
 
 def test_chunk_retention_keeps_partition_column_for_any_key_order(spark, tmp_path):
@@ -419,7 +558,7 @@ def test_chunk_retention_keeps_partition_column_for_any_key_order(spark, tmp_pat
     column, whatever order the caller lists the key columns in: the
     same retention with the keys reversed leaves the same partitions and
     the same chunks, and the table still reads."""
-    from datafiller_spark.plans import apply_chunk_retention, scan_chunks
+    from datafiller_spark.plans import scan_chunks
 
     keys = ["source", "shard"]
     seq = synth_sequences(spark, 1000, mean_tokens=16, span_minutes=240).withColumn(
@@ -446,20 +585,16 @@ def test_retention_keeps_key_partitions(spark, seqs, tmp_path):
     """Retention rewrites a directory partition by partition and keeps
     its ``<key0>=<v>`` layout: every partition with retained rows
     survives, and no file lands flat at the table's root."""
-    from datafiller_spark.plans import apply_chunk_retention
-
     out = str(tmp_path / "retpart")
     run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
     keep_after = datetime.datetime(2024, 1, 1, 3, 0)
-    for name, retain in (
-        ("tier=1m", lambda: apply_retention(spark, out, "1m", keep_after)),
-        ("chunks_tier=1m", lambda: apply_chunk_retention(spark, out, "1m", ["source"], keep_after)),
-    ):
-        path = os.path.join(out, name)
-        before = set(partition_files(path))
-        assert len(before) > 10, name
-        retain()
-        assert set(partition_files(path)) == before, name
+    paths = [os.path.join(out, name) for name in ("tier=1m", "chunks_tier=1m")]
+    before = {path: set(partition_files(path)) for path in paths}
+    apply_chunk_retention(spark, out, "1m", ["source"], keep_after)
+    for path in paths:
+        name = os.path.basename(path)
+        assert len(before[path]) > 10, name
+        assert set(partition_files(path)) == before[path], name
         assert not [f for f in os.listdir(path) if f.endswith(".parquet")], name
         assert not os.path.exists(path + "__old") and not os.path.exists(path + "__merge_tmp"), name
 
@@ -583,7 +718,7 @@ def test_readers_refuse_a_warehouse_without_recorded_schemas(spark, seqs, tmp_pa
     """Range reads and retention pin the schema the snapshot log
     recorded; a warehouse whose log records none (an older layout, or no
     finished commit) is refused instead of read with an inferred one."""
-    from datafiller_spark.plans import apply_chunk_retention, scan_chunks
+    from datafiller_spark.plans import scan_chunks
 
     out = str(tmp_path / "noschema")
     run_pipeline(spark, seqs, ["source"], "event_ts", "n_tok", output_dir=out)
@@ -592,7 +727,6 @@ def test_readers_refuse_a_warehouse_without_recorded_schemas(spark, seqs, tmp_pa
     for read in (
         lambda: scan_chunks(spark, out, "1m", ["source"]),
         lambda: apply_chunk_retention(spark, out, "1m", ["source"], keep_after),
-        lambda: apply_retention(spark, out, "1m", keep_after),
     ):
         with pytest.raises(EngineValueError, match="Rebuild the warehouse from raw"):
             read()
@@ -689,3 +823,68 @@ def test_crash_at_every_commit_step_heals_on_resume(spark, tmp_path, monkeypatch
             assert len(writes) == 1 and not any(os.path.isdir(os.path.join(out, name, part, f)) for f in files)
     log = read_snapshots(spark, out).collect()
     assert len(log) == 2 and log[0].parent_id == head and log[0].anchor_id == head
+
+
+#: Crash points of a retention on tier 1m: after its snapshot record,
+#: before any row goes ("record"); between the two renames of the first
+#: ``tier=1m`` partition it swaps ("tier=1m/1"); and between the
+#: ``tier=1m`` and ``chunks_tier=1m`` swaps ("tier=1m").
+RETENTION_CRASHES = ("record", "tier=1m/1", "tier=1m")
+CRASH_HORIZON = datetime.datetime(2024, 1, 1, 0, 45)
+
+
+@pytest.fixture(scope="module")
+def retention_ref(spark, crash_case, tmp_path_factory):
+    """The crash matrix's build after an uncrashed retention on tier 1m
+    at ``CRASH_HORIZON`` and a resume."""
+    full, built, _ = crash_case
+    ref = str(tmp_path_factory.mktemp("retention_ref") / "wh")
+    shutil.copytree(built, ref)
+    apply_chunk_retention(spark, ref, "1m", ["source"], CRASH_HORIZON)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=ref, resume=True)
+    return ref
+
+
+@pytest.mark.parametrize("crash_at", RETENTION_CRASHES)
+def test_crash_in_retention_heals_on_rerun(spark, tmp_path, monkeypatch, crash_case, retention_ref, crash_at):
+    """A retention that dies at any point has already recorded its
+    horizon, so no crash leaves ``tier=1m`` trimmed below a horizon the
+    log does not know; re-running the retention and then resuming ends
+    byte-equal to the uncrashed retention and resume."""
+    from datafiller_spark.plans import pipeline
+
+    full, built, _ = crash_case
+    out = str(tmp_path / "wh")
+    shutil.copytree(built, out)
+
+    class Crash(Exception):
+        pass
+
+    with monkeypatch.context() as m:
+        if crash_at == "tier=1m/1":
+            rename = os.rename
+
+            def crash_rename(src, dst):
+                rename(src, dst)
+                if f"{os.sep}tier=1m__" in src + dst:
+                    raise Crash
+
+            m.setattr(pipeline.os, "rename", crash_rename)
+        else:
+            retain, calls = pipeline._retain, []
+
+            def crash_retain(df, path):
+                calls.append(path)
+                if len(calls) == (1 if crash_at == "record" else 2):  # before the first or second swap
+                    raise Crash
+                return retain(df, path)
+
+            m.setattr(pipeline, "_retain", crash_retain)
+        with pytest.raises(Crash):
+            apply_chunk_retention(spark, out, "1m", ["source"], CRASH_HORIZON)
+    assert json.loads(read_snapshots(spark, out).first().horizons) == {"1m": str(CRASH_HORIZON)}
+
+    apply_chunk_retention(spark, out, "1m", ["source"], CRASH_HORIZON)
+    run_pipeline(spark, full, ["source"], "event_ts", "n_tok", output_dir=out, resume=True)
+    assert_same_warehouse(spark, out, retention_ref, ["source"])
+    assert not [n for n in os.listdir(out) if n.endswith(("__old", "__merge_tmp"))]
