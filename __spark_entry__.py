@@ -399,9 +399,9 @@ def q_simhash(spark, sf_dir):
 
 def q_dup_clusters(spark, sf_dir):
     """Connected components over the exact n-gram near-dup pairs → one
-    canonical doc per duplicate cluster (min-label propagation, one
-    shuffle per round). Oracle: DuckDB recursive-CTE transitive closure
-    over the same pair set."""
+    canonical doc per duplicate cluster (per-task spanning forests, then
+    one driver union-find over them). Oracle: DuckDB recursive-CTE
+    transitive closure over the same pair set."""
     from datafiller_spark.operators import dup_clusters
 
     docs = load_table(spark, sf_dir, "documents")

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..exceptions import EngineError
 from ..spread import spread_input
 from ._series import _sorted_runs
 from .banding import banded_pairs
@@ -54,6 +55,13 @@ if sys.byteorder != "little":  # pragma: no cover - no big-endian CI host
 # block is 8 MB and the count holds a few at once, so a task's memory
 # does not grow with the square of a posting list's length
 _PAIR_BLOCK = 1 << 20
+
+# forest edges dup_clusters' driver union-find takes in one collect (a
+# forest has about one edge per node). Its peak is about 160 B per node
+# for bigint ids — the collected columns, the factorized codes as Python
+# ints and the parent list; measured over 1M nodes — and string ids add
+# their own bytes, so the budget caps the driver step near 1 GB
+_FOREST_BUDGET = 5_000_000
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -423,133 +431,79 @@ def minhash_lsh_pairs(
     return out
 
 
-def dup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    driver_threshold: int = 1_000_000,
-) -> DataFrame:
+def _components(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Union-find over the edges ``(a[i], b[i])``: every distinct id once,
+    ascending, with the least id of its component and the component's
+    size. Ids are factorized to sorted codes and unions keep the lesser
+    root, so a root IS its component's least id — numeric order for
+    ints, code-point order (= Spark's UTF-8 byte order) for strings."""
+    codes, nodes = pd.factorize(np.concatenate([a, b]), sort=True)
+    parent = list(range(len(nodes)))
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for x, y in zip(codes[: len(a)].tolist(), codes[len(a) :].tolist()):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    roots = np.array([find(x) for x in range(len(nodes))], dtype=np.int64)
+    return nodes, nodes[roots], np.bincount(roots)[roots]
+
+
+def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Connected components over near-duplicate PAIRS → one canonical id
     per duplicate cluster (the "keep one copy per cluster" step every
     dedup pipeline ends with; pairs alone under-delete when dups chain
     A~B~C without A~C).
 
-    Hybrid by edge count — the standard shape for this op:
+    One plan, local contraction first (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014):
 
-    - ≤ ``driver_threshold`` pairs: union-find on the driver. Verified
-      near-dup pair sets are tiny relative to the corpus, and the
-      distributed loop's ~4 jobs/round of pure scheduling overhead
-      dwarf milliseconds of union-find (measured 20.7 s → sub-second
-      on the sf0.1 query's few hundred edges). The edges arrive via
-      Arrow (``toPandas``), two plain columns — at the 1M default
-      that's ~16 MB for long ids (~2×8 B/edge; strings cost their
-      bytes + ~50 B object overhead each), plus the union-find dict at
-      ~100 B/node. Multi-GB py4j Row lists are not possible on this
-      path by default.
-    - above it: min-label propagation with pointer jumping — each round
-      every node takes the min of its neighbors' labels and then
-      shortcuts through its label's own label, so labels race down long
-      paths exponentially: O(log diameter) rounds, two shuffles each.
-      Each round is ``localCheckpoint``-ed so the plan doesn't grow.
+    1. each task runs ``_components`` on its own edges and emits one
+       ``(node, root)`` edge per non-root node — a spanning forest of
+       at most its node count − 1 edges with the task's connectivity;
+    2. the driver collects every task's forest through Arrow and runs
+       the same union-find over it. ``limit(_FOREST_BUDGET + 1)``
+       decides the size and feeds the collect in one job; past the
+       budget the call raises ``EngineError``.
 
-    Both paths are deterministic (canonical id = cluster minimum) and
-    produce identical output (cross-path equality is pinned in
-    tests/test_curation.py; the driver query stays under the DuckDB
-    recursive-CTE value oracle either way).
+    A pair with a NULL end names no document and is dropped in Spark,
+    before the forest step (which also keeps bigint ids int64 through
+    Arrow). A self-pair ``(x, x)`` makes ``x`` a singleton cluster.
 
-    Output: (doc_id, canonical_id, cluster_size) for every node that
-    appears in ``pairs``.
+    Output: (doc_id, canonical_id = the cluster's least id,
+    cluster_size) for every id in the non-null pairs; ``doc_id`` and
+    ``canonical_id`` have ``id_a``'s type.
     """
-    collected = None
-    if driver_threshold:
-        # ONE materialization decides the path AND feeds it: limit+1
-        # rows prove over/under threshold without a separate count job
-        # (which would recompute the whole upstream pairs pipeline).
-        # Arrow-collected into two plain columns — never py4j Rows.
-        pdf = pairs.select(id_a, id_b).limit(driver_threshold + 1).toPandas()
-        if len(pdf) <= driver_threshold:
-            collected = (pdf[id_a].to_numpy(), pdf[id_b].to_numpy())
-        del pdf
-    if collected is not None:
-        spark = pairs.sparkSession
-        parent: dict = {}
+    id_type = pairs.schema[id_a].dataType.simpleString()
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
+    def forest(batches):
+        frames = list(batches)
+        if frames:
+            pdf = pd.concat(frames)
+            nodes, roots, sizes = _components(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+            # a singleton (self-pair only) keeps its (x, x) edge
+            tree = (nodes != roots) | (sizes == 1)
+            yield pd.DataFrame({"a": nodes[tree], "b": roots[tree]})
 
-        for a, b in zip(*collected):
-            a, b = a.item() if hasattr(a, "item") else a, b.item() if hasattr(b, "item") else b
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN id so the root IS the canonical id
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        roots = {x: find(x) for x in parent}
-        sizes: dict = {}
-        for root in roots.values():
-            sizes[root] = sizes.get(root, 0) + 1
-        rows = [(x, roots[x], sizes[roots[x]]) for x in roots]
-        id_type = pairs.schema[id_a].dataType.simpleString()
-        return spark.createDataFrame(
-            rows, f"doc_id {id_type}, canonical_id {id_type}, cluster_size long"
+    edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).dropna()
+    forests = edges.mapInPandas(forest, f"a {id_type}, b {id_type}")
+    pdf = forests.limit(_FOREST_BUDGET + 1).toPandas()
+    if len(pdf) > _FOREST_BUDGET:
+        raise EngineError(
+            f"dup_clusters: the per-task spanning forests hold more than "
+            f"{_FOREST_BUDGET} edges (_FOREST_BUDGET), past the driver's union-find budget"
         )
-
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
-        edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist()
-    )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    labels = labels.localCheckpoint()
-    for _ in range(max_iter):
-        prop = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        cand = labels.join(prop, labels["id"] == prop["src"], "left").select(
-            labels["id"],
-            F.least(labels["label"], F.coalesce(prop["nbr_label"], labels["label"])).alias(
-                "label"
-            ),
-        )
-        # pointer jump: adopt my label's own (possibly smaller) label
-        mapping = cand.select(F.col("id").alias("__mid"), F.col("label").alias("__mlabel"))
-        new_labels = (
-            cand.join(mapping, cand["label"] == mapping["__mid"], "left")
-            .select(
-                cand["id"],
-                F.least(cand["label"], F.coalesce("__mlabel", cand["label"])).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
-    edges.unpersist()
-    sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "label").select(
-        F.col("id").alias("doc_id"),
-        F.col("label").alias("canonical_id"),
-        "cluster_size",
+    nodes, roots, sizes = _components(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+    out = pd.DataFrame({"doc_id": nodes, "canonical_id": roots, "cluster_size": sizes})
+    return pairs.sparkSession.createDataFrame(
+        out, f"doc_id {id_type}, canonical_id {id_type}, cluster_size long"
     )
 
 

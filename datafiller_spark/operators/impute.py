@@ -40,7 +40,6 @@ def model_gapfill(
     interpolate_gaps_less_than: int | None = None,
     n_nearest_features: int | float | None = None,
     add_time_features: bool = True,
-    use_gram: bool | None = None,
     regressor_factory=None,
 ) -> DataFrame:
     """Gap-fill ``value_cols`` per key group with the ridge kernel (or a
@@ -73,7 +72,6 @@ def model_gapfill(
             min_samples_train=min_samples_train,
             interpolate_gaps_less_than=interpolate_gaps_less_than,
             add_time_features=add_time_features,
-            use_gram=use_gram,
         )
         out = filled.rename_axis(bucket_col).reset_index()
         return out.assign(**key_values)
@@ -155,7 +153,6 @@ def cascade_gapfill_encode_all(
     lags: Sequence[int] = (1, 2, 3, -1, -2, -3),
     min_samples_train: int = 20,
     interpolate_gaps_less_than: int | None = None,
-    use_gram: bool | None = None,
 ) -> DataFrame:
     """One shuffle for the whole per-series tier chain.
 
@@ -180,7 +177,6 @@ def cascade_gapfill_encode_all(
         lags=[int(x) for x in lags],
         min_samples_train=min_samples_train,
         interpolate_gaps_less_than=interpolate_gaps_less_than,
-        use_gram=use_gram,
     )
 
     def fill_encode(tier: str, t: np.ndarray, n: np.ndarray, s_: np.ndarray) -> list[tuple]:

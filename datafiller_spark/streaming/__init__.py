@@ -1,5 +1,4 @@
-from .stream import streaming_rollup, start_rollup_stream, start_tier_pipeline_stream
+from .stream import streaming_rollup, start_tier_pipeline_stream
 from .gap_detector import detect_gaps
 
-__all__ = ["streaming_rollup", "start_rollup_stream",
-    "start_tier_pipeline_stream", "detect_gaps"]
+__all__ = ["streaming_rollup", "start_tier_pipeline_stream", "detect_gaps"]

@@ -67,30 +67,6 @@ def streaming_rollup(
     )
 
 
-def start_rollup_stream(
-    stream: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    checkpoint_dir: str,
-    query_name: str = "tier_1m_stream",
-    watermark: str = "10 minutes",
-):
-    """Start the streaming 1m rollup into a complete-mode in-memory
-    table named ``query_name``, for inspection and tests. Persisting
-    the stream is ``start_tier_pipeline_stream``'s job: it commits
-    through the warehouse's one write path."""
-    return (
-        streaming_rollup(stream, key_cols, ts_col, value_col, watermark)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def start_tier_pipeline_stream(
     stream: DataFrame,
     key_cols: Sequence[str],

@@ -1,9 +1,11 @@
 """Corpus-curation operators: dup clusters, hash sampling, packing,
 chunk retention."""
 
+import collections
 import datetime
 import math
 import os
+import random
 
 import numpy as np
 import pytest
@@ -28,9 +30,9 @@ def test_dup_clusters_transitive_chain(spark):
 
 
 def test_dup_clusters_long_path_and_determinism(spark):
-    """A path graph is the worst case (pointer jumping keeps it to
-    O(log n) rounds); the result must be exact and identical across
-    runs/partitionings."""
+    """A path graph split over 7 tasks leaves each task's forest only
+    path fragments, which the driver's union-find must join; the result
+    must be exact and identical across runs/partitionings."""
     n = 40
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)], ["id_a", "id_b"])
     a = sorted(map(tuple, dup_clusters(pairs).collect()))
@@ -164,20 +166,84 @@ def test_apply_chunk_retention_boundary_reencode(spark, tmp_path):
     assert not any(math.isnan(v) for v in decoded.values())
 
 
-def test_dup_clusters_driver_and_distributed_paths_equal(spark):
-    """The hybrid's two paths (driver union-find vs distributed
-    pointer-jumping) must produce identical clusters."""
+def _reference_clusters(edges):
+    """A plain union-find: {(id, least id of its component, component size)}."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    roots = {x: find(x) for x in parent}
+    sizes = collections.Counter(roots.values())
+    return {(x, r, sizes[r]) for x, r in roots.items()}
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_dup_clusters_equals_python_union_find(spark, id_type):
+    """Many small components (self-pairs included) spread over several
+    tasks, whose forests the driver joins: equal to a plain union-find,
+    with string ids ordered as strings ("10" < "9"), also when each task
+    reads its edges in 7-row Arrow batches."""
+    rng = random.Random(17)
+    edges = [(i, i - i % 12 + rng.randrange(12)) for i in rng.sample(range(3000), 600)]
+    cases = [("a", "b"), ("b", "c"), ("d", "e"), ("x", "y"), ("y", "z"), ("x", "z")]
+    if id_type == "string":
+        edges = [(str(a), str(b)) for a, b in edges] + cases
+    else:
+        edges += [(10_000 + ord(a), 10_000 + ord(b)) for a, b in cases]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}").repartition(5)
+    want = _reference_clusters(edges)
+    assert len({r for _, r, _ in want}) > 100
+    got = set(map(tuple, dup_clusters(pairs).collect()))
+    assert got == want
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        assert set(map(tuple, dup_clusters(pairs).collect())) == want
+    finally:
+        spark.conf.set(key, prior)
+    if id_type == "string":
+        assert {("c", "a", 3), ("z", "x", 3), ("e", "d", 2)} <= got
+
+
+@pytest.mark.parametrize("id_type, ids", [("bigint", (1, 2, 5)), ("string", ("a", "b", "e"))])
+def test_dup_clusters_drops_pairs_with_a_null_end(spark, id_type, ids):
+    """A NULL names no document: its pair is dropped, so (y, NULL) adds
+    nothing to y's cluster and (NULL, z) leaves z out."""
+    x, y, z = ids
+    pairs = spark.createDataFrame([(x, y), (y, None), (None, z)], f"id_a {id_type}, id_b {id_type}")
+    assert sorted(map(tuple, dup_clusters(pairs).collect())) == [(x, x, 2), (y, x, 2)]
+    assert dup_clusters(pairs.where("id_a IS NULL")).collect() == []
+
+
+def test_dup_clusters_forest_budget_raises(spark, monkeypatch):
+    """Past the driver's budget of forest edges the call raises and
+    names the budget; at the budget it runs (a path of 10 edges leaves
+    10 forest edges however it is split)."""
+    from datafiller_spark.exceptions import EngineError
+    from datafiller_spark.operators import dedup
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(10)], "id_a bigint, id_b bigint")
+    monkeypatch.setattr(dedup, "_FOREST_BUDGET", 9)
+    with pytest.raises(EngineError, match="_FOREST_BUDGET"):
+        dup_clusters(pairs.repartition(3))
+    monkeypatch.setattr(dedup, "_FOREST_BUDGET", 10)
+    assert dup_clusters(pairs.repartition(3)).count() == 11
+
+
+def test_dup_clusters_ids_near_2_62_round_trip(spark):
+    """Bigint ids past float64's 53-bit mantissa come back exactly."""
+    big = 1 << 62
     pairs = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e"), ("x", "y"), ("y", "z"), ("x", "z")],
-        "id_a string, id_b string",
+        [(big + 1, big + 3), (big + 3, big - 1), (big + 7, big + 8)], "id_a bigint, id_b bigint"
     )
-    fast = {
-        (r.doc_id, r.canonical_id, r.cluster_size)
-        for r in dup_clusters(pairs).collect()
-    }
-    slow = {
-        (r.doc_id, r.canonical_id, r.cluster_size)
-        for r in dup_clusters(pairs, driver_threshold=0).collect()
-    }
-    assert fast == slow
-    assert ("c", "a", 3) in fast and ("z", "x", 3) in fast and ("e", "d", 2) in fast
+    assert sorted(map(tuple, dup_clusters(pairs).collect())) == [
+        (big - 1, big - 1, 3), (big + 1, big - 1, 3), (big + 3, big - 1, 3),
+        (big + 7, big + 7, 2), (big + 8, big + 7, 2),
+    ]

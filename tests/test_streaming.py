@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from datafiller_spark.operators import rollup
 from datafiller_spark.sources import load_table
-from datafiller_spark.streaming import start_rollup_stream
+from datafiller_spark.streaming import streaming_rollup
 
 
 def test_streaming_rollup_matches_batch(spark, sf_dir, tmp_path):
@@ -14,14 +14,14 @@ def test_streaming_rollup_matches_batch(spark, sf_dir, tmp_path):
     events.write.mode("overwrite").parquet(src_dir)
 
     stream = spark.readStream.schema(events.schema).parquet(src_dir)
-    q = start_rollup_stream(
-        stream,
-        ["event_type"],
-        "ts",
-        "value",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        query_name="t1m_test",
-        watermark="0 seconds",
+    q = (
+        streaming_rollup(stream, ["event_type"], "ts", "value", watermark="0 seconds")
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("t1m_test")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination(120)
 
